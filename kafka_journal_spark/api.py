@@ -352,7 +352,7 @@ class JournalClient:
         import datetime as dt
 
         if self.pointer(topic, key) is None and self._tail(topic, key).isEmpty():
-            if not self.store.metajournal().filter(
+            if not self.store.metajournal_of_keys([key]).filter(
                 (F.col("topic") == topic) & (F.col("id") == key)
             ).take(1):
                 return None
@@ -424,7 +424,7 @@ class JournalClient:
         # re-delivering seq numbers below a replicated delete must not
         # resurrect deleted events — see stitch_tail)
         prefix_wm = (
-            self.store.metajournal()
+            self.store.metajournal_of_keys(key_set)
             .filter((F.col("topic") == topic) & F.col("id").isin(key_set))
             .filter(F.col("delete_to").isNotNull())
         )
@@ -440,18 +440,22 @@ class JournalClient:
         (purged keys are absent, matching ``pointer() is None``).
 
         ``keys=None`` means every key of the topic; with a key list both
-        scans are pruned by ``isin`` pushdown.
+        scans are pruned by ``isin`` pushdown, and the head side plans from
+        the keys' bands only (``JournalStore.metajournal_of_keys``).
         """
         from kafka_journal_spark.operators.head import head_info_batch
 
         tail = self._unreplicated_tail().filter(F.col("topic") == topic)
-        stored = self.store.metajournal().filter(F.col("topic") == topic).select(
-            "topic", "id", F.col("seq_nr").alias("_stored")
-        )
+        meta = self.store.metajournal()
         if keys is not None:
             key_set = list(dict.fromkeys(keys))
             tail = tail.filter(F.col("id").isin(key_set))
-            stored = stored.filter(F.col("id").isin(key_set))
+            meta = self.store.metajournal_of_keys(key_set).filter(
+                F.col("id").isin(key_set)
+            )
+        stored = meta.filter(F.col("topic") == topic).select(
+            "topic", "id", F.col("seq_nr").alias("_stored")
+        )
         heads = head_info_batch(tail).select(
             "topic", "id", F.col("kind").alias("_k"),
             F.col("seq_nr").alias("_h_seq"), F.col("delete_to").alias("_h_dt"),

@@ -41,6 +41,7 @@ Scale notes:
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
@@ -91,6 +92,33 @@ def meta_segment(col: Column, segments: int) -> Column:
     (``SegmentNr.scala:146-150``): ``abs(id.toLowerCase.hashCode % segments)``
     — a reference deployment's head rows land in identical segments."""
     return F.abs(java_string_hash(F.lower(col)) % F.lit(segments))
+
+
+def java_hash_code(s: str) -> int:
+    """Java ``String.hashCode`` of a Python string, on the driver: the
+    exact JVM model, folding over UTF-16 CODE UNITS (a supplementary-plane
+    character contributes its two surrogate units) with int32 wrap-around.
+    The reference the column forms above are tested against."""
+    h = 0
+    units = s.encode("utf-16-be")
+    for i in range(0, len(units), 2):
+        h = (h * 31 + int.from_bytes(units[i : i + 2], "big")) % _M32
+    return h - _M32 if h >= _M31 else h
+
+
+def segment_of(key: str, segments: int) -> int | None:
+    """Driver-side twin of :func:`meta_segment` for one key, or None when
+    the key is not pure ASCII.
+
+    ``abs(key.toLowerCase.hashCode % segments)``: Java's ``%`` truncates
+    toward zero (``math.fmod``) where Python's floors.  Only ASCII keys get
+    an answer because only there are Python's ``str.lower`` and the JVM's
+    lower-casing provably the same function (Unicode case mappings differ
+    between the two, e.g. final sigma and dotted capital I); callers that
+    get None must fall back to a lookup that does not prune by segment."""
+    if not key.isascii():
+        return None
+    return abs(int(math.fmod(java_hash_code(key.lower()), segments)))
 
 
 def java_string_hash_sql(expr: str) -> str:

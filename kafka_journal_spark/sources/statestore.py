@@ -37,6 +37,12 @@ under a key filter — an unfiltered head table is O(#keys) and AQE picks the
 join strategy for it) and applies: incarnation match, delete_to watermark,
 seq_nr lower bound, plus the R5 defensive dedup (first offset per
 (id, seq_nr) wins) that also makes crash-replayed appends harmless.
+Single-key lookups (``read(key=...)``, ``pointer()``) plan the head side
+from the band files of the key's segment only (``metajournal_of_keys``),
+the parquet form of the reference's point read at (topic, segment, id):
+a plan over every band's files crosses Spark's 32-path parallel-listing
+threshold, so each lookup used to start a file-listing job with one task
+per band and then read every band's footer (see ``_read``).
 """
 
 from __future__ import annotations
@@ -55,6 +61,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kafka_journal_spark import SEGMENTS_DEFAULT
+from kafka_journal_spark.operators.replicate import segment_of
 
 
 @dataclass(frozen=True)
@@ -1072,11 +1081,26 @@ class JournalStore:
             return False
         return True
 
-    def _read(self, name: str, ddl: str) -> DataFrame:
+    def _read(
+        self, name: str, ddl: str, parts: set[str] | None = None
+    ) -> DataFrame:
         """Snapshot read: plan against the manifest's explicit file list
         (point-in-time-consistent — see the manifest block above), with
         ``basePath`` preserving the hive partition columns and their
         pruning.
+
+        ``parts`` narrows the plan to the manifest files whose partition
+        directory (first path segment, e.g. ``seg_band=17``) is in the set
+        — single-key head lookups plan from the key's one band.  This is
+        not just partition pruning done early: ``spark.read.parquet`` over
+        more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+        (32) paths lists them with a Spark job (one task per path) before
+        any filter can prune, so a lookup planned from all of a
+        metajournal's ~128–256 band files paid a listing job and footer
+        reads for every band; a one-band plan lists on the driver and
+        scans one band.  Only the files planned are registered.  Legacy
+        directory-listed stores ignore ``parts`` (the caller's partition
+        filter still prunes them).
 
         Two guarantees close the beyond-grace window (RETIRE_GRACE_S):
         the snapshot's file list is REGISTERED against this process's
@@ -1092,6 +1116,8 @@ class JournalStore:
         man = self._load_manifest(name)
         if man is not None:
             files, _ = man
+            if parts is not None:
+                files = [f for f in files if f.split(os.sep, 1)[0] in parts]
             if not files:
                 return self.spark.createDataFrame([], ddl)
             df = (
@@ -1119,15 +1145,17 @@ class JournalStore:
     def journal(self) -> DataFrame:
         return self._read("journal", JOURNAL_SCHEMA_DDL)
 
-    def _metajournal_phys(self) -> DataFrame:
+    def _metajournal_phys(self, bands: list[int] | None = None) -> DataFrame:
         """Head table WITH its physical band partition column and the
-        delta bookkeeping columns.  Base (folded) files do not carry
+        delta bookkeeping columns, planned from the given bands' files
+        only when ``bands`` is set.  Base (folded) files do not carry
         ``delta_seq``/``deleted`` physically — the explicit read schema
         surfaces them as NULL, which the resolver orders last / treats as
         live, so pre-delta stores read unchanged."""
         return self._read(
             "metajournal",
             META_SCHEMA_DDL + ", seg_band long, delta_seq long, deleted boolean",
+            None if bands is None else {f"seg_band={int(b)}" for b in bands},
         )
 
     def _resolved_meta(
@@ -1139,8 +1167,11 @@ class JournalStore:
         over the DIRTY bands only: clean bands (no un-folded deltas) have
         exactly one row per key by construction and bypass the window, so
         the merge-on-read tax is O(dirty-band rows), never O(#keys) — and
-        zero on a fully folded store.  Keeps ``seg_band``."""
-        df = self._metajournal_phys()
+        zero on a fully folded store.  Keeps ``seg_band``.  ``bands`` plans
+        from those bands' files only; the ``seg_band`` filter stays so the
+        scan still reports its PartitionFilters (and prunes legacy
+        directory-listed stores)."""
+        df = self._metajournal_phys(bands)
         if bands is not None:
             df = df.filter(F.col("seg_band").isin(bands))
         if segments is not None:
@@ -1234,6 +1265,19 @@ class JournalStore:
         return self._resolved_meta(
             bands=self._bands_of(segments), segments=segments
         ).drop("seg_band")
+
+    def metajournal_of_keys(self, keys: list[str]) -> DataFrame:
+        """Resolved head rows of the segments the given keys hash into
+        (``segment_of``, the driver-side twin of the replicator's
+        ``meta_segment``) — a superset of the keys' heads; callers filter
+        by (topic, id).  A point lookup thus plans from its key's one band
+        file set instead of the whole table (see ``_read``).  When any key
+        is not ASCII its segment cannot be computed on the driver with
+        certainty, and the whole table is read instead."""
+        segs = {segment_of(k, SEGMENTS_DEFAULT) for k in keys}
+        if None in segs:
+            return self.metajournal()
+        return self.metajournal_segments(sorted(segs))
 
     def metajournal_bands(self, segments: list[int]) -> DataFrame:
         """ALL resolved head rows of the bands the given segments hash
@@ -1639,7 +1683,8 @@ class JournalStore:
         if self.catalog and self._catalog_live:
             return self._read_catalog(topic, key, from_seq_nr, cfg)
         j = self.journal()
-        m = self.metajournal().select(
+        heads = self.metajournal() if key is None else self.metajournal_of_keys([key])
+        m = heads.select(
             "topic",
             "id",
             "record_id",
@@ -1672,7 +1717,7 @@ class JournalStore:
     def pointer(self, topic: str, key: str):
         """Last seq_nr for a key (R6), None if absent."""
         rows = (
-            self.metajournal()
+            self.metajournal_of_keys([key])
             .filter((F.col("topic") == topic) & (F.col("id") == key))
             .select("seq_nr")
             .collect()

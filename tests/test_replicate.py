@@ -6,8 +6,11 @@ action sequences with exactly-known journal/metajournal/pointer outcomes.
 from __future__ import annotations
 
 from conftest import append, delete, make_actions, mark, purge
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from kafka_journal_spark.operators.replicate import (
+    java_hash_code,
     materialize_journal,
     materialize_metajournal,
     materialize_pointers,
@@ -35,17 +38,14 @@ def test_meta_segment_matches_java_hashcode(spark):
     from pyspark.sql import functions as F
 
     from kafka_journal_spark import SEGMENTS_DEFAULT
-    from kafka_journal_spark.operators.replicate import java_string_hash, meta_segment
+    from kafka_journal_spark.operators.replicate import (
+        java_string_hash,
+        meta_segment,
+        segment_of,
+    )
 
-    def jhash(s):
-        # the exact JVM model: fold over UTF-16 CODE UNITS (surrogate pairs
-        # for supplementary-plane chars), not code points
-        h = 0
-        units = s.encode("utf-16-be")
-        for i in range(0, len(units), 2):
-            h = (h * 31 + int.from_bytes(units[i : i + 2], "big")) % 2**32
-        return h - 2**32 if h >= 2**31 else h
-
+    # java_hash_code is the exact JVM model: it folds over UTF-16 CODE
+    # UNITS (surrogate pairs for supplementary-plane chars), not code points
     samples = [
         "user-42",
         "User-ABC",
@@ -65,11 +65,16 @@ def test_meta_segment_matches_java_hashcode(spark):
     )
     got = {r.id: (r.h, r.seg) for r in df.collect()}
     # the classic JVM fixture: "polygenelubricants".hashCode() == Integer.MIN_VALUE
-    assert jhash("polygenelubricants") == -(2**31)
+    assert java_hash_code("polygenelubricants") == -(2**31)
     for s in samples:
-        assert got[s][0] == jhash(s), s
+        assert got[s][0] == java_hash_code(s), s
         # abs of the Java remainder == abs(h) % segments for positive divisors
-        assert got[s][1] == abs(jhash(s.lower())) % SEGMENTS_DEFAULT, s
+        assert got[s][1] == abs(java_hash_code(s.lower())) % SEGMENTS_DEFAULT, s
+        # the driver-side twin answers for ASCII keys only, and then agrees
+        if s.isascii():
+            assert segment_of(s, SEGMENTS_DEFAULT) == got[s][1], s
+        else:
+            assert segment_of(s, SEGMENTS_DEFAULT) is None, s
 
     # the r11 SQL-string twin (one parser call instead of ~30 py4j calls;
     # used by materialize_metajournal) must agree term-for-term
@@ -85,6 +90,30 @@ def test_meta_segment_matches_java_hashcode(spark):
     )
     got2 = {r.id: (r.h, r.seg) for r in df2.collect()}
     assert got2 == got
+
+
+@given(
+    st.lists(
+        st.text(alphabet=st.characters(max_codepoint=127)), min_size=1, max_size=40
+    )
+)
+@settings(max_examples=25, deadline=None)
+def test_segment_of_matches_meta_segment_on_ascii_ids(spark, ids):
+    """Band-pruned head lookups compute a key's segment on the driver; for
+    every ASCII id (control characters, mixed case, the empty id) it must
+    be the segment the replicator's JVM-side ``meta_segment`` wrote."""
+    from pyspark.sql import functions as F
+
+    from kafka_journal_spark import SEGMENTS_DEFAULT
+    from kafka_journal_spark.operators.replicate import meta_segment, segment_of
+
+    rows = (
+        spark.createDataFrame([(i, s) for i, s in enumerate(ids)], "i int, id string")
+        .select("i", meta_segment(F.col("id"), SEGMENTS_DEFAULT).alias("seg"))
+        .collect()
+    )
+    want = {i: segment_of(s, SEGMENTS_DEFAULT) for i, s in enumerate(ids)}
+    assert {r.i: r.seg for r in rows} == want
 
 
 def test_append_only(spark):
