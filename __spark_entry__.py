@@ -239,7 +239,7 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import os
         import tempfile
 
-        from kafka_journal_spark.streaming.head_state import head_info_stream_auto
+        from kafka_journal_spark.streaming.head_state import head_info_stream
 
         acts = journal_actions(spark, sf_dir)
         d = tempfile.mkdtemp(prefix="kjs-headstream-")
@@ -255,7 +255,7 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stream = spark.readStream.schema(ddl).parquet(f"{d}/src")
         name = "heads_" + os.path.basename(d).replace("-", "_")
         q = (
-            head_info_stream_auto(stream)
+            head_info_stream(stream)
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("update")

@@ -17,10 +17,14 @@ no Python in the hot path.
 
 For batches containing a **binary** payload the reference switches the whole
 record value to a versioned scodec envelope (``KafkaWrite.scala:88-98``:
-any binary event => ``eventsToBytes`` with ``PayloadType.Binary``); that
-format is implemented here bit-for-bit by ``encode_events_binary`` /
-``decode_events_binary`` (Arrow-batched pandas UDFs — byte packing is the
-one genuinely non-relational step, everything around it stays JVM-side):
+any binary event => ``eventsToBytes`` with ``PayloadType.Binary``).  That
+format is implemented here bit-for-bit, with one implementation per
+direction: ``events_bin_encode_expr`` packs it with Spark expressions
+(JVM-side, the replicator's write path) and an Arrow-batched pandas UDF
+unpacks it (the read path).  The pure-Python ``pack_events_binary`` /
+``unpack_events_binary`` kernels are the executable spec; the decoder runs
+``unpack_events_binary`` itself, so a blob it rejects decodes to NULL and
+never fails the task.  The layout:
 
 - ``Events.scala:14-36``: ``[version:byte=1][events][metadata]`` with decode
   fallback to version-0 (``0x00`` prefix) and the legacy headerless layout
@@ -45,8 +49,6 @@ unchanged.
 """
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd  # noqa: F401 — needed to resolve pandas UDF type hints
 from pyspark.sql import Column, DataFrame
@@ -277,7 +279,9 @@ def events_payload_json(df: DataFrame) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Binary envelope (Events.scala:14-36 versioned scodec codec)
+# Binary envelope (Events.scala:14-36 versioned scodec codec): the Python
+# kernels are the spec, then the one shipping pair — the expression encoder
+# and the Arrow-batched decoder over the kernel
 # ---------------------------------------------------------------------------
 
 #: decoded shape of a binary events blob
@@ -303,7 +307,7 @@ _TYPE_OF_DISC = {1: "binary", 2: "json", 3: "text"}
 
 def pack_events_binary(events: list[dict], metadata_json: str = "{}") -> bytes:
     """Pure-Python packer for the version-1 envelope (the golden-testable
-    kernel the pandas UDFs batch over).
+    spec :func:`events_bin_encode_expr` is byte-pinned to).
 
     ``events``: dicts with ``seqNr`` (int), ``tags`` (list[str]),
     ``payloadType`` (binary|json|text|None), ``payload`` (bytes|str|None).
@@ -350,7 +354,7 @@ def unpack_events_binary(buf: bytes | None) -> dict | None:
     if n < 0:
         # scodec's listOfN(int32, ...) fails on a negative count; treating
         # it as "no events" would fabricate an empty-but-valid row from a
-        # corrupt blob (and diverge from the expression twin's count bound)
+        # corrupt blob
         raise ValueError(f"negative event count {n}")
     events = []
     for _ in range(n):
@@ -400,34 +404,23 @@ def unpack_events_binary(buf: bytes | None) -> dict | None:
     return {"events": events, "metadata": metadata}
 
 
-# -- JVM-expression form of the envelope codec -------------------------------
+# -- The shipping pair: expression encoder, Arrow-batched decoder ------------
 #
-# The byte layout above is fixed-width-prefixed everywhere (scodec's
-# ``listOfN(int32, variableSizeBytes(int32, ...))``), which makes it
-# expressible with Spark's binary built-ins: big-endian integers are
-# ``to_binary(lpad(hex(x)))`` on the way out and ``conv(hex(substr(buf)))``
-# on the way back, repetition is ``transform``/``aggregate`` over the
-# size-prefix walk — no Python worker anywhere.
-#
-# MEASURED (sf0.1, local[16], steady-state): the two directions land on
-# opposite sides of the Arrow kernels.
-#   encode: jvm 0.69 s vs arrow 0.95 s warm (1.2 vs 3.2 cold) — a single
-#     forward pass; beats struct→Arrow→Python→pack→Arrow→JVM round-trip.
-#   decode: jvm 31.8 s vs arrow 1.4 s — Catalyst has no let-binding, so
-#     the size-prefix offset walk re-inlines into every per-event
-#     reference and interpreted HOF evaluation re-walks the whole tree
-#     per row.  A 23x regression; expressible != efficient.
-# Hence the default is HYBRID: expression encoder (the replicator's write
-# path), Arrow decoder (the read path).  Both alternatives stay selectable
-# (``KJ_SPARK_BIN_CODEC=arrow|jvm|hybrid``) and byte-for-byte pinned to
-# the kernels above by tests/test_bin_codec_jvm.py, so the negative
-# result stays measured, not assumed.
-
-#: envelope implementation: "hybrid" (default: expression encoder + Arrow
-#: decoder), "arrow" (both pandas-UDF kernels), "jvm" (both expressions),
-#: "mapinarrow" (expression encoder + vectorized RecordBatch decoder —
-#: measured slower on 1-event blobs, see _attach_blob_bin_arrow)
-BIN_CODEC_IMPL = os.environ.get("KJ_SPARK_BIN_CODEC", "hybrid")
+# The layout is fixed-width-prefixed everywhere (scodec's ``listOfN(int32,
+# variableSizeBytes(int32, ...))``), so the encoder is Spark's binary
+# built-ins — big-endian integers are ``to_binary(lpad(hex(x)))``,
+# repetition is ``transform``/``aggregate`` — with no Python worker.  The
+# decoder is a pandas UDF over :func:`unpack_events_binary`.  Alternatives
+# measured and deleted (the last tree holding them is commit 39ec4b0):
+#   - Arrow pandas-UDF encoder: 0.95 s vs 0.69 s warm, 3.2 vs 1.2 s cold
+#     (sf0.1);
+#   - pure-expression decoder: 31.8 s vs 1.4 s (sf0.1, 23x) — Catalyst has
+#     no let-binding, so the size-prefix walk re-inlines into every
+#     per-event reference;
+#   - batch-vectorized numpy decoder: 33.0 s behind the same UDF and
+#     40.0 s as a mapInArrow pass, vs 30.5 s (sf10 roundtrip, 9.9M 1-event
+#     actions) — journal blobs are tiny, and mapInArrow ferries every
+#     downstream column through the Python worker.
 
 _B_EMPTY = bytes.fromhex("")
 
@@ -449,8 +442,8 @@ def events_bin_encode_expr(events: Column, metadata: Column) -> Column:
 
     ``events``: ``array<struct<seqNr,tags,payloadType,payload>>``;
     ``metadata``: the PayloadMetadata JSON string (null/'' => ``{}``).
-    NULL events / NULL-seqNr placeholders are dropped and an empty batch
-    encodes as NULL, mirroring the Arrow kernel's masking.
+    NULL events / NULL-seqNr placeholders (non-append rows) are dropped and
+    an empty batch encodes as NULL.
     """
     evs = F.filter(
         events, lambda e: e.isNotNull() & e["seqNr"].isNotNull()
@@ -510,422 +503,11 @@ def events_bin_encode_expr(events: Column, metadata: Column) -> Column:
     return F.when(F.size(evs) > 0, envelope)
 
 
-def events_bin_decode_expr(value: Column) -> Column:
-    """Expression twin of :func:`unpack_events_binary`.
-
-    Returns ``struct<events, metadata>`` (:data:`EVENTS_BIN_SCHEMA`) or
-    NULL for blobs the Python kernel would reject (too short, counts or
-    offsets that walk off the buffer, malformed UTF-8 in tags/metadata).
-    Every partial function below is guarded — ``sequence`` bounds,
-    ``decode``'s MALFORMED_CHARACTER_CODING, ANSI casts — because a
-    corrupt blob must yield a NULL row, never a failed task.
-    """
-    buf = value
-    blen = F.octet_length(buf)
-
-    def u(pos: Column, nbytes: int) -> Column:
-        # unsigned big-endian read at 1-based byte offset, as bigint;
-        # NULL when the slice runs off the buffer (hex('') => conv NULL)
-        w = F.conv(F.hex(buf.substr(pos.cast("int"), F.lit(nbytes))), 16, 10)
-        return F.when(pos + nbytes - 1 <= blen, w.cast("long"))
-
-    def i64(pos: Column) -> Column:
-        # signed: two's-complement fold of the unsigned decimal(20) read
-        raw = F.conv(F.hex(buf.substr(pos.cast("int"), F.lit(8))), 16, 10).cast(
-            "decimal(20,0)"
-        )
-        signed = F.when(
-            raw > F.lit("9223372036854775807").cast("decimal(20,0)"),
-            raw - F.lit("18446744073709551616").cast("decimal(21,0)"),
-        ).otherwise(raw)
-        return F.when(pos + 7 <= blen, signed.cast("long"))
-
-    n_raw = u(F.lit(1).cast("long") + 1, 4)
-    # each event costs >= 21 bytes (4 size + 8 seq + 4 tsize + 1 disc + 4 psize):
-    # a count beyond that bound is corrupt, and bounding it keeps the offset
-    # walk's sequence() finite on garbage
-    n = F.when((n_raw >= 0) & (n_raw <= (blen - 5) / 21), n_raw.cast("int"))
-    walk = F.aggregate(
-        F.sequence(F.lit(1), n),
-        F.array(F.lit(6).cast("long")),
-        lambda acc, _i: F.concat(
-            acc,
-            F.array(
-                F.element_at(acc, -1) + 4 + u(F.element_at(acc, -1), 4)
-            ),
-        ),
-    )
-    # offs[i] = 1-based position of event i's size prefix; offs[n] = end
-    offs = F.when(n == 0, F.array(F.lit(6).cast("long"))).otherwise(walk)
-    offs_ok = (
-        n.isNotNull()
-        & ~F.exists(offs, lambda o: o.isNull())
-        & (F.element_at(offs, -1) <= blen + 1)
-    )
-
-    def parse_event(i: Column) -> Column:
-        p = F.element_at(offs, i)
-        tsize_raw = u(p + 12, 4)
-        # a tags block that claims bytes past the buffer is what makes the
-        # Python kernel raise (=> None); surface it as a NULL event element
-        tsize = F.when((tsize_raw >= 0) & (p + 16 + tsize_raw <= blen + 1), tsize_raw)
-        ts = p + 16  # 1-based start of the tags block
-        tag_walk = F.aggregate(
-            # every tag costs >= 4 bytes of prefix => <= tsize/4 iterations;
-            # the floor of 1 keeps sequence() legal for tiny/corrupt blocks
-            # (the `last < end` guard makes extra iterations no-ops)
-            F.sequence(F.lit(1), F.greatest((tsize / 4).cast("int"), F.lit(1))),
-            F.array(ts),
-            lambda acc, _j: F.concat(
-                acc,
-                F.array(
-                    F.when(
-                        F.element_at(acc, -1) < ts + tsize,
-                        F.element_at(acc, -1) + 4 + u(F.element_at(acc, -1), 4),
-                    ).otherwise(F.element_at(acc, -1))
-                ),
-            ),
-        )
-        tag_offs = F.when(
-            tsize == 0, F.array().cast("array<bigint>")
-        ).otherwise(F.filter(tag_walk, lambda o: o < ts + tsize))
-        tags = F.transform(
-            tag_offs,
-            # try_validate_utf8(binary) -> decoded string, NULL on malformed
-            # bytes (the Python kernel raises there; tags_ok nulls the row)
-            lambda o: F.try_validate_utf8(
-                buf.substr(
-                    (o + 4).cast("int"),
-                    F.greatest(F.least(u(o, 4), blen), F.lit(0).cast("long")).cast(
-                        "int"
-                    ),
-                )
-            ),
-        )
-        disc = u(ts + tsize, 1)
-        psize = F.greatest(F.least(u(ts + tsize + 1, 4), blen), F.lit(0).cast("long"))
-        payload = buf.substr((ts + tsize + 5).cast("int"), psize.cast("int"))
-        ptype = (
-            F.when(disc == 1, "binary").when(disc == 2, "json").when(disc == 3, "text")
-        )
-        return F.when(
-            tsize.isNotNull(),
-            F.struct(
-                i64(p + 4).alias("seqNr"),
-                tags.alias("tags"),
-                ptype.alias("payloadType"),
-                F.when(ptype.isNotNull(), payload).alias("payload"),
-            ),
-        )
-
-    events = F.when(
-        n == 0, F.array().cast(EVENT_BIN_ARRAY_DDL)
-    ).otherwise(F.transform(F.sequence(F.lit(1), n), parse_event))
-    events_ok = ~F.coalesce(
-        F.exists(
-            events,
-            lambda e: e.isNull() | F.exists(e["tags"], lambda t: t.isNull()),
-        ),
-        F.lit(True),
-    )
-    last = F.element_at(offs, -1)
-    md_str = F.try_validate_utf8(
-        buf.substr(last.cast("int"), F.greatest(blen - last + 1, F.lit(0).cast("long")).cast("int"))
-    )
-    version = u(F.lit(1).cast("long"), 1)
-    md_applies = (version == 1) & (last <= blen)
-    md_ok = ~md_applies | md_str.isNotNull()
-    metadata = F.when(md_applies, F.nullif(md_str, F.lit("")))
-    result = F.struct(
-        events.alias("events"),
-        F.coalesce(metadata, F.lit("{}")).alias("metadata"),
-    )
-    return F.when(
-        buf.isNotNull() & (blen >= 5) & offs_ok & events_ok & md_ok, result
-    )
-
-
-#: DDL of the decoded events array (cast target for the empty-batch literal)
-EVENT_BIN_ARRAY_DDL = (
-    "array<struct<seqNr:bigint,tags:array<string>,payloadType:string,"
-    "payload:binary>>"
-)
-
-
-def _encode_events_bin_udf():
-    """Arrow-batched encoder: array<struct> events column -> envelope bytes."""
-    import pandas as pd
-
-    @F.pandas_udf(T.BinaryType())
-    def enc(events: pd.Series, metadata: pd.Series) -> pd.Series:
-        out = []
-        for evs, md in zip(events, metadata):
-            # non-append rows surface as None/placeholder structs — skip them
-            evs = [
-                e
-                for e in (list(evs) if evs is not None else [])
-                if e is not None and e.get("seqNr") is not None
-            ]
-            out.append(pack_events_binary(evs, md) if evs else None)
-        return pd.Series(out)
-
-    return enc
-
-
-def decode_events_binary_batch(vals):
-    """Batch-vectorized twin of :func:`unpack_events_binary` over a whole
-    Arrow batch: all blobs are concatenated into ONE numpy byte buffer and
-    the size-prefix walk runs LEVEL-SYNCHRONOUS — one vectorized gather per
-    field per event ordinal across every blob at once — instead of a Python
-    ``struct.unpack_from`` loop per row.  Iteration count is max(events/
-    blob) x max(tags/event), both tiny on journal data, so the per-row
-    interpreter work drops to the unavoidable parts (utf-8 validation of
-    tags/metadata, payload slicing).
-
-    Output is built as pyarrow arrays DIRECTLY from the flat field vectors
-    (ListArray/StructArray over offsets), never as per-row Python dicts —
-    the per-row form made pandas->Arrow re-walk 10M nested objects on the
-    way out, which dominated the old decode (sf10: 9.9M actions, roundtrip
-    26.6 s -> see ``_decode_events_bin_udf``).
-
-    Semantics are PINNED to the per-row kernel (``tests/test_bin_codec_jvm``
-    + a 1.2k-blob mutation sweep): a blob the kernel rejects — short buffer,
-    negative count/size, any read off the buffer end, malformed UTF-8 in
-    tags or metadata — yields null events AND null metadata; lax walks the
-    kernel tolerates (lying sizes whose reads stay in-bounds, clipped
-    tag/payload slices) decode to the identical rows.
-
-    Returns ``(events: pa.ListArray<struct>, metadata: pa.StringArray)``.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    ev_type = pa.struct(
-        [
-            ("seqNr", pa.int64()),
-            ("tags", pa.list_(pa.string())),
-            ("payloadType", pa.string()),
-            ("payload", pa.binary()),
-        ]
-    )
-    N = len(vals)
-    if N == 0:
-        return pa.array([], pa.list_(ev_type)), pa.array([], pa.string())
-    lens = np.empty(N, np.int64)
-    bufs = []
-    for i, v in enumerate(vals):
-        if v is None:
-            lens[i] = -1
-            bufs.append(b"")
-        else:
-            lens[i] = len(v)
-            bufs.append(bytes(v))
-    joined = b"".join(bufs)
-    # 8 slack zero bytes: lanes masked out of a read still gather at offset
-    # 0..w-1 (harmlessly, their mask discards the value) — the pad keeps
-    # those gathers in-bounds when every blob in the batch is tiny/None
-    big = np.frombuffer(joined + b"\x00" * 8, np.uint8)
-    starts = np.zeros(N, np.int64)
-    np.cumsum(np.maximum(lens, 0)[:-1], out=starts[1:])
-    ends = starts + np.maximum(lens, 0)
-    ok = lens >= 5
-
-    def rd(off, w, mask):
-        # big-endian unsigned read of width w at absolute offsets `off`,
-        # valid only where the slice stays inside its own blob (the
-        # kernel's unpack_from bound); masked lanes read offset 0 harmlessly
-        m = mask & (off >= starts) & (off + w <= ends)
-        o = np.where(m, off, 0)
-        v = np.zeros(N, np.uint64)
-        for b in range(w):
-            v = (v << np.uint64(8)) | big[o + b].astype(np.uint64)
-        return v, m
-
-    def s32(v):
-        x = v.astype(np.int64)
-        return np.where(x >= (1 << 31), x - (1 << 32), x)
-
-    version = big[np.where(ok, starts, 0)]
-    n_u, ok = rd(starts + 1, 4, ok)
-    n = s32(n_u)
-    ok &= n >= 0  # kernel: negative count raises
-    n = np.where(ok, n, 0)
-    cur = starts + 5
-
-    # per-event collectors, event-ordinal-major; re-sorted blob-major below
-    e_lane, e_k, e_seq, e_disc, e_ps, e_pl = [], [], [], [], [], []
-    t_lane, t_k, t_j, t_s, t_l = [], [], [], [], []
-    k = 0
-    active = ok & (k < n)
-    while active.any():
-        size_u, a = rd(cur, 4, active)
-        size = s32(size_u)
-        a &= size >= 0
-        end_ev = cur + 4 + size  # the walk is size-driven, like the kernel
-        seq_u, a = rd(cur + 4, 8, a)
-        seq = seq_u.view(np.int64)
-        tsz_u, a = rd(cur + 12, 4, a)
-        tsz = s32(tsz_u)
-        a &= tsz >= 0
-        tpos = cur + 16
-        tend = tpos + np.where(a, tsz, 0)
-        j = 0
-        twalk = a & (tpos < tend)
-        while twalk.any():
-            tl_u, tok = rd(tpos, 4, twalk)
-            tl = s32(tl_u)
-            tok &= tl >= 0
-            a = np.where(twalk & ~tok, False, a)
-            idx = np.nonzero(tok)[0]
-            if idx.size:
-                t_lane.append(idx)
-                t_k.append(np.full(idx.size, k))
-                t_j.append(np.full(idx.size, j))
-                ts = tpos[idx] + 4
-                t_s.append(ts)
-                # clipped exactly like the kernel's buf[pos:pos+tl] slice
-                t_l.append(np.maximum(np.minimum(tl[idx], ends[idx] - ts), 0))
-            tpos = np.where(tok, tpos + 4 + tl, tpos)
-            j += 1
-            twalk = a & (tpos < tend)
-        # disc/psize read at the ACTUAL post-tag-walk position (which may
-        # overshoot tend on lying tag lengths — kernel does the same)
-        disc_u, a = rd(tpos, 1, a)
-        ps_u, a = rd(tpos + 1, 4, a)
-        ps = s32(ps_u)
-        a &= ps >= 0
-        pstart = tpos + 5
-        idx = np.nonzero(a)[0]
-        if idx.size:
-            e_lane.append(idx)
-            e_k.append(np.full(idx.size, k))
-            e_seq.append(seq[idx])
-            e_disc.append(disc_u[idx].astype(np.int64))
-            e_ps.append(pstart[idx])
-            e_pl.append(np.maximum(np.minimum(ps[idx], ends[idx] - pstart[idx]), 0))
-        # a lane active this ordinal that failed any read → dead blob
-        ok = np.where(active & ~a, False, ok)
-        cur = np.where(a, end_ev, cur)
-        k += 1
-        active = ok & (k < n)
-
-    md = [None] * N
-    for i in np.nonzero(ok)[0]:
-        i = int(i)
-        if version[i] == 1 and cur[i] < ends[i]:
-            try:
-                md[i] = joined[cur[i] : ends[i]].decode("utf-8") or "{}"
-            except UnicodeDecodeError:
-                ok[i] = False  # kernel raises -> whole blob null
-        else:
-            md[i] = "{}"
-
-    if t_lane:
-        tl_lane = np.concatenate(t_lane)
-        tl_k = np.concatenate(t_k)
-        tl_j = np.concatenate(t_j)
-        tl_s = np.concatenate(t_s)
-        tl_len = np.concatenate(t_l)
-        tag_strs: list = [None] * tl_lane.size
-        for i in range(tl_lane.size):
-            try:
-                tag_strs[i] = joined[tl_s[i] : tl_s[i] + tl_len[i]].decode("utf-8")
-            except UnicodeDecodeError:
-                ok[tl_lane[i]] = False
-    else:
-        tl_lane = np.zeros(0, np.int64)
-        tl_k = tl_j = tl_lane
-        tag_strs = []
-
-    if e_lane:
-        ev_lane = np.concatenate(e_lane)
-        ev_k = np.concatenate(e_k)
-        ev_seq = np.concatenate(e_seq)
-        ev_disc = np.concatenate(e_disc)
-        ev_ps = np.concatenate(e_ps)
-        ev_pl = np.concatenate(e_pl)
-        keep = ok[ev_lane]
-        ev_lane, ev_k, ev_seq, ev_disc, ev_ps, ev_pl = (
-            x[keep] for x in (ev_lane, ev_k, ev_seq, ev_disc, ev_ps, ev_pl)
-        )
-        order = np.lexsort((ev_k, ev_lane))
-        ev_lane, ev_k, ev_seq, ev_disc, ev_ps, ev_pl = (
-            x[order] for x in (ev_lane, ev_k, ev_seq, ev_disc, ev_ps, ev_pl)
-        )
-    else:
-        ev_lane = ev_k = ev_seq = ev_disc = ev_ps = ev_pl = np.zeros(0, np.int64)
-
-    if tl_lane.size:
-        keep = ok[tl_lane]
-        tag_strs = [t for t, kp in zip(tag_strs, keep) if kp]
-        tl_lane, tl_k, tl_j = tl_lane[keep], tl_k[keep], tl_j[keep]
-        torder = np.lexsort((tl_j, tl_k, tl_lane))
-        tag_strs = [tag_strs[i] for i in torder]
-        tl_lane, tl_k = tl_lane[torder], tl_k[torder]
-
-    n_ev = ev_lane.size
-    tag_counts = np.zeros(n_ev, np.int64)
-    if n_ev and tl_lane.size:
-        # both relations are (lane, k)-sorted: locate each tag's event row
-        mk = int(max(ev_k.max(), tl_k.max())) + 1
-        pos = np.searchsorted(ev_lane * mk + ev_k, tl_lane * mk + tl_k)
-        np.add.at(tag_counts, pos, 1)
-    tag_offs = np.zeros(n_ev + 1, np.int32)
-    np.cumsum(tag_counts, out=tag_offs[1:])
-
-    ptypes = [_DISC_TABLE[d] for d in ev_disc]
-    payloads = [
-        joined[ev_ps[i] : ev_ps[i] + ev_pl[i]] if ptypes[i] is not None else None
-        for i in range(n_ev)
-    ]
-    ev_struct = pa.StructArray.from_arrays(
-        [
-            pa.array(ev_seq, pa.int64()),
-            pa.ListArray.from_arrays(
-                pa.array(tag_offs, pa.int32()), pa.array(tag_strs, pa.string())
-            ),
-            pa.array(ptypes, pa.string()),
-            pa.array(payloads, pa.binary()),
-        ],
-        names=["seqNr", "tags", "payloadType", "payload"],
-    )
-    row_counts = np.zeros(N, np.int64)
-    if n_ev:
-        np.add.at(row_counts, ev_lane, 1)
-    row_counts[~ok] = 0
-    row_offs = np.zeros(N + 1, np.int32)
-    np.cumsum(row_counts, out=row_offs[1:])
-    validity = pa.array(ok.tolist(), pa.bool_()).buffers()[1]
-    events_arr = pa.Array.from_buffers(
-        pa.list_(ev_struct.type),
-        N,
-        [validity, pa.py_buffer(row_offs.tobytes())],
-        children=[ev_struct],
-    )
-    md_arr = pa.array([m if o else None for m, o in zip(md, ok)], pa.string())
-    return events_arr, md_arr
-
-
-#: uint8 discriminator -> payloadType lookup (vectorized decode path)
-_DISC_TABLE = [None] * 256
-for _d, _t in _TYPE_OF_DISC.items():
-    _DISC_TABLE[_d] = _t
-
-
 def _decode_events_bin_udf():
     """Arrow-batched decoder: envelope bytes -> struct<events, metadata>.
 
-    Per-row kernel, MEASURED AS THE WINNER (round 9, sf10, 9.9M 1-event
-    actions, interleaved min-of-3 on the full roundtrip): per-row 30.5 s
-    vs 33.0 s for :func:`decode_events_binary_batch` behind the same UDF
-    boundary and 40.0 s for the mapInArrow RecordBatch form — journal
-    events are tiny (1 event, ~1 tag), so a blob costs ~6 struct reads
-    and the vectorized walk's numpy machinery + to_pylist buys back
-    exactly what it saves, while nested pandas_udf returns can't skip the
-    serializer's per-row converter (ArrowDtype-backed frames crash it on
-    pd.NA).  Both alternatives stay selectable and parity-pinned
-    (``KJ_SPARK_BIN_CODEC=mapinarrow``, ``tests/test_bin_codec_batch.py``)
-    so the negative result stays measured, not assumed."""
+    One :func:`unpack_events_binary` call per row: a blob the kernel
+    rejects decodes to NULL events and metadata, never a failed task."""
     import pandas as pd
 
     @F.pandas_udf(EVENTS_BIN_SCHEMA)
@@ -1027,17 +609,7 @@ def encode_actions_to_kafka(actions: DataFrame) -> DataFrame:
                 )
             )
         meta_col = F.coalesce(*meta_parts, F.lit("{}")) if meta_parts else F.lit("{}")
-        if BIN_CODEC_IMPL == "arrow":
-            enc = _encode_events_bin_udf()
-            bin_value = enc(
-                # mask so the Arrow batch only packs genuine binary appends
-                F.when(is_bin, events_struct_binary(actions)),
-                meta_col,
-            )
-        else:  # hybrid and jvm both use the expression encoder
-            bin_value = events_bin_encode_expr(
-                events_struct_binary(actions), meta_col
-            )
+        bin_value = events_bin_encode_expr(events_struct_binary(actions), meta_col)
         value = F.when(is_bin, bin_value).when(
             is_append, events_payload_json(actions).cast("binary")
         )
@@ -1070,61 +642,6 @@ def encode_actions_to_kafka(actions: DataFrame) -> DataFrame:
     return out
 
 
-def _attach_blob_bin_arrow(df: DataFrame, is_bin: Column) -> DataFrame:
-    """Add ``_blob_bin`` (struct<events, metadata>) via ONE ``mapInArrow``
-    pass over :func:`decode_events_binary_batch` — pyarrow RecordBatches
-    in and out, no pandas and no per-row Python objects anywhere.
-
-    MEASURED AND NOT DEFAULT (round 9): the Python stage itself becomes
-    free (identity-mapInArrow vs decode-mapInArrow differ by ~0 at sf10),
-    but unlike a single-column pandas UDF this pass ships EVERY downstream
-    column through the Python worker and back (headers, parsed header
-    struct, blob struct), and that ferry cost loses the end-to-end race —
-    interleaved min-of-3 on the sf10 roundtrip: 40.0 s vs 30.5 s for the
-    per-row pandas UDF.  Kept selectable (``KJ_SPARK_BIN_CODEC=
-    mapinarrow``) because the trade flips when events-per-blob grows: the
-    per-row kernel is O(events) interpreter work while this path's parse
-    is vectorized and its ferry cost is O(row width), independent of blob
-    complexity.
-
-    Semantics match ``F.when(is_bin, <decode>)`` exactly: non-binary rows
-    get a NULL struct; binary rows the kernel rejects get struct{null,
-    null} (never a dropped or failed row).  ``value`` and ``_hdr_raw``
-    are pruned going in — the Python worker only receives columns the
-    downstream select needs plus the blob itself.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    df = df.withColumn("_is_bin", F.coalesce(is_bin, F.lit(False)))
-    df = df.select(*[c for c in df.columns if c != "_hdr_raw"])
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name not in ("value", "_is_bin")]
-        + [T.StructField("_blob_bin", EVENTS_BIN_SCHEMA)]
-    )
-    arrow_out = to_arrow_schema(out_schema)
-    pass_names = [f.name for f in out_schema.fields if f.name != "_blob_bin"]
-    blob_type = arrow_out.field("_blob_bin").type
-
-    def fn(batches):
-        for b in batches:
-            cols = {n: b.column(i) for i, n in enumerate(b.schema.names)}
-            m = pc.fill_null(cols["_is_bin"], False)
-            masked = pc.if_else(m, cols["value"], pa.scalar(None, cols["value"].type))
-            ev, md = decode_events_binary_batch(masked.to_pylist())
-            blob = pa.StructArray.from_arrays(
-                [ev, md],
-                names=["events", "metadata"],
-                mask=pc.invert(m),
-            ).cast(blob_type)
-            yield pa.RecordBatch.from_arrays(
-                [cols[n] for n in pass_names] + [blob], schema=arrow_out
-            )
-
-    return df.mapInArrow(fn, out_schema)
-
-
 def decode_kafka_to_actions(kafka_df: DataFrame) -> DataFrame:
     """Kafka-record-shaped DataFrame -> actions (E2/E3 reverse).
 
@@ -1145,9 +662,9 @@ def decode_kafka_to_actions(kafka_df: DataFrame) -> DataFrame:
     # The header parse itself is from_json over the one-of schema — ONE
     # Jackson parse into a struct, fields then read as struct loads.  The
     # Spark 4 VariantType spelling (parse_json once + variant_get per
-    # field) was MEASURED AND REJECTED in r12 (tools/
-    # probe_variant_header.py, 99k headers, checkpointed input, row-for-row
-    # equal): 0.68 s vs 0.35 s median — 1.96x slower; the variant binary
+    # field) was MEASURED AND REJECTED in r12 (probe script last present at
+    # commit 39ec4b0, 99k headers, checkpointed input, row-for-row equal):
+    # 0.68 s vs 0.35 s median — 1.96x slower; the variant binary
     # encode costs more than it saves on a 13-field read-everything
     # projection.  from_json stays.
     hdr = F.get(F.filter(F.col("headers"), lambda h: h["key"] == KAFKA_HEADER_KEY), 0)[
@@ -1184,14 +701,9 @@ def decode_kafka_to_actions(kafka_df: DataFrame) -> DataFrame:
         # column) decode to the same all-NULL action either way: the Arrow
         # kernel's corrupt-blob tolerance returns NULL for a JSON byte
         # stream (version byte mismatch), which is exactly this literal —
-        # pinned by test_bin_codec_batch's json-only equivalence test.
+        # pinned by test_codecs' json-only equivalence test.
         df = df.withColumn("_blob_bin", F.lit(None).cast(EVENTS_BIN_SCHEMA))
-    elif BIN_CODEC_IMPL == "jvm":
-        decoded = events_bin_decode_expr(F.col("value"))
-        df = df.withColumn("_blob_bin", F.when(is_bin, decoded))
-    elif BIN_CODEC_IMPL == "mapinarrow":
-        df = _attach_blob_bin_arrow(df, is_bin)
-    else:  # hybrid and arrow both use the per-row Arrow-batched decoder
+    else:
         dec = _decode_events_bin_udf()
         df = df.withColumn(
             "_blob_bin", F.when(is_bin, dec(F.when(is_bin, F.col("value"))))

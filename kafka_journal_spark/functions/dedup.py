@@ -662,14 +662,14 @@ def _cc_star(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int, bool]:
     check runs at most once per call on equal-count inputs).  Returns
     (labels(node, label), rounds, converged).
 
-    The two-eager-checkpoints-per-round shape is MEASURED-BEST (r12,
-    tools/probe_star_fused.py): fusing the large-star checkpoint away —
-    one checkpoint job per round, the small-star plan containing the
-    whole large+small composition — was 1.03x SLOWER on a 1M-node chain
-    (21 rounds, the per-job-overhead-maximal shape) and 1.01x on the sf10
-    LSH near-dup graph (75k edges, 2 rounds): ``ls`` feeds two consumers,
-    so the fused plan recomputes the large-star subtree and buys back
-    exactly the saved job.  Labels exceptAll-equal both ways in both A/Bs.
+    The two-eager-checkpoints-per-round shape is MEASURED-BEST (r12, probe
+    script last present at commit 39ec4b0): fusing the large-star checkpoint
+    away — one checkpoint job per round, the small-star plan containing the
+    whole large+small composition — was 1.03x SLOWER on a 1M-node chain (21
+    rounds, the per-job-overhead-maximal shape) and 1.01x on the sf10 LSH
+    near-dup graph (75k edges, 2 rounds): ``ls`` feeds two consumers, so the
+    fused plan recomputes the large-star subtree and buys back exactly the
+    saved job.  Labels exceptAll-equal both ways in both A/Bs.
     """
     # canonical undirected form: (a, b) with a > b
     edges_c, prev = _checkpoint_with_checksum(

@@ -17,7 +17,7 @@ delete_to), never payloads.  State TTL / eviction maps to the reference's
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -70,107 +70,6 @@ def _fold_group(
                 "delete_to": h.delete_to,
             }
         ]
-    )
-
-
-def tws_available() -> bool:
-    """True when ``transformWithStateInPandas`` can actually run here: its
-    Python worker speaks a protobuf protocol to the JVM state server, so
-    ``google.protobuf`` must import.  Detection, not configuration — the
-    auto selector below makes the Spark-4-native path the default wherever
-    the dependency exists."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def head_info_stream_auto(
-    action_stream: DataFrame, prefer_tws: bool | None = None
-) -> DataFrame:
-    """The default head-state entry point: selects the Spark-4-native
-    ``transformWithStateInPandas`` fold when its runtime dependency is
-    present, else the ``applyInPandasWithState`` fold — both run the same
-    pure ``head_info_step`` and produce identical state/output (pinned by
-    the paired tests in ``test_head_state_and_plans.py``; the TWS side is
-    env-gated on protobuf).  ``prefer_tws`` forces a branch for tests."""
-    use_tws = tws_available() if prefer_tws is None else prefer_tws
-    if use_tws:
-        return head_info_stream_tws(action_stream)
-    return head_info_stream(action_stream)
-
-
-def head_info_stream_tws(action_stream: DataFrame) -> DataFrame:
-    """The same HeadInfo stream on Spark 4's ``transformWithStateInPandas``
-    — the successor API to applyInPandasWithState, with typed value state
-    and native TTL (the reference's 10-min HeadCache entry expiry maps to
-    ``TTLConfig`` directly if eviction is wanted).
-
-    Requires ``google.protobuf`` at runtime (the state-server protocol);
-    absent in this test container, so the covering test is skipif-gated —
-    ``head_info_stream`` (applyInPandasWithState) is the tested default."""
-    import pandas as pd  # noqa: F811
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class HeadInfoProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("head", HEAD_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                kind, offset, seq_nr, delete_to = self._state.get()
-                h = HeadInfo(
-                    kind=kind,
-                    offset=None if offset is not None and offset < 0 else offset,
-                    seq_nr=seq_nr or 0,
-                    delete_to=delete_to,
-                )
-            else:
-                h = HeadInfo()
-            pdf = pd.concat(list(rows)).sort_values("offset")
-            for r in pdf.itertuples():
-                h = head_info_step(
-                    h,
-                    ActionRec(
-                        kind=r.action_type,
-                        offset=int(r.offset),
-                        seq_nr_from=None if pd.isna(r.seq_nr_from) else int(r.seq_nr_from),
-                        seq_nr_to=None if pd.isna(r.seq_nr_to) else int(r.seq_nr_to),
-                        delete_to=None if pd.isna(r.delete_to) else int(r.delete_to),
-                    ),
-                )
-            self._state.update(
-                (h.kind, -1 if h.offset is None else h.offset, h.seq_nr, h.delete_to)
-            )
-            yield pd.DataFrame(
-                [
-                    {
-                        "topic": key[0],
-                        "id": key[1],
-                        "kind": h.kind,
-                        "offset": h.offset,
-                        "seq_nr": h.seq_nr,
-                        "delete_to": h.delete_to,
-                    }
-                ]
-            )
-
-        def close(self) -> None:
-            pass
-
-    headers = action_stream.select(
-        "topic", "id", "action_type", "offset", "seq_nr_from", "seq_nr_to", "delete_to"
-    )
-    return headers.groupBy("topic", "id").transformWithStateInPandas(
-        statefulProcessor=HeadInfoProcessor(),
-        outputStructType=HEAD_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

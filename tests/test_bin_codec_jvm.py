@@ -1,14 +1,14 @@
-"""JVM-expression envelope codec vs the Python kernel (its executable spec).
+"""The shipping binary-envelope pair vs its Python kernels (the executable spec).
 
-The binary envelope (Events.scala:14-36 scodec layout) has two
-implementations: the Arrow-batched pandas UDFs whose kernel is
-``pack_events_binary``/``unpack_events_binary`` (golden-pinned against
-reference bytes in test_golden_wire_compat.py), and the pure-expression
-form (`events_bin_encode_expr`/`events_bin_decode_expr`) that keeps the
-hot path JVM-side.  These tests hold the two implementations bit-for-bit
-equal — randomized structure sweep plus hand-picked edges — and pin the
-corruption contract: a blob the kernel rejects must yield a NULL row,
-never a failed task.
+The binary envelope (Events.scala:14-36 scodec layout) is encoded by the
+pure-expression form ``events_bin_encode_expr`` (JVM-side) and decoded by
+``decode_kafka_to_actions`` through the Arrow pandas UDF over
+``unpack_events_binary``; the kernels ``pack_events_binary`` /
+``unpack_events_binary`` are golden-pinned against reference bytes in
+test_golden_wire_compat.py.  These tests hold the encoder bit-for-bit equal
+to ``pack_events_binary`` on a randomized structure sweep, and pin the
+decoder's corruption contract on the path that ships: a blob the kernel
+rejects must yield a NULL envelope on its row, never a failed task.
 """
 
 from __future__ import annotations
@@ -28,18 +28,6 @@ EVENTS_DF_SCHEMA = T.StructType(
         T.StructField("pybytes", T.BinaryType()),
     ]
 )
-
-
-def _norm_events(evs):
-    return [
-        (
-            e["seqNr"],
-            list(e["tags"]),
-            e["payloadType"],
-            bytes(e["payload"]) if e["payload"] is not None else None,
-        )
-        for e in evs
-    ]
 
 
 def _random_case(rng: random.Random):
@@ -79,6 +67,26 @@ def _build_df(spark, cases):
     return spark.createDataFrame(rows, EVENTS_DF_SCHEMA)
 
 
+def _decode_blobs(spark, blobs):
+    """Each blob as the value of a binary-header append, decoded by the
+    shipping ``decode_kafka_to_actions``; rows keyed by offset (= index)."""
+    header = (
+        b'{"append":{"range":{"from":1,"to":1},"origin":"o","version":"1",'
+        b'"payloadType":"binary"}}'
+    )
+    kafka_df = spark.createDataFrame(
+        [
+            ("journal", 0, i, f"k{i}".encode(), b, [(C.KAFKA_HEADER_KEY, header)], None)
+            for i, b in enumerate(blobs)
+        ],
+        "topic string, partition int, offset long, key binary, value binary, "
+        "headers array<struct<key:string,value:binary>>, timestamp timestamp",
+    )
+    rows = {r.offset: r for r in C.decode_kafka_to_actions(kafka_df).collect()}
+    assert sorted(rows) == list(range(len(blobs)))
+    return rows
+
+
 def test_encode_byte_parity_random(spark):
     rng = random.Random(0xC0DEC)
     cases = [_random_case(rng) for _ in range(60)]
@@ -92,34 +100,25 @@ def test_encode_byte_parity_random(spark):
         assert bytes(r.jvm) == bytes(r.pybytes), f"case {r.i}"
 
 
-def test_decode_value_parity_random(spark):
-    rng = random.Random(0xDEC0DE)
-    cases = [_random_case(rng) for _ in range(60)]
-    df = _build_df(spark, cases)
-    out = df.select("i", "pybytes", C.events_bin_decode_expr(F.col("pybytes")).alias("d")).collect()
-    for r in out:
-        py = C.unpack_events_binary(bytes(r.pybytes))
-        d = r.d.asDict(recursive=True)
-        assert _norm_events(d["events"]) == _norm_events(py["events"]), f"case {r.i}"
-        assert d["metadata"] == py["metadata"], f"case {r.i}"
-
-
 def test_decode_version0_and_legacy_prefixes(spark):
     """choice(version1, version0, default) fallbacks (Events.scala:21-30):
     0x00 => events, '{}' metadata; any other byte => legacy skip-one."""
     body = C.pack_events_binary([{"seqNr": 3, "tags": ["t"], "payloadType": "text", "payload": b"p"}], "IGNORED")
     v0 = b"\x00" + body[1 : body.index(b"IGNORED")]
     legacy = b"\x7f" + body[1 : body.index(b"IGNORED")]
-    df = spark.createDataFrame([(0, v0), (1, legacy)], "i int, blob binary")
-    out = {r.i: r.d.asDict(recursive=True) for r in df.select("i", C.events_bin_decode_expr(F.col("blob")).alias("d")).collect()}
-    for i, blob in ((0, v0), (1, legacy)):
+    rows = _decode_blobs(spark, [v0, legacy])
+    for i, blob in enumerate((v0, legacy)):
         py = C.unpack_events_binary(blob)
-        assert _norm_events(out[i]["events"]) == _norm_events(py["events"])
-        assert out[i]["metadata"] == py["metadata"] == "{}"
+        assert [bytes(p) for p in rows[i].payloads_bin] == [bytes(e["payload"]) for e in py["events"]] == [b"p"]
+        assert rows[i].tags_list == [e["tags"] for e in py["events"]] == [["t"]]
+        assert rows[i].metadata == py["metadata"] == "{}"
 
 
 def test_decode_corrupt_blobs_null_not_crash(spark):
-    """The standing probe: corrupt/foreign blobs are tolerated per-row."""
+    """The standing probe: corrupt/foreign blobs are tolerated per-row.
+    Every binary append comes back as a row (no task failure); a blob the
+    kernel rejects leaves payloads_bin/metadata NULL, and an accepted one
+    decodes to exactly the kernel's output."""
     rng = random.Random(0xBAD)
     blobs = [
         None,
@@ -130,75 +129,19 @@ def test_decode_corrupt_blobs_null_not_crash(spark):
         b"\x01\x00\x00\x00\x01\x00\x00\x00\x11" + b"\x00" * 17 + b"\xff\xfe",  # bad utf8 tail
         b"\x01\xff\xff\xff\xff",  # negative count
     ] + [bytes(rng.getrandbits(8) for _ in range(rng.randint(1, 64))) for _ in range(40)]
-    n_structured = 7  # blobs[:7] are the hand-built structural cases
-    df = spark.createDataFrame(
-        [(i, b) for i, b in enumerate(blobs)], "i int, blob binary"
-    )
-    out = df.select("i", C.events_bin_decode_expr(F.col("blob")).alias("d")).collect()
-    for r in out:
-        blob = blobs[r.i]
+    rows = _decode_blobs(spark, blobs)
+    for i, blob in enumerate(blobs):
+        r = rows[i]
+        assert (r.action_type, r.payload_type) == ("append", "binary"), i
         try:
             py = C.unpack_events_binary(blob)
         except Exception:
             py = None
-        if py is not None and r.d is not None:
-            # when both sides decode, they must agree
-            d = r.d.asDict(recursive=True)
-            assert _norm_events(d["events"]) == _norm_events(py["events"]), r.i
-            assert d["metadata"] == py["metadata"], r.i
         if py is None:
-            # kernel rejects => expression must too (never garbage rows)
-            assert r.d is None, f"blob {r.i}: jvm decoded what the kernel rejects"
-        if r.i < n_structured:
-            # on the curated structural cases the twins must agree on
-            # ACCEPTANCE in both directions (the negative-count blob used
-            # to split them: kernel empty-events vs expression NULL).  For
-            # arbitrary random garbage only the direction above is pinned:
-            # the expression's count bound (>= 21 bytes/event) may reject
-            # lying size-prefixes the lax kernel happens to walk through —
-            # strictness, never fabrication.
-            assert (py is None) == (r.d is None), (
-                f"blob {r.i}: acceptance divergence (kernel={'rej' if py is None else 'acc'},"
-                f" expr={'rej' if r.d is None else 'acc'})"
-            )
-
-
-def test_wire_roundtrip_impl_equivalence(spark, monkeypatch):
-    """encode_actions_to_kafka/decode_kafka_to_actions produce identical
-    bytes and rows under both codec implementations on a mixed batch
-    (binary appends + control records)."""
-    from conftest import append, delete, make_actions, mark
-
-    acts = make_actions(
-        spark, [append("a", 1), append("a", 2), delete("a", 1), mark("a")]
-    )
-    bin_acts = acts.withColumn(
-        "payload_bin",
-        F.when(F.col("action_type") == "append", F.unhex(F.md5("payload"))),
-    ).withColumn(
-        "payload_type",
-        F.when(F.col("action_type") == "append", F.lit("binary")),
-    )
-    results = {}
-    impls = ("jvm", "arrow", "hybrid", "mapinarrow")
-    for impl in impls:
-        monkeypatch.setattr(C, "BIN_CODEC_IMPL", impl)
-        enc = C.encode_actions_to_kafka(bin_acts)
-        dec = C.decode_kafka_to_actions(enc)
-        results[impl] = sorted(
-            (
-                r.id,
-                r.action_type,
-                r.seq_nr_from,
-                bytes(r.payload_bin) if r.payload_bin is not None else None,
-                r.metadata,
-            )
-            for r in dec.collect()
-        )
-        results[impl + "_bytes"] = sorted(
-            (r.offset, bytes(r.value) if r.value is not None else None)
-            for r in enc.collect()
-        )
-    for impl in impls[1:]:
-        assert results["jvm"] == results[impl], impl
-        assert results["jvm_bytes"] == results[impl + "_bytes"], impl
+            assert r.payloads_bin is None and r.metadata is None, i
+            continue
+        want = [bytes(e["payload"]) if e["payload"] is not None else None for e in py["events"]]
+        got = [bytes(p) if p is not None else None for p in r.payloads_bin]
+        assert got == want, i
+        assert r.tags_list == [e["tags"] for e in py["events"]], i
+        assert r.metadata == py["metadata"], i

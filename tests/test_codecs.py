@@ -264,3 +264,59 @@ def test_binary_envelope_pack_unpack_property():
                 assert e_out["payloadType"] == (e_in["payloadType"] or "binary")
 
     check()
+
+
+def test_json_only_envelope_decode_matches_full_dispatch(spark):
+    """The r12 short-circuit: when encode_actions_to_kafka provably wrote
+    no binary envelope (no payload_bin/payloads_bin column), the decoder
+    skips the Arrow blob decoder (typed-NULL _blob_bin) — the decoded
+    actions must be IDENTICAL to the full-dispatch path, including the
+    degenerate row whose HEADER claims payloadType='binary' without a bin
+    column (the Arrow kernel's corrupt-blob tolerance returns NULL for the
+    JSON byte stream, which is exactly the short-circuit's literal)."""
+    from conftest import append, delete, make_actions, purge
+    from pyspark.sql import functions as F
+
+    from kafka_journal_spark.codecs import (
+        decode_kafka_to_actions,
+        encode_actions_to_kafka,
+    )
+
+    acts = make_actions(
+        spark,
+        [
+            append("a", 1),
+            dict(append("a", 2), payload_type="json"),
+            delete("a", 1),
+            purge("b"),
+            # the degenerate shape: header says binary, but the encoder
+            # had no bin column and wrote the JSON document anyway
+            dict(append("c", 1), payload_type="binary"),
+        ],
+    )
+    enc = encode_actions_to_kafka(acts)
+    assert getattr(enc, "_kjs_json_only_envelope", False)
+
+    dec_fast = decode_kafka_to_actions(enc)
+    assert "ArrowEvalPython" not in dec_fast._jdf.queryExecution().executedPlan().toString()
+
+    enc_full = encode_actions_to_kafka(acts)
+    del enc_full._kjs_json_only_envelope
+    dec_full = decode_kafka_to_actions(enc_full)
+    assert "ArrowEvalPython" in dec_full._jdf.queryExecution().executedPlan().toString()
+
+    def rows(df):
+        out = df.withColumn("tags", F.to_json("tags")).withColumn(
+            "headers", F.to_json("headers")
+        )
+        return sorted(map(tuple, out.collect()))
+
+    assert rows(dec_fast) == rows(dec_full)
+
+    # and a frame carrying REAL binary envelopes must keep the full path
+    bin_acts = acts.withColumn(
+        "payload_bin",
+        F.when(F.col("action_type") == "append", F.unhex(F.md5("payload"))),
+    )
+    enc_bin = encode_actions_to_kafka(bin_acts)
+    assert not getattr(enc_bin, "_kjs_json_only_envelope", False)

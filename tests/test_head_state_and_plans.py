@@ -3,7 +3,6 @@ R2 recovery planner."""
 
 from __future__ import annotations
 
-import pytest
 from conftest import ACTIONS_DDL, append, delete, make_actions, mark, purge
 
 from kafka_journal_spark.folds import HeadInfo, head_info
@@ -83,57 +82,6 @@ def test_head_info_stream_carries_state_across_batches(spark, tmp_path):
     assert (rows[0].kind, rows[0].seq_nr, rows[0].delete_to) == ("append", 2, None)
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf (absent in this container)",
-)
-def test_head_info_stream_tws_matches_pure_fold(spark, tmp_path):
-    # same assertions as the applyInPandasWithState variant, on the
-    # Spark 4 transformWithStateInPandas API
-    from kafka_journal_spark.streaming.head_state import head_info_stream_tws
-
-    acts = [
-        append("a", 1), append("a", 2), delete("a", 1),
-        append("b", 1), purge("b"), append("b", 2),
-    ]
-    src = tmp_path / "tws-src"
-    make_actions(spark, acts).write.parquet(str(src))
-    stream = spark.readStream.schema(ACTIONS_DDL).parquet(str(src))
-    q = (
-        head_info_stream_tws(stream)
-        .writeStream.format("memory")
-        .queryName("heads_tws")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws-ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        r.id: (r.kind, r.offset, r.seq_nr, r.delete_to)
-        for r in spark.sql("SELECT * FROM heads_tws").collect()
-    }
-    from kafka_journal_spark.folds import ActionRec
-
-    by_key = {}
-    for r in make_actions(spark, acts).collect():
-        by_key.setdefault(r.id, []).append(
-            ActionRec(r.action_type, r.offset, r.seq_nr_from, r.seq_nr_to, r.delete_to)
-        )
-    for key, recs in by_key.items():
-        h = head_info(recs)
-        assert got[key] == (h.kind, h.offset, h.seq_nr, h.delete_to), key
-
-
 def test_plan_selection():
     assert plan_recovery(HeadInfo()) == plan_recovery(HeadInfo(kind="empty"))
     p = plan_recovery(HeadInfo(kind="empty"), 3)
@@ -166,22 +114,18 @@ def test_read_with_plan_end_to_end(spark, tmp_path):
 
 
 def test_head_info_stream_auto_selects_by_dependency(spark, tmp_path):
-    """head_info_stream_auto picks TWS exactly when google.protobuf is
-    importable (or when forced), and the fallback branch is the tested
-    applyInPandasWithState fold — same output either way."""
-    from kafka_journal_spark.streaming.head_state import (
-        head_info_stream_auto,
-        tws_available,
-    )
-
+    """The head stream's operator no longer depends on which optional
+    packages are importable: head_info_stream (applyInPandasWithState) is
+    the one implementation, and it must plan and run without
+    google.protobuf (the transformWithStateInPandas dependency)."""
     src = tmp_path / "autosrc"
     make_actions(spark, [append("a", 1), delete("a", 1)]).write.parquet(str(src))
     stream = spark.readStream.schema(ACTIONS_DDL).parquet(str(src))
 
-    # forced fallback must be plannable and run regardless of environment
+    df = head_info_stream(stream)
+    assert df.schema.simpleString().startswith("struct<topic:string,id:string")
     q = (
-        head_info_stream_auto(stream, prefer_tws=False)
-        .writeStream.format("memory")
+        df.writeStream.format("memory")
         .queryName("auto_heads")
         .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "auto_ckpt"))
@@ -195,13 +139,3 @@ def test_head_info_stream_auto_selects_by_dependency(spark, tmp_path):
     }
     # delete-after-append keeps the Append kind (only the watermark moves)
     assert got == {"a": ("append", 1, 1)}
-
-    # default selection matches the detected dependency; the TWS branch
-    # must at least BUILD (plan) when the dependency is present
-    if tws_available():
-        df = head_info_stream_auto(stream)
-        assert df.schema.simpleString().startswith("struct<topic:string,id:string")
-    else:
-        # auto == fallback here: building the default must not require protobuf
-        df = head_info_stream_auto(stream)
-        assert df.schema.simpleString().startswith("struct<topic:string,id:string")
