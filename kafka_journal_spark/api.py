@@ -25,7 +25,12 @@ Mark (W4) does not exist here by design: the end-offset of the actions log
 is the fence (SURVEY §3.1) — the client never needs to write to read.
 
 Client calls are single-key and driver-side (like the reference's); bulk
-work belongs to the replicator/streaming pipeline.
+work belongs to the replicator/streaming pipeline.  A call folds its key's
+un-replicated tail once: ``read`` collects the tail one time for both the
+HeadInfo and the tail's purge horizon, and ``purge`` decides "absent" from
+one tail pass plus one head lookup.  The rows a call writes, and every
+empty frame it plans over, enter Spark through Arrow
+(``session.local_frame``), so no call starts a Python worker.
 """
 
 from __future__ import annotations
@@ -38,6 +43,7 @@ from pyspark.sql import functions as F
 
 from kafka_journal_spark.folds import ActionRec, HeadInfo, head_info
 from kafka_journal_spark.plans.recovery import read_with_plan
+from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -50,6 +56,9 @@ ACTIONS_LOG_DDL = (
     "payloads_bin array<binary>, headers map<string,string>, "
     "tags array<string>, delete_to long, mark_id string, expire_after_secs long"
 )
+
+#: the log columns the HeadInfo fold reads, in ``folds.ActionRec`` order
+FOLD_COLS = ("action_type", "offset", "seq_nr_from", "seq_nr_to", "delete_to")
 
 
 #: per-key HeadInfo snapshot row (head_info_batch output)
@@ -94,7 +103,7 @@ class JournalClient:
     def _log(self) -> DataFrame:
         if os.path.exists(self.log_path):
             return self.spark.read.schema(ACTIONS_LOG_DDL).parquet(self.log_path)
-        return self.spark.createDataFrame([], ACTIONS_LOG_DDL)
+        return local_frame(self.spark, [], ACTIONS_LOG_DDL)
 
     def _next_offset(self) -> int:
         row = self._log().agg(F.max("offset").alias("m")).collect()[0]
@@ -104,23 +113,34 @@ class JournalClient:
         """Un-replicated actions of a key (offset beyond the replicated
         pointer of its partition).
 
-        Fences by each ROW's own partition column (via
-        :meth:`_unreplicated_tail`), not a partition re-derived from
-        ``md5(key)``: a store replicated from a log with a different
-        partitioning scheme would otherwise consult the wrong partition's
-        pointer — double-seeing replicated actions or missing fresh ones.
-        The sibling paths (``_unreplicated_tail``, ``read_many``) always
-        fenced this way; this was the one re-derivation."""
-        return self._unreplicated_tail().filter(
-            (F.col("topic") == topic) & (F.col("id") == key)
+        Fences by each ROW's own partition column, not a partition
+        re-derived from ``md5(key)``: a store replicated from a log with a
+        different partitioning scheme would otherwise consult the wrong
+        partition's pointer — double-seeing replicated actions or missing
+        fresh ones.  The sibling paths (``_unreplicated_tail``,
+        ``read_many``) fence the same way.
+
+        The topic's pointers (one row per log partition) are collected
+        here and inlined as a per-partition literal fence, so every plan
+        over the returned frame — a read's tail collect and its final
+        plan — scans the log with no broadcast join of its own."""
+        fence = F.lit(-1)
+        for r in self.store.pointers().filter(F.col("topic") == topic).collect():
+            fence = F.when(F.col("partition") == r.partition, F.lit(r.offset)).otherwise(
+                fence
+            )
+        return self._log().filter(
+            (F.col("topic") == topic) & (F.col("id") == key) & (F.col("offset") > fence)
         )
 
+    @staticmethod
+    def _fold_recs(tail: DataFrame) -> list[ActionRec]:
+        """A key's tail as fold records: one collect, projected to the
+        fold's columns."""
+        return [ActionRec(*r) for r in tail.select(*FOLD_COLS).collect()]
+
     def _tail_head(self, topic: str, key: str):
-        recs = [
-            ActionRec(r.action_type, r.offset, r.seq_nr_from, r.seq_nr_to, r.delete_to)
-            for r in self._tail(topic, key).collect()
-        ]
-        return head_info(recs)
+        return head_info(self._fold_recs(self._tail(topic, key)))
 
     # -- maintained head snapshot (C1 consumption path) --------------------
 
@@ -237,14 +257,18 @@ class JournalClient:
             kind=r.kind, offset=r.offset, seq_nr=r.seq_nr or 0, delete_to=r.delete_to
         )
 
-    def _head(self, topic: str, key: str):
+    def _head(self, topic: str, key: str, recs: Optional[list[ActionRec]] = None):
         """The R2 HeadInfo for one key, via the configured mode (snapshot
-        with silent fold fallback on staleness, or fold directly)."""
+        with silent fold fallback on staleness, or fold directly).  A
+        caller that already holds the key's tail records passes them as
+        ``recs``, and the fold reuses them instead of collecting again."""
         if self.head_mode == "snapshot":
             h = self._snapshot_head(topic, key)
             if h is not None:
                 return h
-        return self._tail_head(topic, key)
+        if recs is None:
+            recs = self._fold_recs(self._tail(topic, key))
+        return head_info(recs)
 
     @staticmethod
     def _partition(key: str) -> int:
@@ -253,8 +277,9 @@ class JournalClient:
         return int(hashlib.md5(key.encode()).hexdigest()[:8], 16) % N_PARTITIONS
 
     def _emit(self, rows: list[dict]) -> int:
-        df = self.spark.createDataFrame(rows, ACTIONS_LOG_DDL)  # type: ignore[arg-type]
-        df.write.mode("append").parquet(self.log_path)
+        local_frame(self.spark, rows, ACTIONS_LOG_DDL).write.mode("append").parquet(
+            self.log_path
+        )
         return rows[-1]["offset"]
 
     # -- the Journal API ---------------------------------------------------
@@ -351,11 +376,12 @@ class JournalClient:
     def purge(self, topic: str, key: str) -> Optional[int]:
         import datetime as dt
 
-        if self.pointer(topic, key) is None and self._tail(topic, key).isEmpty():
-            if not self.store.metajournal_of_keys([key]).filter(
-                (F.col("topic") == topic) & (F.col("id") == key)
-            ).take(1):
-                return None
+        # absent journal: no un-replicated action and no head row (a live
+        # stored pointer implies a head row, so the head check covers it)
+        if self._tail(topic, key).isEmpty() and not self.store.metajournal_of_keys(
+            [key]
+        ).filter((F.col("topic") == topic) & (F.col("id") == key)).take(1):
+            return None
         off = self._next_offset()
         self._emit(
             [
@@ -375,10 +401,17 @@ class JournalClient:
 
     def read(self, topic: str, key: str, from_seq_nr: int = 1) -> list[tuple[int, str]]:
         """Recovery read: (seq_nr, payload) pairs — replicated prefix
-        stitched with the un-replicated tail per the R2 plan."""
-        head = self._head(topic, key)
+        stitched with the un-replicated tail per the R2 plan.
+
+        The key's tail is collected once (``_fold_recs``) and serves both
+        the HeadInfo fold (unless a fresh head snapshot serves the head)
+        and the tail's purge horizon; the final plan reads the tail's
+        events from the log with the same pointer fence."""
         tail = self._tail(topic, key)
-        df = read_with_plan(self.store, tail, topic, key, head, from_seq_nr)
+        recs = self._fold_recs(tail)
+        head = self._head(topic, key, recs)
+        purge_off = max((r.offset for r in recs if r.kind == "purge"), default=None)
+        df = read_with_plan(self.store, tail, topic, key, head, purge_off, from_seq_nr)
         out = []
         for r in df.collect():
             payload = r.payload_txt

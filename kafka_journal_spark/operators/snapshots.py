@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from kafka_journal_spark.operators.actions import journal_actions
 from kafka_journal_spark.operators.replicate import materialize_journal
+from kafka_journal_spark.session import local_frame
 
 BUFFER_SIZE = 3  # ring slots per journal
 SNAP_EVERY = 5  # snapshot every 5th event (derived stream)
@@ -131,7 +132,7 @@ class SnapshotStore:
 
         if os.path.exists(self.path):
             return self.spark.read.schema(SNAPSHOT_SCHEMA_DDL).parquet(self.path)
-        return self.spark.createDataFrame([], SNAPSHOT_SCHEMA_DDL)
+        return local_frame(self.spark, [], SNAPSHOT_SCHEMA_DDL)
 
     def _swap(self, df: DataFrame) -> None:
         from kafka_journal_spark.sources.statestore import safe_dir_swap
@@ -147,10 +148,13 @@ class SnapshotStore:
         n = self._counts.get((topic, key), self._persisted_count(topic, key))
         slot = n % self.buffer_size
         self._counts[(topic, key)] = n + 1
-        row = self.spark.createDataFrame(
+        # timezone-aware UTC now: the column holds instants, and a naive
+        # utcnow() leaves its zone to whoever converts it
+        row = local_frame(
+            self.spark,
             [(
                 topic, key, slot, seq_nr,
-                timestamp or dt.datetime.utcnow(), origin, version,
+                timestamp or dt.datetime.now(dt.timezone.utc), origin, version,
                 "text", payload,
             )],
             SNAPSHOT_SCHEMA_DDL,

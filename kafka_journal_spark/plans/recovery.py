@@ -26,7 +26,15 @@ from pyspark.sql import functions as F
 
 from kafka_journal_spark.folds import HeadInfo
 from kafka_journal_spark.operators.replicate import explode_events
+from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.statestore import JournalStore
+
+#: columns of a recovery read
+READ_DDL = (
+    "id string, topic string, seq_nr long, partition int, offset long, "
+    "timestamp timestamp, origin string, version string, payload_type string, "
+    "payload_txt string, payload_bin binary"
+)
 
 
 @dataclass(frozen=True)
@@ -64,43 +72,27 @@ def read_with_plan(
     topic: str,
     key: str,
     head: HeadInfo,
+    tail_purge_offset: Optional[int],
     from_seq_nr: int = 1,
 ) -> DataFrame:
-    """Build the recovery-read DataFrame for one key according to the plan.
+    """Build the recovery-read DataFrame for one key according to the plan;
+    building it runs no Spark job.
 
     ``kafka_tail`` is the un-replicated actions DataFrame (Kafka-envelope
     already decoded); only consulted when the plan says so.
+
+    ``tail_purge_offset`` is the offset of the key's last purge in the
+    tail, or None when the tail holds none.  An un-replicated purge erases
+    the replicated prefix, and the HeadInfo summary loses the purge once a
+    fresh append follows it, so the caller reads the horizon from the
+    same tail rows it folded the head from.  (The reference returns the
+    STALE prefix in this window — its Append branch's monotonic guard
+    drops the fresh events, Journals.scala:220-255; we match the journal
+    model instead.)
     """
     plan = plan_recovery(head, from_seq_nr)
-    spark = store.spark
-    cols = [
-        "id", "topic", "seq_nr", "partition", "offset", "timestamp",
-        "origin", "version", "payload_type", "payload_txt", "payload_bin",
-    ]
-    empty = spark.createDataFrame(
-        [],
-        "id string, topic string, seq_nr long, partition int, offset long, "
-        "timestamp timestamp, origin string, version string, payload_type string, "
-        "payload_txt string, payload_bin binary",
-    )
-    # an un-replicated purge in the tail erases the replicated prefix — the
-    # HeadInfo summary loses the purge once a fresh append follows it, so
-    # the purge horizon is read from the tail directly.  (The reference
-    # returns the STALE prefix in this window — its Append branch's
-    # monotonic guard drops the fresh events, Journals.scala:220-255; we
-    # match the journal model instead.)
-    tail_purge_off = -1
-    if kafka_tail is not None:
-        row = (
-            kafka_tail.filter(
-                (F.col("topic") == topic)
-                & (F.col("id") == key)
-                & (F.col("action_type") == "purge")
-            )
-            .agg(F.max("offset").alias("m"))
-            .collect()[0]
-        )
-        tail_purge_off = row.m if row.m is not None else -1
+    cols = [f.split()[0] for f in READ_DDL.split(", ")]
+
     def _project(df: DataFrame) -> DataFrame:
         # tolerate sources without the binary twin column (narrow tails)
         if "payload_bin" not in df.columns:
@@ -109,13 +101,10 @@ def read_with_plan(
 
     parts = []
     if plan.read_store:
-        parts.append(
-            _project(
-                store.read(topic=topic, key=key, from_seq_nr=plan.from_seq_nr).filter(
-                    F.col("offset") > F.lit(tail_purge_off)
-                )
-            )
-        )
+        prefix = store.read(topic=topic, key=key, from_seq_nr=plan.from_seq_nr)
+        if tail_purge_offset is not None:
+            prefix = prefix.filter(F.col("offset") > F.lit(tail_purge_offset))
+        parts.append(_project(prefix))
     if plan.read_kafka and kafka_tail is not None:
         tail = kafka_tail.filter(
             (F.col("topic") == topic)
@@ -127,7 +116,7 @@ def read_with_plan(
             _project(explode_events(tail).filter(F.col("seq_nr") >= plan.from_seq_nr))
         )
     if not parts:
-        return empty
+        return local_frame(store.spark, [], READ_DDL)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

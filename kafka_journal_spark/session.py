@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one way driver-side
+rows enter Spark (``local_frame``).
 
 Local tests run on ``local[N]``; the configs below are the ones that matter at
 cluster scale too (AQE, shuffle sizing, Arrow for the pandas-UDF paths).
@@ -7,8 +8,9 @@ cluster scale too (AQE, shuffle sizing, Arrow for the pandas-UDF paths).
 from __future__ import annotations
 
 import os
+from typing import Iterable, Union
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "kafka-journal-spark", cpus: int | None = None) -> SparkSession:
@@ -71,3 +73,32 @@ def get_spark(app_name: str = "kafka-journal-spark", cpus: int | None = None) ->
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Union[dict, tuple]], ddl: str
+) -> DataFrame:
+    """A DataFrame of a handful of driver-side rows (dicts, or tuples in DDL
+    order) with the exact schema of ``ddl``, built through a
+    ``pyarrow.Table``.
+
+    ``spark.createDataFrame(list, ddl)`` pickles the rows into a 4-slice
+    Python RDD, so every job over the frame forks Python workers: an empty
+    one collects as 1 job of 4 tasks, and a 1-row log append writes with 4
+    tasks.  From Arrow the frame is a local relation: collecting it starts
+    no job and writing it runs one task.
+
+    Timestamps are instants: pass timezone-aware datetimes.  A naive one is
+    read as UTC (Arrow's reading), where ``createDataFrame(list)`` reads it
+    in the driver's local zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    rows = list(rows)
+    if rows and not isinstance(rows[0], dict):
+        names = struct.fieldNames()
+        rows = [dict(zip(names, r)) for r in rows]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)

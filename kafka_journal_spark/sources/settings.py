@@ -21,6 +21,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafka_journal_spark.session import local_frame
+
 SETTINGS_DDL = "key string, value string, timestamp timestamp, origin string"
 
 
@@ -36,7 +38,7 @@ class Settings:
         _repair_dir(self.path)
         if os.path.exists(self.path):
             return self.spark.read.schema(SETTINGS_DDL).parquet(self.path)
-        return self.spark.createDataFrame([], SETTINGS_DDL)
+        return local_frame(self.spark, [], SETTINGS_DDL)
 
     def all(self) -> dict[str, str]:
         return {r.key: r.value for r in self._df().collect()}
@@ -55,9 +57,7 @@ class Settings:
         # session timezone — off by the UTC offset on any non-UTC driver
         # (utcnow() is also deprecated in Python 3.12+)
         now = dt.datetime.now(dt.timezone.utc)
-        new = self.spark.createDataFrame(
-            [(key, value, now, origin)], SETTINGS_DDL
-        )
+        new = local_frame(self.spark, [(key, value, now, origin)], SETTINGS_DDL)
         self._swap(self._df().filter(F.col("key") != key).unionByName(new))
 
     def remove(self, key: str) -> None:

@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from kafka_journal_spark import SEGMENTS_DEFAULT
 from kafka_journal_spark.operators.replicate import segment_of
+from kafka_journal_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -1119,7 +1120,7 @@ class JournalStore:
             if parts is not None:
                 files = [f for f in files if f.split(os.sep, 1)[0] in parts]
             if not files:
-                return self.spark.createDataFrame([], ddl)
+                return local_frame(self.spark, [], ddl)
             df = (
                 self.spark.read.schema(ddl)
                 .option("basePath", p)
@@ -1140,7 +1141,7 @@ class JournalStore:
                 .option("ignoreMissingFiles", "true")
                 .parquet(p)
             )
-        return self.spark.createDataFrame([], ddl)
+        return local_frame(self.spark, [], ddl)
 
     def journal(self) -> DataFrame:
         return self._read("journal", JOURNAL_SCHEMA_DDL)
@@ -1778,8 +1779,9 @@ class JournalStore:
         numbers that size/schedule ``compact()`` and alert on debt at
         scale; every input is one aggregate over a table the store
         already maintains or one filesystem listing."""
-        files = self.spark.createDataFrame(
-            self._journal_file_stats() or [],
+        files = local_frame(
+            self.spark,
+            self._journal_file_stats(),
             "topic string, n_files long, total_bytes long",
         )
         phys = self.journal().groupBy("topic").agg(
@@ -1855,9 +1857,7 @@ class JournalStore:
                     if f.endswith(".parquet")
                 )
                 rows.append((band, n, band in dirty))
-        return self.spark.createDataFrame(
-            rows or [], "band long, n_files long, dirty boolean"
-        )
+        return local_frame(self.spark, rows, "band long, n_files long, dirty boolean")
 
     @_locked
     def compact(

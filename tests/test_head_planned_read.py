@@ -79,6 +79,14 @@ def test_snapshot_mode_reads_equal_fold_mode(spark, tmp_path):
     assert c._snapshot_head("t", "a") == HeadInfo()  # all replicated now
     assert c.read("t", "a") == fold.read("t", "a")
 
+    # an un-replicated purge, then a fresh append: the served head is
+    # `append`, yet the replicated prefix must vanish in snapshot mode too
+    c.purge("t", "a")
+    c.append("t", "a", ["n1"])
+    c.refresh_head_snapshot()
+    assert c._snapshot_head("t", "a").kind == "append"
+    assert c.read("t", "a") == fold.read("t", "a") == [(1, "n1")]
+
 
 def test_snapshot_staleness_survives_out_of_band_writers(spark, tmp_path):
     """The fingerprint cache added for snapshot-mode read cost must NOT

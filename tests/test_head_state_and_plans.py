@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from conftest import ACTIONS_DDL, append, delete, make_actions, mark, purge
 
-from kafka_journal_spark.folds import HeadInfo, head_info
+from kafka_journal_spark.folds import ActionRec, HeadInfo, head_info
 from kafka_journal_spark.plans.recovery import plan_recovery, read_with_plan
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
@@ -99,18 +99,37 @@ def test_read_with_plan_end_to_end(spark, tmp_path):
     store = JournalStore(spark, str(tmp_path / "plan-store"))
     replicate_batch(make_actions(spark, [append("a", 1), append("a", 2)]), store)
     tail = make_actions(spark, [delete("a", 1), append("a", 3)], offset_base=2)
-    from kafka_journal_spark.folds import ActionRec
-
     recs = [
         ActionRec(r.action_type, r.offset, r.seq_nr_from, r.seq_nr_to, r.delete_to)
         for r in tail.collect()
     ]
     head = head_info(recs)
-    out = read_with_plan(store, tail, "journal", "a", head)
+    out = read_with_plan(store, tail, "journal", "a", head, None)
     assert sorted((r.seq_nr, r.offset) for r in out.collect()) == [(2, 1), (3, 3)]
     # purge head -> empty
-    out2 = read_with_plan(store, tail, "journal", "a", HeadInfo(kind="purge"))
+    out2 = read_with_plan(store, tail, "journal", "a", HeadInfo(kind="purge"), None)
     assert out2.count() == 0
+
+
+def test_read_with_plan_tail_purge_horizon_erases_prefix(spark, tmp_path):
+    """An un-replicated purge followed by a fresh append: the HeadInfo is
+    ``append`` (the fold lost the purge), so only the caller's purge
+    horizon can tell the plan that the replicated prefix is gone."""
+    store = JournalStore(spark, str(tmp_path / "horizon-store"))
+    replicate_batch(make_actions(spark, [append("a", 1), append("a", 2)]), store)
+    tail = make_actions(spark, [purge("a"), append("a", 1)], offset_base=2)
+    head = head_info(
+        [
+            ActionRec(r.action_type, r.offset, r.seq_nr_from, r.seq_nr_to, r.delete_to)
+            for r in tail.collect()
+        ]
+    )
+    assert (head.kind, head.offset, head.seq_nr) == ("append", 3, 1)
+    out = read_with_plan(store, tail, "journal", "a", head, 2)
+    assert [(r.seq_nr, r.offset, r.payload_txt) for r in out.collect()] == [(1, 3, "p1")]
+    # without the horizon the stale prefix would win the seam
+    stale = read_with_plan(store, tail, "journal", "a", head, None)
+    assert sorted((r.seq_nr, r.offset) for r in stale.collect()) == [(1, 0), (2, 1)]
 
 
 def test_head_info_stream_auto_selects_by_dependency(spark, tmp_path):
