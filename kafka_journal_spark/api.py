@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from kafka_journal_spark.folds import ActionRec, HeadInfo, head_info
 from kafka_journal_spark.plans.recovery import read_with_plan
 from kafka_journal_spark.session import local_frame
+from kafka_journal_spark.sources.manifest import ManifestTable, read_token, write_token
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -94,7 +95,10 @@ class JournalClient:
         self.origin = origin
         self.head_mode = head_mode
         self.log_path = os.path.join(root, "actions-log")
-        self.head_snapshot_path = os.path.join(root, "head-snapshot")
+        #: the maintained head snapshot (a manifest table) and its
+        #: validity token, the log fingerprint it was built under
+        self.head_snapshot = ManifestTable(root, "head-snapshot")
+        self.head_snapshot_token = os.path.join(root, "head-snapshot.token")
         self.store = JournalStore(spark, os.path.join(root, "store"))
         os.makedirs(root, exist_ok=True)
 
@@ -187,18 +191,21 @@ class JournalClient:
         latter — either invalidates the snapshot.
 
         The Spark jobs (max-offset scan + pointers collect) run only when
-        the underlying FILES changed since the last call (cheap stat-walk
-        signature): snapshot-mode reads otherwise paid two full log-metadata
-        jobs per call just to validate the token, defeating the snapshot's
-        point-lookup purpose.  Out-of-band mutation safety is preserved —
-        any writer changes the part files, which flips the signature and
-        forces a recompute."""
+        the underlying FILES changed since the last call: snapshot-mode
+        reads otherwise paid two full log-metadata jobs per call just to
+        validate the token, defeating the snapshot's point-lookup purpose.
+        The log side is a stat-walk signature of the actions log; the
+        pointers side is the pointers table's live-file list (one manifest
+        read — every commit moves in freshly named files, and vacuuming
+        retired files leaves it unchanged).  Out-of-band mutation safety
+        is preserved — any writer changes the log's part files or
+        commits a new pointers manifest, which forces a recompute."""
         import hashlib
         import json
 
         stat = (
             self._dir_sig(self.log_path),
-            self._dir_sig(os.path.join(self.store.root, "pointers")),
+            sorted(self.store.tables["pointers"].live_files()),
         )
         cached = getattr(self, "_fp_cache", None)
         if cached is not None and cached[0] == stat:
@@ -220,7 +227,6 @@ class JournalClient:
         per-call driver fold — the reference's HeadCache-backed recovery
         (``Journals.scala:157-170``, ``HeadCache.scala:39-200``)."""
         from kafka_journal_spark.operators.head import head_info_batch
-        from kafka_journal_spark.sources.statestore import safe_dir_swap
 
         fp = self._log_fingerprint()
         heads = head_info_batch(self._unreplicated_tail()).select(
@@ -229,24 +235,19 @@ class JournalClient:
         # size-aware write: range-partitioned by (topic, id) — AQE coalesces
         # a small tail to a handful of files, a large one spreads out, and
         # the point lookup prunes on the sort order either way
-        safe_dir_swap(
-            self.spark, self.head_snapshot_path, heads, sort_cols=["topic", "id"]
+        self.head_snapshot.commit_swap(
+            self.head_snapshot.stage(heads, sort_cols=["topic", "id"]), None
         )
-        with open(self.head_snapshot_path + ".token", "w") as f:
-            f.write(fp)
+        write_token(self.head_snapshot_token, fp)
 
     def _snapshot_head(self, topic: str, key: str) -> Optional[HeadInfo]:
         """HeadInfo from the maintained snapshot, or None when the snapshot
         is absent/stale (caller falls back to the fold)."""
-        tok_path = self.head_snapshot_path + ".token"
-        if not (os.path.exists(self.head_snapshot_path) and os.path.exists(tok_path)):
+        tok = read_token(self.head_snapshot_token)
+        if tok is None or tok != self._log_fingerprint():
             return None
-        with open(tok_path) as f:
-            if f.read().strip() != self._log_fingerprint():
-                return None
         rows = (
-            self.spark.read.schema(HEAD_SNAPSHOT_DDL)
-            .parquet(self.head_snapshot_path)
+            self.head_snapshot.read(self.spark, HEAD_SNAPSHOT_DDL)
             .filter((F.col("topic") == topic) & (F.col("id") == key))
             .collect()
         )

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from kafka_journal_spark.operators.actions import journal_actions
 from kafka_journal_spark.operators.replicate import materialize_journal
 from kafka_journal_spark.session import local_frame
+from kafka_journal_spark.sources.manifest import ManifestTable
 
 BUFFER_SIZE = 3  # ring slots per journal
 SNAP_EVERY = 5  # snapshot every 5th event (derived stream)
@@ -112,9 +113,12 @@ class SnapshotStore:
     (``BufferNr.scala:11-31``): the n-th snapshot of a key lands in slot
     ``(n-1) % buffer_size``, overwriting the previous occupant.
 
-    Writes are whole-table swaps of an O(#keys x buffer_size) table — the
-    same size-aware pattern as the metajournal head (snapshots are head
-    state, not bulk data).
+    The table (``<root>/snapshots``) is a one-file manifest table
+    (``sources/manifest.py``): every save or delete stages the whole
+    O(#keys x buffer_size) table and swaps it in through the manifest —
+    snapshots are head state, not bulk data — and reads plan from the
+    manifest's file list, so a read planned before a write still scans its
+    own snapshot and a crash mid-write leaves the previous table live.
     """
 
     def __init__(self, spark: SparkSession, root: str, buffer_size: int = BUFFER_SIZE):
@@ -123,21 +127,15 @@ class SnapshotStore:
         self.spark = spark
         self.root = root
         self.buffer_size = buffer_size
-        self.path = os.path.join(root, "snapshots")
+        self.table = ManifestTable(root, "snapshots")
         os.makedirs(root, exist_ok=True)
         self._counts: dict[tuple[str, str], int] = {}
 
     def _df(self) -> DataFrame:
-        import os
-
-        if os.path.exists(self.path):
-            return self.spark.read.schema(SNAPSHOT_SCHEMA_DDL).parquet(self.path)
-        return local_frame(self.spark, [], SNAPSHOT_SCHEMA_DDL)
+        return self.table.read(self.spark, SNAPSHOT_SCHEMA_DDL)
 
     def _swap(self, df: DataFrame) -> None:
-        from kafka_journal_spark.sources.statestore import safe_dir_swap
-
-        safe_dir_swap(self.spark, self.path, df, coalesce=1)
+        self.table.commit_swap(self.table.stage(df, coalesce=1), None)
 
     def save(self, topic: str, key: str, seq_nr: int, payload: str,
              timestamp=None, origin: str = "client", version: str = "1.0") -> None:

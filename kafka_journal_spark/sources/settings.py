@@ -1,8 +1,10 @@
 """Settings KV store + schema migration (SURVEY.md §2.1 S13/S14).
 
 - ``Settings``: the reference's tiny CRUD KV (``core/.../Settings.scala:9-21``,
-  rows ``(key, value, timestamp, origin)`` per ``Setting.scala:5-15``) over a
-  single parquet file with atomic swap.
+  rows ``(key, value, timestamp, origin)`` per ``Setting.scala:5-15``) as a
+  one-file manifest table (``sources/manifest.py``): every ``set`` /
+  ``remove`` stages the whole table and swaps it in through the manifest,
+  so a read planned before a write still scans its own snapshot.
 - ``migrate_store``: the reference's SetupSchema flow
   (``SetupSchema.scala:34-100``): CREATE-IF-NOT-EXISTS plus an *ordered,
   idempotent* migration list gated by a ``schema-version`` setting — re-runs
@@ -22,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_journal_spark.session import local_frame
+from kafka_journal_spark.sources.manifest import ManifestTable
 
 SETTINGS_DDL = "key string, value string, timestamp timestamp, origin string"
 
@@ -29,16 +32,11 @@ SETTINGS_DDL = "key string, value string, timestamp timestamp, origin string"
 class Settings:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
-        self.path = os.path.join(root, "settings")
+        self.table = ManifestTable(root, "settings")
         os.makedirs(root, exist_ok=True)
 
     def _df(self) -> DataFrame:
-        from kafka_journal_spark.sources.statestore import _repair_dir
-
-        _repair_dir(self.path)
-        if os.path.exists(self.path):
-            return self.spark.read.schema(SETTINGS_DDL).parquet(self.path)
-        return local_frame(self.spark, [], SETTINGS_DDL)
+        return self.table.read(self.spark, SETTINGS_DDL)
 
     def all(self) -> dict[str, str]:
         return {r.key: r.value for r in self._df().collect()}
@@ -47,9 +45,7 @@ class Settings:
         return self.all().get(key)
 
     def _swap(self, df: DataFrame) -> None:
-        from kafka_journal_spark.sources.statestore import safe_dir_swap
-
-        safe_dir_swap(self.spark, self.path, df, coalesce=1)
+        self.table.commit_swap(self.table.stage(df, coalesce=1), None)
 
     def set(self, key: str, value: str, origin: str = "local") -> None:
         # timezone-AWARE UTC now: the column is TIMESTAMP (instant

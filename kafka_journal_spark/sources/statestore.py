@@ -27,10 +27,19 @@ Layout (mirrors SURVEY.md §1.3, designed for 100 TB):
   folded store pays nothing), and the maintenance pass
   (``fold_metajournal``, run by the replicator's ``maintain_every``)
   size-tiers deltas back into the band base with the same per-directory
-  manifest-swap protocol compaction uses (snapshot-isolated for readers —
-  see the manifest block in JournalStore).
+  manifest swap compaction uses.
 - ``pointers/``    — per-(topic,partition) replicated offsets, partitioned
   by ``topic``, ditto (a batch rewrites only its topics' partitions).
+
+Each table commits through one ``ManifestTable`` (``sources/manifest.py``):
+appends commit the files they created, rewrites stage into a sibling dir
+and swap fresh files in while the replaced ones retire behind the
+snapshot grace, and every read plans from the manifest's file list — so
+reads are snapshot-isolated under standing maintenance, and a crash
+before a manifest publish is invisible.  The store adds what only the
+journal needs on top: the cross-process ownership lease (fenced before
+every token write), the catalog epochs, the dirty-band and delta-seq
+tokens, and ``pin_reads()``.
 
 The read path (``read()``) joins journal to metajournal (broadcast only
 under a key filter — an unfiltered head table is O(#keys) and AQE picks the
@@ -42,21 +51,18 @@ from the band files of the key's segment only (``metajournal_of_keys``),
 the parquet form of the reference's point read at (topic, segment, id):
 a plan over every band's files crosses Spark's 32-path parallel-listing
 threshold, so each lookup used to start a file-listing job with one task
-per band and then read every band's footer (see ``_read``).
+per band and then read every band's footer (see ``ManifestTable.read``).
 """
 
 from __future__ import annotations
 
 import contextlib
-import itertools
 import json
 import math
 import os
 import shutil
-import threading
 import time
 import uuid
-import weakref
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,6 +71,16 @@ from pyspark.sql import functions as F
 from kafka_journal_spark import SEGMENTS_DEFAULT
 from kafka_journal_spark.operators.replicate import segment_of
 from kafka_journal_spark.session import local_frame
+from kafka_journal_spark.sources.manifest import (
+    RETIRE_GRACE_S,
+    ManifestTable,
+    _register_snapshot,
+    _release_snapshot,
+    _root_lock,
+    _walk_parquet,
+    read_token,
+    write_token,
+)
 
 
 @dataclass(frozen=True)
@@ -142,36 +158,6 @@ WIDE_BATCH_BAND_FRACTION = 0.5
 #: maintenance call never degenerates into a full fold of every dirty band
 META_FOLD_TIER = 8
 
-#: how long a superseded (retired) data file stays on disk after a swap
-#: replaced it in the manifest, in seconds.  This is the store's snapshot
-#: retention: a reader plans against the manifest's file list, and any
-#: file that list names is guaranteed to exist for at least this long
-#: after a later swap retires it — so a racing read's plan→scan gap is
-#: safe as long as it is shorter than the grace (the same contract as
-#: Delta Lake's VACUUM retention; theirs defaults to 7 days).
-#:
-#: SIZING RULE: the grace must exceed the worst-case wall between a read
-#: PLANNING (manifest load) and the scan's last byte, times a safety
-#: factor.  Local-mode plans materialize in seconds; the sf100-projection
-#: probes measured single-operator scans of 100–400 s — hence a 15-minute
-#: default (~2x that worst case) rather than the earlier 60 s, which a
-#: long scan under standing maintenance could outlive.  Deployments with
-#: longer analytic scans should raise it (`retire_grace_s=`) toward
-#: Delta's days-scale retention — the only cost is retired bytes on disk.
-#:
-#: Two belts close the window beyond the grace:
-#: - IN-PROCESS, vacuum never reaps a file referenced by a registered
-#:   read snapshot: every manifest read registers its file list for as
-#:   long as the returned DataFrame object is referenced (weakref-scoped),
-#:   and ``pin_reads()`` pins all tables' current snapshots for a whole
-#:   block of derived-plan work (see ``_register_snapshot``);
-#: - CROSS-PROCESS, manifest-planned scans run with
-#:   ``ignoreMissingFiles=false``, so a foreign vacuum racing past the
-#:   grace makes the scan FAIL LOUDLY instead of silently dropping rows
-#:   (only legacy directory-listing reads keep ignoreMissingFiles, where
-#:   the listing itself is already racy).
-RETIRE_GRACE_S = 900.0
-
 #: ownership lease TTL: a foreign owner whose heartbeat (lockfile mtime)
 #: is older than this AND whose liveness cannot be confirmed is considered
 #: crashed, and a new claimant takes the store over.  On the same host a
@@ -200,16 +186,6 @@ OWNER_TTL_S = 300.0
 #: interleave a maintenance fold into another instance's batch window.
 _PROCESS_TOKEN = uuid.uuid4().hex
 
-_ROOT_LOCKS: dict[str, threading.RLock] = {}
-_ROOT_LOCKS_GUARD = threading.Lock()
-
-
-def _root_lock(root: str) -> threading.RLock:
-    key = os.path.realpath(root)
-    with _ROOT_LOCKS_GUARD:
-        return _ROOT_LOCKS.setdefault(key, threading.RLock())
-
-
 def _proc_started(pid: int) -> int | None:
     """Kernel start time of ``pid`` (clock ticks since boot, field 22 of
     ``/proc/<pid>/stat``) — the identity that distinguishes a crashed
@@ -225,58 +201,6 @@ def _proc_started(pid: int) -> int | None:
         return None
 
 
-#: in-process read-snapshot registry: (realpath(root), table) -> snap_id ->
-#: frozenset of manifest-relative file paths some live read plan references.
-#: ``_vacuum`` never reaps a retired file named by a registered snapshot —
-#: the in-process belt that lets a scan outlive ``retire_grace_s`` under
-#: standing maintenance (see RETIRE_GRACE_S).  Entries are released by the
-#: reader DataFrame's weakref finalizer or by ``pin_reads()`` exit.
-_ACTIVE_SNAPSHOTS: dict[tuple[str, str], dict[int, frozenset[str]]] = {}
-_ACTIVE_SNAPSHOTS_GUARD = threading.Lock()
-_SNAP_COUNTER = itertools.count(1)
-
-
-def _register_snapshot(root: str, table: str, files) -> int:
-    snap_id = next(_SNAP_COUNTER)
-    key = (os.path.realpath(root), table)
-    with _ACTIVE_SNAPSHOTS_GUARD:
-        _ACTIVE_SNAPSHOTS.setdefault(key, {})[snap_id] = frozenset(files)
-    return snap_id
-
-
-def _release_snapshot(root: str, table: str, snap_id: int) -> None:
-    key = (os.path.realpath(root), table)
-    with _ACTIVE_SNAPSHOTS_GUARD:
-        reg = _ACTIVE_SNAPSHOTS.get(key)
-        if reg is not None:
-            reg.pop(snap_id, None)
-            if not reg:
-                _ACTIVE_SNAPSHOTS.pop(key, None)
-
-
-def _snapshot_referenced(root: str, table: str) -> frozenset[str]:
-    key = (os.path.realpath(root), table)
-    with _ACTIVE_SNAPSHOTS_GUARD:
-        reg = _ACTIVE_SNAPSHOTS.get(key)
-        if not reg:
-            return frozenset()
-        out: set[str] = set()
-        for files in reg.values():
-            out |= files
-        return frozenset(out)
-
-
-def _maybe_crash(point: str) -> None:
-    """Test-only crash injection: when ``KJS_STORE_CRASH`` names this
-    point, die HARD (no atexit, no finally — the closest a test can get
-    to a power cut) so ``tests/test_manifest_crash.py`` can prove the
-    manifest protocol's claim that a crash between a mutation's file
-    writes and its manifest publish is physically invisible to readers.
-    One dict lookup when unset."""
-    if os.environ.get("KJS_STORE_CRASH") == point:
-        os._exit(137)
-
-
 class StoreOwnershipError(RuntimeError):
     """Another live process owns this store root for writing.
 
@@ -287,106 +211,6 @@ class StoreOwnershipError(RuntimeError):
     PROCESSES on one store root would silently re-create the
     append-vs-maintenance orphan drop the in-process mutation lock closed,
     so the store fails the second writer loudly instead."""
-
-
-def _repair_dir(final: str) -> None:
-    """Restore a table whose last swap crashed between rename-aside and
-    promote: the live dir is missing but its ``.bak`` survives.  Bak names
-    embed a monotonic nanosecond timestamp and the tie-break is CONTENT
-    modification time (rename preserves it), so the NEWEST state is
-    restored even if an old-format (uuid-named) bak from a prior version
-    lingers — a lexicographic sort alone would let a hex name outrank a
-    numeric timestamp and resurrect ancient state.  When the live dir
-    exists, lingering ``.bak`` dirs are garbage from a crashed post-promote
-    cleanup — dropped here so a later mid-swap crash cannot resurrect
-    state from many swaps ago."""
-    import glob
-
-    baks = glob.glob(f"{final}.*.bak")
-    if not os.path.exists(final) and baks:
-        def _age(p: str) -> tuple:
-            try:
-                mt = max(
-                    (os.path.getmtime(os.path.join(root, f)) for root, _, fs in os.walk(p) for f in fs),
-                    default=os.path.getmtime(p),
-                )
-            except OSError:
-                mt = 0.0
-            return (mt, p)
-
-        baks.sort(key=_age)
-        os.replace(baks.pop(), final)
-    if os.path.exists(final):
-        for b in baks:
-            shutil.rmtree(b, ignore_errors=True)
-
-
-def _repair_partition_baks(root: str) -> None:
-    """Per-partition swap recovery: the incremental ``compact()`` swaps
-    individual ``topic=X`` directories with the same rename-aside protocol
-    as whole-table swaps (bak name ``topic=X.<ns>.bak``), so a crash
-    mid-swap is repaired dir-by-dir on the next open.  ``rsplit`` from the
-    right keeps topics containing dots safe."""
-    import glob
-
-    finals = {
-        b.rsplit(".", 2)[0] for b in glob.glob(os.path.join(root, "*=*.*.bak"))
-    }
-    for final in finals:
-        _repair_dir(final)
-
-
-def safe_dir_swap(
-    spark: SparkSession,
-    final: str,
-    df: DataFrame,
-    *,
-    coalesce: int | None = None,
-    sort_cols: list[str] | None = None,
-    partition_by: list[str] | None = None,
-    max_records: int = 4_000_000,
-) -> None:
-    """Crash-safe full-table replacement for the SMALL single-dir tables
-    (settings KV, snapshot store, head-snapshot cache — point-read tables
-    whose swap-vs-read races are closed by their owners): write tmp,
-    rename the live dir ASIDE (never rmtree first), promote tmp, then drop
-    the ``.bak``.  A crash at any point leaves either the old table live
-    or recoverable from ``.bak`` (``_repair_dir`` restores it on the next
-    open) — there is no window where the data exists nowhere on disk.
-    The JOURNAL STORE's tables no longer use this: their readers race
-    standing maintenance, so they get the manifest-swap protocol
-    (snapshot-isolated; see JournalStore's manifest block) instead.
-
-    The write parallelism is size-aware, not hard-coded: ``sort_cols``
-    triggers a range repartition that AQE coalesces to a handful of tasks
-    when the table is small and spreads over the shuffle-partition count
-    when it is not (a ``coalesce(1)`` would funnel 100 TB-scale metadata
-    through one task — only tiny fixed-size tables pass ``coalesce``).
-    """
-    import glob
-    import time
-
-    _repair_dir(final)
-    # a crashed earlier swap may have left an orphan .tmp — writer-side
-    # cleanup (single-owner writes; readers never touch .tmp dirs)
-    for t in glob.glob(f"{final}.*.tmp"):
-        shutil.rmtree(t, ignore_errors=True)
-    w = df
-    if coalesce is not None:
-        w = w.coalesce(coalesce)
-    elif sort_cols:
-        w = w.repartitionByRange(*sort_cols)
-    tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
-    writer = w.write.mode("overwrite").option("maxRecordsPerFile", max_records)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    bak = f"{final}.{time.time_ns():020d}.bak"
-    if os.path.exists(final):
-        os.replace(final, bak)
-    os.replace(tmp, final)
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
 
 
 def _locked(fn):
@@ -439,9 +263,12 @@ class JournalStore:
         self.catalog = catalog
         self.buckets = buckets
         self.meta_bands = meta_bands
-        #: snapshot retention for superseded files (see RETIRE_GRACE_S);
-        #: tests that pin physical file counts set 0 (retired files are
-        #: then reaped at the end of the mutation that retired them)
+        #: the three tables, each committed through its manifest; every
+        #: token write of theirs is fenced by this process's lease
+        self.tables = {
+            t: ManifestTable(root, t, fence=self._fence_lease)
+            for t in ("journal", "metajournal", "pointers")
+        }
         self.retire_grace_s = retire_grace_s
         self.owner_ttl_s = owner_ttl_s
         #: serializes MUTATIONS (replication batches vs maintenance —
@@ -451,7 +278,7 @@ class JournalStore:
         #: appended rows as orphans (their heads haven't advanced yet) —
         #: caught by the multi-topic concurrent soak.  READERS never take
         #: it: the manifest protocol gives them snapshot isolation with no
-        #: coordination (see the manifest block).  The lock is PER ROOT,
+        #: coordination (see sources/manifest.py).  The lock is PER ROOT,
         #: not per instance, so two JournalStore objects over one root in
         #: one process cannot interleave either.  Cross-PROCESS mutual
         #: exclusion is the _owner.lock lease (``_assert_ownership``) —
@@ -460,6 +287,19 @@ class JournalStore:
         #: CassandraSync takes a distributed lock for schema work).
         self.mutation_lock = _root_lock(root)
         os.makedirs(root, exist_ok=True)
+
+    @property
+    def retire_grace_s(self) -> float:
+        """Snapshot retention for superseded files (see RETIRE_GRACE_S),
+        shared by the three tables; tests that pin physical file counts
+        set 0 (retired files are then reaped at the end of the mutation
+        that retired them)."""
+        return self.tables["journal"].retire_grace_s
+
+    @retire_grace_s.setter
+    def retire_grace_s(self, value: float) -> None:
+        for t in self.tables.values():
+            t.retire_grace_s = value
 
     def _seg_band(self):
         return F.pmod(F.col("segment"), F.lit(self.meta_bands))
@@ -478,11 +318,7 @@ class JournalStore:
     # to the same root invalidates THIS instance's catalog snapshot too.
 
     def _read_token(self, name: str) -> str:
-        try:
-            with open(self._path(name)) as f:
-                return f.read().strip()
-        except OSError:
-            return ""
+        return read_token(self._path(name)) or ""
 
     def _fence_lease(self) -> None:
         """Raise if ANOTHER process's lease is on the root — the fencing
@@ -510,26 +346,10 @@ class JournalStore:
             )
 
     def _write_token(self, name: str, value: str) -> None:
-        """Atomic, DURABLE token publish: fsync the temp file before the
-        rename (a power loss can otherwise surface a zero-length token at
-        the final name — os.replace is atomic in the namespace, not for
-        unflushed data pages) and fsync the directory after it so the
-        rename itself survives; fenced against lease takeover."""
+        """Durable atomic token publish (``manifest.write_token``), fenced
+        against lease takeover."""
         self._fence_lease()
-        tmp = self._path(f"{name}.{uuid.uuid4().hex[:8]}.tok")
-        with open(tmp, "w") as f:
-            f.write(value)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self._path(name))
-        try:
-            dfd = os.open(self.root, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        except OSError:
-            pass  # platforms/filesystems without directory fsync
+        write_token(self._path(name), value)
 
     def _mark_stale(self, topics: list[str] | None = None) -> None:
         """Stamp a fresh store epoch AND record which topics the write
@@ -557,8 +377,6 @@ class JournalStore:
         mutation with the canonical ownership error before any state
         (even a token) changes."""
         self._assert_ownership()
-        import json
-
         cur = self._read_token("_catalog_dirty")
         if topics is None:
             val = "*"
@@ -576,8 +394,6 @@ class JournalStore:
     def _dirty_catalog_topics(self) -> list[str] | None:
         """Topics written since the last catalog publication, or ``None``
         when the scope is unknown (full republish required)."""
-        import json
-
         tok = self._read_token("_catalog_dirty")
         if not tok or tok == "*":
             return None
@@ -604,8 +420,6 @@ class JournalStore:
         self._write_token("_meta_dirty", ",".join(str(b) for b in sorted(bands)))
 
     def _next_delta_seq(self) -> int:
-        import time
-
         last = int(self._read_token("_meta_delta_seq") or 0)
         seq = max(time.time_ns(), last + 1)
         self._write_token("_meta_delta_seq", str(seq))
@@ -730,231 +544,22 @@ class JournalStore:
         except (OSError, ValueError):
             pass
 
-    # -- manifest: snapshot-isolated file listings --------------------------
+    # -- manifest commits ----------------------------------------------------
     #
-    # Each big table (journal / metajournal / pointers) is read through a
-    # MANIFEST — one atomically-replaced token (``_manifest_<table>``)
-    # naming exactly the live data files — instead of a directory listing.
-    # This is the Delta-Lake/Iceberg commit model in miniature, and it is
-    # what makes store reads SNAPSHOT-ISOLATED under standing mutation:
-    #
-    # - a swap (fold / compaction / band rewrite) never renames or deletes
-    #   a path a reader could have listed: it moves fresh files INTO the
-    #   live directory, then atomically publishes a manifest that names
-    #   the fresh files and RETIRES the replaced ones.  Retired files stay
-    #   on disk for ``retire_grace_s`` before vacuum removes them, so a
-    #   read planned against the old manifest scans a complete,
-    #   point-in-time-consistent snapshot — the rename-aside protocol this
-    #   replaces could yank every listed file of a directory between a
-    #   racing read's listing and its scan (observed as a FileScanRDD
-    #   abort, or as a silently-empty scan under ignoreMissingFiles).
-    # - a crash mid-swap is invisible: the manifest still names the old
-    #   files (the swap never happened); half-moved fresh files are
-    #   unreferenced orphans that vacuum reaps by age.  A crash mid-APPEND
-    #   is likewise invisible — the batch's files are not in the manifest,
-    #   so its replay cannot double rows even physically.
-    # - at 100 TB this is not an optimization but the only correct shape:
-    #   object stores have no atomic directory rename at all, and an
-    #   O(files) listing per read is the cost Delta's checkpointed log
-    #   exists to amortize.  The manifest is that log folded to one token;
-    #   the append path's listing diff would become a commit-protocol hook
-    #   on a real deployment (documented, not needed at this file count).
-    #
-    # Stores written by older protocol versions have no manifest token:
-    # reads fall back to the directory listing (with ignoreMissingFiles),
-    # and the first mutation adopts the current files as the initial
-    # manifest after running the legacy .bak crash repairs.
-
-    @staticmethod
-    def _walk_parquet(root: str) -> set[str]:
-        """Relative paths of every parquet data file under ``root``,
-        skipping legacy rename-aside leftovers (``*.bak`` partition dirs)."""
-        out: set[str] = set()
-        if not os.path.isdir(root):
-            return out
-        for r, dirs, fs in os.walk(root):
-            dirs[:] = [d for d in dirs if not d.endswith((".bak", ".tmp"))]
-            for f in fs:
-                if f.endswith(".parquet"):
-                    out.add(os.path.relpath(os.path.join(r, f), root))
-        return out
-
-    def _load_manifest(self, table: str):
-        """(live files, retired {file: retired_at_ns}) or None when the
-        store predates the manifest protocol (legacy directory reads).
-
-        A manifest token that EXISTS but does not parse is treated as
-        legacy too — reads fall back to the directory listing and the
-        next mutation's ``_ensure_manifest`` adopts the walk as a fresh
-        manifest (repair).  ``_write_token`` fsyncs before its atomic
-        rename, so a power loss cannot tear the token — this branch
-        guards external corruption (manual edits, foreign tooling), where
-        a best-effort degraded read beats every read raising forever.
-        The degraded read may see retired-but-ungraced duplicates of
-        swapped files; the warning says so."""
-        raw = self._read_token(f"_manifest_{table}")
-        if not raw:
-            return None
-        try:
-            doc = json.loads(raw)
-            return list(doc.get("files", [])), dict(doc.get("retired", {}))
-        except ValueError:
-            import warnings
-
-            warnings.warn(
-                f"manifest token _manifest_{table} in {self.root!r} is "
-                f"corrupt — falling back to directory listing (may "
-                f"double-read files retired within the grace); the next "
-                f"mutation repairs the manifest from the walk + the "
-                f".prev safety net (known-retired files stay retired)",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return None
-
-    def _save_manifest(self, table, files, retired) -> None:
-        # preserve the manifest being superseded as `.prev` FIRST: the
-        # last-known-good safety net `_ensure_manifest` repairs from when
-        # the main token is externally corrupted.  Only a parseable
-        # current token is preserved (prev must always be a GOOD
-        # manifest); the extra small-token fsync is noise next to the
-        # Spark write every mutation just did.
-        cur = self._read_token(f"_manifest_{table}")
-        if cur:
-            try:
-                json.loads(cur)
-            except ValueError:
-                pass
-            else:
-                self._write_token(f"_manifest_{table}.prev", cur)
-        self._write_token(
-            f"_manifest_{table}",
-            json.dumps(
-                {"files": sorted(files), "retired": retired},
-                separators=(",", ":"),
-            ),
-        )
-
-    def _load_prev_manifest(self, table: str):
-        """The `.prev` safety-net token (the manifest the last
-        ``_save_manifest`` superseded), or None — parsed with the same
-        shape as ``_load_manifest`` but silently (it is only consulted
-        during corrupt-token repair)."""
-        raw = self._read_token(f"_manifest_{table}.prev")
-        if not raw:
-            return None
-        try:
-            doc = json.loads(raw)
-            return list(doc.get("files", [])), dict(doc.get("retired", {}))
-        except ValueError:
-            return None
-
-    def _ensure_manifest(self, table: str):
-        """Adopt a legacy store's current directory contents as the initial
-        manifest (after the legacy crash repairs), first mutation only.
-
-        When the main token EXISTS but does not parse (external corruption
-        — our own writes are fsynced pre-rename), a blind walk-adoption
-        would resurrect retired-within-grace swap duplicates and crash
-        orphans as permanently live files.  The `.prev` token (last GOOD
-        superseded manifest) restores what is provable: walked files it
-        lists as retired re-enter the repaired manifest RETIRED (original
-        timestamps — vacuum still reaps them on schedule), not live.
-        Files newer than `.prev` (the one mutation between it and the
-        corrupt token, or orphans of a crash inside that window) are
-        indistinguishable from committed appends and are adopted live —
-        no data loss, at worst one mutation's worth of swap duplicates,
-        loudly warned."""
-        man = self._load_manifest(table)
-        if man is not None:
-            return man
-        p = self._path(table)
-        _repair_dir(p)
-        _repair_partition_baks(p)
-        walk = sorted(self._walk_parquet(p))
-        retired: dict[str, int] = {}
-        if os.path.exists(self._path(f"_manifest_{table}")):
-            prev = self._load_prev_manifest(table)
-            if prev is not None:
-                walked = set(walk)
-                retired = {
-                    f: ts for f, ts in prev[1].items() if f in walked
-                }
-                walk = [f for f in walk if f not in retired]
-            import warnings
-
-            warnings.warn(
-                f"manifest token _manifest_{table} in {self.root!r} was "
-                f"corrupt — repaired from the directory walk"
-                + (
-                    f" with {len(retired)} known-retired file(s) kept "
-                    f"retired via the .prev manifest"
-                    if retired
-                    else " (no usable .prev manifest — files retired "
-                    "within the grace may have been re-adopted live; "
-                    "compact() the affected topics to restore "
-                    "single-copy reads)"
-                ),
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        files = walk
-        self._save_manifest(table, files, retired)
-        return files, retired
+    # Each table commits through its ManifestTable (``self.tables``, see
+    # sources/manifest.py for the protocol).  The store asserts its
+    # cross-process lease before a commit, and the tables fence every
+    # token write against a takeover while the commit is in flight.
 
     def _commit_append(self, table: str, write_fn) -> None:
-        """Run an append-mode Spark write against the table directory and
-        commit exactly the files it created into the manifest (diff of the
-        directory walk around the write — pre-existing crash orphans stay
-        unreferenced and are reaped by vacuum, never adopted)."""
         with self.mutation_lock:
             self._assert_ownership()
-            files, retired = self._ensure_manifest(table)
-            p = self._path(table)
-            before = self._walk_parquet(p)
-            write_fn()
-            _maybe_crash(f"append_precommit_{table}")
-            new = self._walk_parquet(p) - before
-            self._save_manifest(table, set(files) | new, retired)
-            self._vacuum(table)
+            self.tables[table].commit_append(write_fn)
 
     def _commit_swap(self, table: str, tmp: str, scope: set[str] | None) -> None:
-        """Promote a staged rewrite: move ``tmp``'s parquet files into the
-        live directory (fresh unique names — no listed path is ever
-        touched), then atomically publish a manifest in which the fresh
-        files replace the live files whose first path segment (the
-        partition directory) is in ``scope`` (None = whole table).
-        Replaced files are retired, not deleted — vacuum removes them
-        after ``retire_grace_s`` so racing readers' snapshots stay whole."""
         with self.mutation_lock:
             self._assert_ownership()
-            files, retired = self._ensure_manifest(table)
-            p = self._path(table)
-            os.makedirs(p, exist_ok=True)
-            moved: list[str] = []
-            for rel in sorted(self._walk_parquet(tmp)):
-                dst_rel = rel
-                dst = os.path.join(p, dst_rel)
-                if os.path.exists(dst):  # part names carry a per-job UUID;
-                    d, b = os.path.split(rel)  # collisions are theoretical
-                    dst_rel = os.path.join(d, f"{uuid.uuid4().hex[:8]}-{b}")
-                    dst = os.path.join(p, dst_rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(os.path.join(tmp, rel), dst)
-                moved.append(dst_rel)
-            shutil.rmtree(tmp, ignore_errors=True)
-            now = time.time_ns()
-
-            def _in_scope(rel: str) -> bool:
-                return scope is None or rel.split(os.sep, 1)[0] in scope
-
-            _maybe_crash(f"swap_precommit_{table}")
-            keep = [f for f in files if not _in_scope(f)]
-            for f in files:
-                if _in_scope(f):
-                    retired[f] = now
-            self._save_manifest(table, set(keep) | set(moved), retired)
-            self._vacuum(table)
+            self.tables[table].commit_swap(tmp, scope)
 
     @contextlib.contextmanager
     def pin_reads(self):
@@ -964,105 +569,16 @@ class JournalStore:
         keep the base DataFrame object alive, so its weakref-scoped
         registration can lapse before the scan runs).  Cross-process
         protection stays the retire grace; beyond it a foreign vacuum
-        makes the scan fail loudly (see ``_read``)."""
-        pins: list[tuple[str, int]] = []
-        for table in ("journal", "metajournal", "pointers"):
-            man = self._load_manifest(table)
-            if man is not None:
-                pins.append(
-                    (table, _register_snapshot(self.root, table, man[0]))
-                )
+        makes the scan fail loudly (see ``ManifestTable.read``)."""
+        pins = [
+            (t, _register_snapshot(t.root, t.name, t.load()[0]))
+            for t in self.tables.values()
+        ]
         try:
             yield self
         finally:
-            for table, snap_id in pins:
-                _release_snapshot(self.root, table, snap_id)
-
-    def _vacuum(self, table: str) -> None:
-        """Reap (a) retired files whose grace elapsed AND no registered
-        in-process read snapshot still references (see RETIRE_GRACE_S)
-        and (b) unreferenced crash orphans older than the grace
-        (half-moved swap output, files of an append whose manifest commit
-        never ran — both invisible to every reader by construction), then
-        drop emptied partition dirs.  Runs at the end of every mutation;
-        O(files) metadata, no data."""
-        with self.mutation_lock:
-            man = self._load_manifest(table)
-            if man is None:
-                return
-            files, retired = man
-            p = self._path(table)
-            now = time.time_ns()
-            grace_ns = int(self.retire_grace_s * 1e9)
-            pinned = _snapshot_referenced(self.root, table)
-            gone = [
-                f
-                for f, ts in retired.items()
-                if now - int(ts) >= grace_ns and f not in pinned
-            ]
-            for f in gone:
-                try:
-                    os.remove(os.path.join(p, f))
-                except OSError:
-                    pass
-                retired.pop(f, None)
-            live = set(files)
-            for rel in self._walk_parquet(p):
-                if rel in live or rel in retired:
-                    continue
-                fp = os.path.join(p, rel)
-                try:
-                    if now - os.stat(fp).st_mtime_ns >= grace_ns:
-                        os.remove(fp)
-                except OSError:
-                    pass
-            if gone:
-                self._save_manifest(table, files, retired)
-            # drop directories the reaping emptied (pure listing hygiene —
-            # readers never list directories on the manifest path)
-            for r, dirs, fs in os.walk(p, topdown=False):
-                if r != p and not dirs and not fs:
-                    try:
-                        os.rmdir(r)
-                    except OSError:
-                        pass
-
-    def _live_files(self, table: str) -> set[str] | None:
-        """Manifest-live relative paths, or None for a legacy store."""
-        man = self._load_manifest(table)
-        return None if man is None else set(man[0])
-
-    def _stage(
-        self,
-        table: str,
-        df: DataFrame,
-        *,
-        coalesce: int | None = None,
-        sort_cols: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        max_records: int = 4_000_000,
-    ) -> str:
-        """Materialize a rewrite into a sibling ``.tmp`` staging dir (the
-        write side of ``_commit_swap``; same size-aware parallelism policy
-        as the legacy ``safe_dir_swap``).  Sweeps staging dirs a crashed
-        earlier swap left behind — their half-moved output is already
-        invisible (unreferenced) and vacuum ages it out."""
-        import glob
-
-        final = self._path(table)
-        for t in glob.glob(f"{final}.*.tmp"):
-            shutil.rmtree(t, ignore_errors=True)
-        w = df
-        if coalesce is not None:
-            w = w.coalesce(coalesce)
-        elif sort_cols:
-            w = w.repartitionByRange(*sort_cols)
-        tmp = f"{final}.{uuid.uuid4().hex[:8]}.tmp"
-        writer = w.write.mode("overwrite").option("maxRecordsPerFile", max_records)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        return tmp
+            for t, snap_id in pins:
+                _release_snapshot(t.root, t.name, snap_id)
 
     @property
     def _catalog_live(self) -> bool:
@@ -1082,69 +598,8 @@ class JournalStore:
             return False
         return True
 
-    def _read(
-        self, name: str, ddl: str, parts: set[str] | None = None
-    ) -> DataFrame:
-        """Snapshot read: plan against the manifest's explicit file list
-        (point-in-time-consistent — see the manifest block above), with
-        ``basePath`` preserving the hive partition columns and their
-        pruning.
-
-        ``parts`` narrows the plan to the manifest files whose partition
-        directory (first path segment, e.g. ``seg_band=17``) is in the set
-        — single-key head lookups plan from the key's one band.  This is
-        not just partition pruning done early: ``spark.read.parquet`` over
-        more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
-        (32) paths lists them with a Spark job (one task per path) before
-        any filter can prune, so a lookup planned from all of a
-        metajournal's ~128–256 band files paid a listing job and footer
-        reads for every band; a one-band plan lists on the driver and
-        scans one band.  Only the files planned are registered.  Legacy
-        directory-listed stores ignore ``parts`` (the caller's partition
-        filter still prunes them).
-
-        Two guarantees close the beyond-grace window (RETIRE_GRACE_S):
-        the snapshot's file list is REGISTERED against this process's
-        vacuum for as long as the returned DataFrame object lives
-        (weakref-scoped — hold the frame, or a ``pin_reads()`` block, for
-        long derived-plan work), and the scan runs with
-        ``ignoreMissingFiles=false`` so a FOREIGN process vacuuming past
-        the grace makes this scan raise instead of silently dropping a
-        file's rows.  Legacy directory-listed stores keep
-        ignoreMissingFiles=true — their listing is inherently racy under
-        a concurrent legacy swap and predates the snapshot contract."""
-        p = self._path(name)
-        man = self._load_manifest(name)
-        if man is not None:
-            files, _ = man
-            if parts is not None:
-                files = [f for f in files if f.split(os.sep, 1)[0] in parts]
-            if not files:
-                return local_frame(self.spark, [], ddl)
-            df = (
-                self.spark.read.schema(ddl)
-                .option("basePath", p)
-                .option("ignoreMissingFiles", "false")
-                .parquet(*[os.path.join(p, f) for f in files])
-            )
-            snap_id = _register_snapshot(self.root, name, files)
-            weakref.finalize(df, _release_snapshot, self.root, name, snap_id)
-            return df
-        # legacy / foreign store: directory listing + crash repair
-        _repair_dir(p)
-        _repair_partition_baks(p)
-        if os.path.exists(p) and any(
-            f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs
-        ):
-            return (
-                self.spark.read.schema(ddl)
-                .option("ignoreMissingFiles", "true")
-                .parquet(p)
-            )
-        return local_frame(self.spark, [], ddl)
-
     def journal(self) -> DataFrame:
-        return self._read("journal", JOURNAL_SCHEMA_DDL)
+        return self.tables["journal"].read(self.spark, JOURNAL_SCHEMA_DDL)
 
     def _metajournal_phys(self, bands: list[int] | None = None) -> DataFrame:
         """Head table WITH its physical band partition column and the
@@ -1153,8 +608,8 @@ class JournalStore:
         ``delta_seq``/``deleted`` physically — the explicit read schema
         surfaces them as NULL, which the resolver orders last / treats as
         live, so pre-delta stores read unchanged."""
-        return self._read(
-            "metajournal",
+        return self.tables["metajournal"].read(
+            self.spark,
             META_SCHEMA_DDL + ", seg_band long, delta_seq long, deleted boolean",
             None if bands is None else {f"seg_band={int(b)}" for b in bands},
         )
@@ -1170,8 +625,7 @@ class JournalStore:
         the merge-on-read tax is O(dirty-band rows), never O(#keys) — and
         zero on a fully folded store.  Keeps ``seg_band``.  ``bands`` plans
         from those bands' files only; the ``seg_band`` filter stays so the
-        scan still reports its PartitionFilters (and prunes legacy
-        directory-listed stores)."""
+        scan still reports its PartitionFilters."""
         df = self._metajournal_phys(bands)
         if bands is not None:
             df = df.filter(F.col("seg_band").isin(bands))
@@ -1209,7 +663,7 @@ class JournalStore:
         return self._resolved_meta().drop("seg_band")
 
     def pointers(self) -> DataFrame:
-        return self._read("pointers", POINTERS_SCHEMA_DDL)
+        return self.tables["pointers"].read(self.spark, POINTERS_SCHEMA_DDL)
 
     # -- writers -----------------------------------------------------------
 
@@ -1231,8 +685,7 @@ class JournalStore:
         """Full head-table rewrite (initial materialization / compaction) —
         same band-partitioned layout as the incremental path."""
         self._mark_stale()  # pre-write: crash safety
-        tmp = self._stage(
-            "metajournal",
+        tmp = self.tables["metajournal"].stage(
             df.withColumn("seg_band", self._seg_band()),
             sort_cols=["seg_band", "segment", "topic", "id"],
             partition_by=["seg_band"],
@@ -1245,8 +698,7 @@ class JournalStore:
         self._mark_stale()  # post-write: concurrent-publication safety
 
     def swap_pointers(self, df: DataFrame) -> None:
-        tmp = self._stage(
-            "pointers",
+        tmp = self.tables["pointers"].stage(
             df,
             sort_cols=["topic", "partition"],
             partition_by=["topic"],
@@ -1272,9 +724,9 @@ class JournalStore:
         (``segment_of``, the driver-side twin of the replicator's
         ``meta_segment``) — a superset of the keys' heads; callers filter
         by (topic, id).  A point lookup thus plans from its key's one band
-        file set instead of the whole table (see ``_read``).  When any key
-        is not ASCII its segment cannot be computed on the driver with
-        certainty, and the whole table is read instead."""
+        file set instead of the whole table (see ``ManifestTable.read``).
+        When any key is not ASCII its segment cannot be computed on the
+        driver with certainty, and the whole table is read instead."""
         segs = {segment_of(k, SEGMENTS_DEFAULT) for k in keys}
         if None in segs:
             return self.metajournal()
@@ -1323,8 +775,6 @@ class JournalStore:
         load, BASELINE.md r7) — so bulk batches fold as they land and
         leave the store clean."""
         path = self._path("metajournal")
-        _repair_dir(path)
-        _repair_partition_baks(path)
         bands = self._bands_of(touched_segments)
         if len(bands) >= max(2, math.ceil(WIDE_BATCH_BAND_FRACTION * self.meta_bands)):
             self._upsert_metajournal_wide(df, bands, topics)
@@ -1390,10 +840,8 @@ class JournalStore:
         the snapshot grace (a band resolved to zero rows simply retires).
         Crash mid-swap leaves the manifest — and every reader — on the old
         snapshot; vacuum ages out the half-moved orphans."""
-        tmp = self._stage(
-            "metajournal",
+        tmp = self.tables["metajournal"].stage(
             resolved.repartitionByRange("seg_band", "segment", "topic", "id"),
-            sort_cols=None,
             partition_by=["seg_band"],
         )
         self._commit_swap(
@@ -1411,27 +859,13 @@ class JournalStore:
         keep resolving on read.  Cost is O(rows in folded bands); clean
         bands are untouched (file identity pinned in tests).  Returns the
         bands folded."""
-        import glob
-        import time
-
-        path = self._path("metajournal")
-        _repair_dir(path)
-        _repair_partition_baks(path)
         dirty = self._dirty_bands()
         if min_files is not None:
-            live = self._live_files("metajournal")
+            live = self.tables["metajournal"].live_files()
 
             def _nfiles(b: int) -> int:
                 prefix = f"seg_band={b}{os.sep}"
-                if live is not None:
-                    return sum(1 for f in live if f.startswith(prefix))
-                d = os.path.join(path, f"seg_band={b}")
-                return sum(
-                    1
-                    for _, _, fs in os.walk(d)
-                    for f in fs
-                    if f.endswith(".parquet")
-                )
+                return sum(1 for f in live if f.startswith(prefix))
 
             dirty = [b for b in dirty if _nfiles(b) >= min_files]
         if not dirty:
@@ -1449,13 +883,12 @@ class JournalStore:
         under a racing pointer read — the manifest swap retires them
         behind the snapshot grace instead, with identical scoping (only
         the staged topics' partitions are replaced)."""
-        tmp = self._stage(
-            "pointers",
+        tmp = self.tables["pointers"].stage(
             df,
             sort_cols=["topic", "partition"],
             partition_by=["topic"],
         )
-        scope = {f.split(os.sep, 1)[0] for f in self._walk_parquet(tmp)}
+        scope = {f.split(os.sep, 1)[0] for f in _walk_parquet(tmp)}
         self._commit_swap("pointers", tmp, scope)
 
     # -- bucketed catalog publication (sources/layout.py as the default) ---
@@ -1524,9 +957,7 @@ class JournalStore:
         dirty = self._dirty_catalog_topics()
         if dirty == [] and not self._catalog_live:
             dirty = None  # lost-mark signature: scope unknown, publish all
-        import json as _json
-
-        self._write_token("_catalog_dirty", _json.dumps([]))
+        self._write_token("_catalog_dirty", json.dumps([]))
         if dirty is not None and self._catalog_partial_ready():
             self._publish_catalog_topics(dirty)
         else:
@@ -1726,47 +1157,28 @@ class JournalStore:
         return rows[0].seq_nr if rows else None
 
     def _journal_file_stats(self) -> list[tuple]:
-        """Per-topic (n_files, total_bytes) from a filesystem walk of the
-        journal's ``topic=`` partition directories — O(#files) METADATA,
-        zero data read (the object-store listing a real deployment already
-        pays; at 100 TB this is the cheap signal that schedules
-        compaction, vs. the row-level debt which needs a scan)."""
+        """Per-topic (n_files, total_bytes) of the journal's LIVE manifest
+        files — O(#files) METADATA, zero data read (at 100 TB this is the
+        cheap signal that schedules compaction, vs. the row-level debt
+        which needs a scan).  Retired files awaiting vacuum are not
+        compaction debt: they're already compacted away from every
+        reader's snapshot."""
         from urllib.parse import unquote
 
         root = self._path("journal")
-        live = self._live_files("journal")
-        if live is not None:
-            # manifest store: count the LIVE files only (retired files
-            # awaiting vacuum are not compaction debt — they're already
-            # compacted away from every reader's snapshot)
-            agg: dict[str, list[int]] = {}
-            for rel in live:
-                top = rel.split(os.sep, 1)[0]
-                if not top.startswith("topic="):
-                    continue
-                t = unquote(top[len("topic="):])
-                a = agg.setdefault(t, [0, 0])
-                a[0] += 1
-                try:
-                    a[1] += os.path.getsize(os.path.join(root, rel))
-                except OSError:
-                    pass
-            return [(t, n, b) for t, (n, b) in sorted(agg.items())]
-        out = []
-        if os.path.isdir(root):
-            for entry in sorted(os.listdir(root)):
-                if not entry.startswith("topic=") or entry.endswith(
-                    (".bak", ".tmp")
-                ):
-                    continue
-                n, total = 0, 0
-                for r, _, fs in os.walk(os.path.join(root, entry)):
-                    for f in fs:
-                        if f.endswith(".parquet"):
-                            n += 1
-                            total += os.path.getsize(os.path.join(r, f))
-                out.append((unquote(entry[len("topic="):]), n, total))
-        return out
+        agg: dict[str, list[int]] = {}
+        for rel in self.tables["journal"].live_files():
+            top = rel.split(os.sep, 1)[0]
+            if not top.startswith("topic="):
+                continue
+            t = unquote(top[len("topic="):])
+            a = agg.setdefault(t, [0, 0])
+            a[0] += 1
+            try:
+                a[1] += os.path.getsize(os.path.join(root, rel))
+            except OSError:
+                pass
+        return [(t, n, b) for t, (n, b) in sorted(agg.items())]
 
     def health(self) -> DataFrame:
         """Per-topic store observability: physical journal rows vs rows a
@@ -1778,7 +1190,7 @@ class JournalStore:
         job to size-tier-merge long before row debt accumulates).  The
         numbers that size/schedule ``compact()`` and alert on debt at
         scale; every input is one aggregate over a table the store
-        already maintains or one filesystem listing."""
+        already maintains or one manifest read."""
         files = local_frame(
             self.spark,
             self._journal_file_stats(),
@@ -1828,35 +1240,16 @@ class JournalStore:
         """Per-band metajournal maintenance signal: physical file count
         and the dirty flag (un-folded deltas present) — what
         ``fold_metajournal(min_files=...)`` consults, surfaced as a
-        DataFrame for schedulers/dashboards.  Pure filesystem metadata
-        (one directory walk), zero data read — the O(#dirs) cost an
-        object-store listing already pays."""
-        path = self._path("metajournal")
+        DataFrame for schedulers/dashboards.  Pure metadata (one manifest
+        read), zero data read."""
         dirty = set(self._dirty_bands())
-        live = self._live_files("metajournal")
-        rows = []
-        if live is not None:
-            counts: dict[int, int] = {}
-            for rel in live:
-                top = rel.split(os.sep, 1)[0]
-                if top.startswith("seg_band="):
-                    b = int(top[len("seg_band="):])
-                    counts[b] = counts.get(b, 0) + 1
-            rows = [(b, n, b in dirty) for b, n in sorted(counts.items())]
-        elif os.path.isdir(path):
-            for entry in sorted(os.listdir(path)):
-                if not entry.startswith("seg_band=") or entry.endswith(
-                    (".bak", ".tmp")
-                ):
-                    continue
-                band = int(entry[len("seg_band="):])
-                n = sum(
-                    1
-                    for _, _, fs in os.walk(os.path.join(path, entry))
-                    for f in fs
-                    if f.endswith(".parquet")
-                )
-                rows.append((band, n, band in dirty))
+        counts: dict[int, int] = {}
+        for rel in self.tables["metajournal"].live_files():
+            top = rel.split(os.sep, 1)[0]
+            if top.startswith("seg_band="):
+                b = int(top[len("seg_band="):])
+                counts[b] = counts.get(b, 0) + 1
+        rows = [(b, n, b in dirty) for b, n in sorted(counts.items())]
         return local_frame(self.spark, rows, "band long, n_files long, dirty boolean")
 
     @_locked
@@ -1895,15 +1288,8 @@ class JournalStore:
         layout where one journal read touches a handful of row groups, not
         the whole topic.  Returns the topics actually compacted.
         """
-        import glob
         from urllib.parse import unquote
 
-        final = self._path("journal")
-        with self.mutation_lock:
-            self._ensure_manifest("journal")  # legacy adoption runs repairs
-        # a crashed earlier compaction may have left an orphan staging dir
-        for t in glob.glob(self._path("_journal.*.tmp")):
-            shutil.rmtree(t, ignore_errors=True)
         # compaction is the store's maintenance entry point, so it also
         # folds head deltas: full compaction folds every dirty band; the
         # health-driven form folds bands at a file-count tier — min_files
@@ -1935,26 +1321,20 @@ class JournalStore:
             return []
         # the isin filter prunes the scan to the selected partition dirs
         visible = self.read().filter(F.col("topic").isin(topics))
-        tmp = self._path(f"_journal.{uuid.uuid4().hex[:8]}.tmp")
-        (
-            visible.repartitionByRange("topic", "id", "seq_nr")
-            .sortWithinPartitions("topic", "id", "seq_nr")
-            .write.mode("overwrite")
-            .option("maxRecordsPerFile", 4_000_000)
-            .partitionBy("topic")
-            .parquet(tmp)
+        journal = self.tables["journal"]
+        tmp = journal.stage(
+            visible.repartitionByRange("topic", "id", "seq_nr").sortWithinPartitions(
+                "topic", "id", "seq_nr"
+            ),
+            partition_by=["topic"],
         )
         # manifest-swap per topic directory: names come from Spark's own
-        # partition path escaping on the tmp write; a selected topic with
-        # ZERO visible rows has no tmp dir and its live files simply
-        # retire.  Unselected topics' files are untouched (identity-pinned)
-        fresh_dirs = {
-            os.path.basename(p) for p in glob.glob(os.path.join(tmp, "topic=*"))
-        }
-        live_dirs = {
-            f.split(os.sep, 1)[0]
-            for f in (self._live_files("journal") or set())
-        }
+        # partition path escaping on the staged write; a selected topic
+        # with ZERO visible rows has no staged dir and its live files
+        # simply retire.  Unselected topics' files are untouched
+        # (identity-pinned)
+        fresh_dirs = {f.split(os.sep, 1)[0] for f in _walk_parquet(tmp)}
+        live_dirs = {f.split(os.sep, 1)[0] for f in journal.live_files()}
         sel = set(topics)
         targets = fresh_dirs | {
             d

@@ -412,8 +412,8 @@ def run_parquet_replicator(
     ``stop()``.  Readers concurrent with a standing replicator should use
     ``JournalConfig(clamp_to_head=True)`` for prefix-consistent reads
     (see the config docstring).  No session conf is required: store reads
-    are SNAPSHOT-ISOLATED by the manifest protocol (statestore.py,
-    "manifest" block) — maintenance retires replaced files behind a
+    are SNAPSHOT-ISOLATED by the manifest protocol (sources/manifest.py)
+    — maintenance retires replaced files behind a
     retention grace instead of renaming them away, so a read planned
     before a swap still scans its complete snapshot
     (``tests/test_snapshot_isolation.py`` pins both the deterministic

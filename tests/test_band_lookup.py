@@ -60,7 +60,7 @@ def _spark_jobs(spark):
 
 def _band_files(store: JournalStore, key: str) -> list[str]:
     band = f"seg_band={segment_of(key, SEGMENTS_DEFAULT) % store.meta_bands}"
-    return [f for f in store._live_files("metajournal") if f.split(os.sep, 1)[0] == band]
+    return [f for f in store.tables["metajournal"].live_files() if f.split(os.sep, 1)[0] == band]
 
 
 def _assert_pruned_equals_unpruned(store: JournalStore) -> None:
@@ -139,7 +139,7 @@ def test_point_lookup_is_one_job_of_one_task_over_wide_store(spark, tmp_path):
     store = JournalStore(spark, str(tmp_path / "wide"))
     keys = [f"key-{i:04d}" for i in range(400)]
     replicate_batch(make_actions(spark, [append(k, 1) for k in keys]), store)
-    assert len(store._live_files("metajournal")) > 32
+    assert len(store.tables["metajournal"].live_files()) > 32
     assert store._dirty_bands() == []  # the wide path leaves pure base
 
     for key in keys[:3]:

@@ -58,12 +58,12 @@ def test_client_calls_run_few_jobs_and_no_python_workers(spark, tmp_path, monkey
         assert build["jobs"] == 0, (horizon, build)
 
     store = c.store
-    live = {f.split("/", 1)[0] for f in store._live_files("metajournal")}
+    live = {f.split("/", 1)[0] for f in store.tables["metajournal"].live_files()}
     band = next(
         f"seg_band={b}" for b in range(store.meta_bands) if f"seg_band={b}" not in live
     )
     with _spark_jobs(spark) as absent:
-        assert store._read("metajournal", META_SCHEMA_DDL, {band}).collect() == []
+        assert store.tables["metajournal"].read(spark, META_SCHEMA_DDL, {band}).collect() == []
     assert absent["tasks"] == 0, absent
     # the same holds end to end for a key whose band holds no file
     key = next(

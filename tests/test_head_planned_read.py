@@ -104,3 +104,11 @@ def test_snapshot_staleness_survives_out_of_band_writers(spark, tmp_path):
     other.append("t", "a", ["a2"])  # c's instance cache knows nothing
     assert c._snapshot_head("t", "a") is None  # stat signature flipped
     assert c.read("t", "a") == [(1, "a1"), (2, "a2")]  # fold fallback
+
+    # an out-of-band replicate moves only the pointers, which the
+    # fingerprint reads from the pointers manifest
+    c.refresh_head_snapshot()
+    assert c._snapshot_head("t", "a") is not None
+    other.replicate()
+    assert c._snapshot_head("t", "a") is None
+    assert c.read("t", "a") == [(1, "a1"), (2, "a2")]

@@ -1,7 +1,7 @@
 """Kill a SUBPROCESS between a mutation's file writes and its manifest
-publish — the manifest protocol's core claim made physical (statestore.py,
-"manifest" block): a crash mid-APPEND (data files on disk, manifest commit
-never ran) and a crash mid-SWAP (fresh files moved into the live directory,
+publish — the manifest protocol's core claim made physical
+(sources/manifest.py): a crash mid-APPEND (data files on disk, manifest
+commit never ran) and a crash mid-SWAP (fresh files moved into the live directory,
 manifest still naming the old state) are both INVISIBLE to every reader,
 and vacuum reaps the orphans by age.  The in-process crash-restart soak
 (``test_crash_restart_soak.py``) kills between replicator mutations; this
@@ -24,6 +24,7 @@ import time
 import pytest
 from conftest import append, make_actions
 
+from kafka_journal_spark.sources.manifest import _walk_parquet
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -94,17 +95,17 @@ def test_kill_mid_commit_is_invisible_then_vacuumed(
     )
     pre = _state(store)
     jdir = store._path("journal")
-    files_pre = store._walk_parquet(jdir)
-    man_pre = store._load_manifest("journal")
+    files_pre = _walk_parquet(jdir)
+    man_pre = store.tables["journal"].load()
     store.release_ownership()
 
     _run_child(root, mode, crash_point)
 
     # the crash's half-done work is physically present but unreferenced...
     reopened = JournalStore(spark, root)
-    orphans = reopened._walk_parquet(jdir) - files_pre
+    orphans = _walk_parquet(jdir) - files_pre
     assert orphans, "the crash window must have left files behind"
-    assert reopened._load_manifest("journal") == man_pre, (
+    assert reopened.tables["journal"].load() == man_pre, (
         "a crash before the manifest publish must leave the manifest "
         "byte-identical"
     )
@@ -119,9 +120,9 @@ def test_kill_mid_commit_is_invisible_then_vacuumed(
         os.utime(p, ns=(old, old))
     reopened.retire_grace_s = 0  # exact disk==manifest after the compact
     reopened.compact(["journal"])
-    assert not (reopened._walk_parquet(jdir) & orphans)
-    assert reopened._walk_parquet(jdir) == (
-        reopened._live_files("journal") or set()
+    assert not (_walk_parquet(jdir) & orphans)
+    assert _walk_parquet(jdir) == (
+        reopened.tables["journal"].live_files() or set()
     )
     assert _state(reopened) == pre
 
@@ -145,7 +146,7 @@ def test_corrupt_token_repair_keeps_retired_files_retired(spark, tmp_path):
     pre_rows = {(r.id, r.seq_nr) for r in store.read().collect()}
 
     store.compact(["journal"])  # retires the replaced files (grace 900 s)
-    _, retired = store._load_manifest("journal")
+    _, retired = store.tables["journal"].load()
     assert retired, "compact must have retired the replaced files"
     # one more mutation so .prev (one save behind) carries the retired map
     replicate_batch(
@@ -160,7 +161,7 @@ def test_corrupt_token_repair_keeps_retired_files_retired(spark, tmp_path):
             make_actions(spark, [append("d", 1)], offset_base=20), store
         )
 
-    files2, retired2 = store._load_manifest("journal")
+    files2, retired2 = store.tables["journal"].load()
     assert set(retired) <= set(retired2), "known-retired files were dropped"
     assert set(retired2).isdisjoint(files2)
     assert not (set(files2) & set(retired)), (
@@ -179,7 +180,7 @@ def test_corrupt_token_repair_keeps_retired_files_retired(spark, tmp_path):
     replicate_batch(
         make_actions(spark, [append("e", 1)], offset_base=30), store
     )
-    _, retired3 = store._load_manifest("journal")
+    _, retired3 = store.tables["journal"].load()
     assert not set(retired) & set(retired3), "aged retired files not reaped"
     jdir = store._path("journal")
-    assert not (store._walk_parquet(jdir) & set(retired))
+    assert not (_walk_parquet(jdir) & set(retired))

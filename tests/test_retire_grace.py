@@ -20,6 +20,7 @@ import time
 import pytest
 from conftest import append, delete, make_actions
 
+from kafka_journal_spark.sources.manifest import _walk_parquet
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -51,20 +52,20 @@ def test_held_base_frame_outlives_grace_and_scans_whole(spark, tmp_path):
     store = _seed(spark, str(tmp_path / "s"), retire_grace_s=GRACE)
     want = {(r.id, r.seq_nr) for r in store.journal().collect()}
     held = store.journal()  # base frame held -> snapshot registered
-    held_files = set((store._load_manifest("journal") or ([], {}))[0])
+    held_files = set((store.tables["journal"].load() or ([], {}))[0])
     assert held_files
     _churn(store)
     # the files the held plan listed were retired rounds ago and the grace
     # lapsed — but the registration kept them on disk, so the scan is whole
     jdir = store._path("journal")
-    assert held_files <= store._walk_parquet(jdir), "pinned files vanished"
+    assert held_files <= _walk_parquet(jdir), "pinned files vanished"
     assert {(r.id, r.seq_nr) for r in held.collect()} == want
     # release: drop the frame, collect the weakref, next vacuum reaps
     del held
     gc.collect()
     time.sleep(GRACE + 0.1)
     store.compact(["journal"])
-    assert not (held_files & store._walk_parquet(jdir)), (
+    assert not (held_files & _walk_parquet(jdir)), (
         "released files must be reaped"
     )
 
@@ -107,6 +108,6 @@ def test_corrupt_manifest_token_degrades_to_listing_and_repairs(
         got = {(r.id, r.seq_nr) for r in store.read().collect()}
     assert got == want
     store.compact(["journal"])  # repair: re-adopt + swap
-    man = store._load_manifest("journal")
+    man = store.tables["journal"].load()
     assert man is not None
     assert {(r.id, r.seq_nr) for r in store.read().collect()} == want

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import os
+import time
+
+import pytest
+
 from kafka_journal_spark.operators.snapshots import (
     BUFFER_SIZE,
     SNAP_EVERY,
@@ -14,6 +19,8 @@ from kafka_journal_spark.sources.settings import (
     Settings,
     migrate_store,
 )
+from kafka_journal_spark.sources import manifest
+from kafka_journal_spark.sources.manifest import _walk_parquet
 
 SF = "/root/testdata/sf0.001"
 
@@ -181,3 +188,80 @@ def test_settings_timestamp_is_a_true_utc_instant(spark, tmp_path):
         assert stored <= after + dt.timedelta(seconds=60)
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(monkeypatch, point):
+    """Raise where the manifest commit would publish (in-process stand-in
+    for the ``KJS_STORE_CRASH`` hook, which kills the process)."""
+
+    def hook(p):
+        if p == point:
+            raise _Crash(p)
+
+    monkeypatch.setattr(manifest, "_maybe_crash", hook)
+
+
+def _age(table, rels):
+    old = time.time_ns() - int((table.retire_grace_s + 5) * 1e9)
+    for rel in rels:
+        os.utime(os.path.join(table.path, rel), ns=(old, old))
+
+
+def test_settings_crash_before_publish_keeps_old_value(
+    spark, tmp_path, monkeypatch
+):
+    s = Settings(spark, str(tmp_path))
+    s.set("a", "1")
+    with monkeypatch.context() as m:
+        _crash_at(m, "swap_precommit_settings")
+        with pytest.raises(_Crash):
+            s.set("a", "2")
+    assert s.get("a") == "1"  # the old value is read back
+    orphans = _walk_parquet(s.table.path) - s.table.live_files()
+    assert orphans, "the crashed swap must have left its files behind"
+    s.set("b", "3")  # the next set succeeds
+    assert s.all() == {"a": "1", "b": "3"}
+    _age(s.table, orphans)  # grace elapsed: the next commit reaps them
+    s.remove("b")
+    assert not (_walk_parquet(s.table.path) & orphans)
+    assert s.all() == {"a": "1"}
+
+
+def test_settings_read_planned_before_set_collects_its_snapshot(spark, tmp_path):
+    s = Settings(spark, str(tmp_path))
+    s.set("a", "1")
+    planned = s._df()
+    s.set("a", "2")
+    s.set("b", "3")
+    assert {r.key: r.value for r in planned.collect()} == {"a": "1"}
+    assert s.all() == {"a": "2", "b": "3"}
+
+
+def test_snapshot_store_crash_before_publish_keeps_old_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    from kafka_journal_spark.operators.snapshots import SnapshotStore
+
+    root = str(tmp_path / "snapstore")
+    s = SnapshotStore(spark, root)
+    s.save("t", "a", 5, "state@5")
+    with monkeypatch.context() as m:
+        _crash_at(m, "swap_precommit_snapshots")
+        with pytest.raises(_Crash):
+            s.save("t", "a", 10, "state@10")
+    s = SnapshotStore(spark, root)  # restart after the crash
+    assert s.load("t", "a").seq_nr == 5
+    orphans = _walk_parquet(s.table.path) - s.table.live_files()
+    assert orphans, "the crashed swap must have left its files behind"
+    s.save("t", "a", 10, "state@10")  # the next save succeeds
+    assert s.load("t", "a").seq_nr == 10
+    _age(s.table, orphans)
+    s.save("t", "b", 7, "b@7")
+    assert not (_walk_parquet(s.table.path) & orphans)
+    assert {(r.id, r.seq_nr) for r in s._df().collect()} == {
+        ("a", 5), ("a", 10), ("b", 7)
+    }

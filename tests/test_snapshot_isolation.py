@@ -1,5 +1,5 @@
 """Snapshot isolation of store reads under standing mutation — the manifest
-protocol's contract (statestore.py, "manifest" block): a read planned at any
+protocol's contract (sources/manifest.py): a read planned at any
 moment scans a complete point-in-time state of the table, no matter how many
 folds/compactions/rewrites land between its planning and its collection, and
 WITHOUT any session-level conf (the round-9 judge's soak failure was a
@@ -21,6 +21,7 @@ import time
 import pytest
 from conftest import append, delete, make_actions
 
+from kafka_journal_spark.sources.manifest import _walk_parquet
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -132,10 +133,10 @@ def test_vacuum_reaps_retired_files_after_grace(spark, tmp_path):
     store = _seed(spark, str(tmp_path / "s"), retire_grace_s=0)
     store.compact()
     for table in ("journal", "metajournal", "pointers"):
-        on_disk = store._walk_parquet(store._path(table))
-        live = store._live_files(table)
+        on_disk = _walk_parquet(store._path(table))
+        live = store.tables[table].live_files()
         assert live == on_disk, (table, live, on_disk)
-        man = store._load_manifest(table)
+        man = store.tables[table].load()
         assert man is not None and not man[1], (table, man)
 
 
@@ -145,11 +146,11 @@ def test_retired_files_linger_but_stay_invisible_within_grace(spark, tmp_path):
     fresh reads — row counts never double."""
     store = _seed(spark, str(tmp_path / "s"))
     want = {(r.id, r.seq_nr, r.offset) for r in store.read().collect()}
-    n_before = len(store._walk_parquet(store._path("journal")))
+    n_before = len(_walk_parquet(store._path("journal")))
     store.compact()
-    assert len(store._walk_parquet(store._path("journal"))) > 0
+    assert len(_walk_parquet(store._path("journal"))) > 0
     # retired + fresh coexist on disk...
-    man = store._load_manifest("journal")
+    man = store.tables["journal"].load()
     assert man is not None and man[1], "compaction must retire files"
     for rel in man[1]:
         assert os.path.exists(os.path.join(store._path("journal"), rel))
@@ -167,9 +168,9 @@ def test_crash_orphans_are_invisible_and_reaped(spark, tmp_path):
     # simulate a crashed append: data lands, the manifest commit never ran
     orphan_src = store.journal().limit(1)
     jdir = store._path("journal")
-    before = store._walk_parquet(jdir)
+    before = _walk_parquet(jdir)
     orphan_src.write.mode("append").partitionBy("topic").parquet(jdir)
-    orphans = store._walk_parquet(jdir) - before
+    orphans = _walk_parquet(jdir) - before
     assert orphans
     # invisible to a fresh read
     assert {(r.id, r.seq_nr) for r in store.read().collect()} == want
@@ -180,22 +181,25 @@ def test_crash_orphans_are_invisible_and_reaped(spark, tmp_path):
         p = os.path.join(jdir, rel)
         os.utime(p, ns=(old, old))
     store.compact(["journal"])
-    assert not (store._walk_parquet(jdir) & orphans)
+    assert not (_walk_parquet(jdir) & orphans)
 
 
-def test_legacy_store_without_manifest_reads_and_adopts(spark, tmp_path):
-    """A store written by the pre-manifest protocol (no token) still
-    reads via the directory listing, and the first mutation adopts its
-    files as the initial manifest."""
+def test_files_without_a_token_are_orphans_not_a_table(spark, tmp_path):
+    """An absent manifest token is an empty table: every commit writes a
+    token, so parquet files without one can only be crash orphans.  They
+    read as nothing, and the first commit does not adopt them."""
     store = _seed(spark, str(tmp_path / "s"))
-    want = {(r.id, r.seq_nr) for r in store.read().collect()}
-    for t in ("journal", "metajournal", "pointers"):
-        os.remove(os.path.join(store.root, f"_manifest_{t}"))
-    legacy = JournalStore(spark, store.root)
-    assert {(r.id, r.seq_nr) for r in legacy.read().collect()} == want
-    legacy.compact(["journal"])  # first mutation: adopt + swap
-    assert legacy._load_manifest("journal") is not None
-    assert {(r.id, r.seq_nr) for r in legacy.read().collect()} == want
+    os.remove(os.path.join(store.root, "_manifest_journal"))
+    stray = _walk_parquet(store._path("journal"))
+    assert stray
+    fresh = JournalStore(spark, store.root)
+    assert fresh.journal().count() == 0
+    assert fresh.read().count() == 0
+    replicate_batch(
+        make_actions(spark, [append("z", 1)], offset_base=50), fresh
+    )
+    assert not (fresh.tables["journal"].live_files() & stray)
+    assert {(r.id, r.seq_nr) for r in fresh.journal().collect()} == {("z", 1)}
 
 
 def test_pointer_upsert_scopes_to_written_topics(spark, tmp_path):

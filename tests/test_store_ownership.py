@@ -243,7 +243,7 @@ def test_fence_refuses_commit_after_midflight_takeover(spark, tmp_path):
     root = str(tmp_path / "s")
     store = JournalStore(spark, root)
     replicate_batch(make_actions(spark, [append("a", 1)]), store)
-    man_pre = store._load_manifest("journal")
+    man_pre = store.tables["journal"].load()
 
     def write_then_lose_lease():
         # the mutation's data write... during which the lease flips
@@ -252,7 +252,7 @@ def test_fence_refuses_commit_after_midflight_takeover(spark, tmp_path):
     with pytest.raises(StoreOwnershipError, match="taken over"):
         store._commit_append("journal", write_then_lose_lease)
     # nothing was committed under the stolen lease
-    assert store._load_manifest("journal") == man_pre
+    assert store.tables["journal"].load() == man_pre
 
 
 def test_heartbeat_survives_lease_vanishing_underneath(

@@ -18,43 +18,8 @@ import os
 import pytest
 from conftest import append, delete, make_actions
 
-from kafka_journal_spark.sources.statestore import JournalStore, _repair_dir
+from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
-
-
-def _mk(path, marker):
-    os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "MARKER"), "w") as f:
-        f.write(marker)
-
-
-def _marker(path):
-    with open(os.path.join(path, "MARKER")) as f:
-        return f.read()
-
-
-def test_repair_restores_newest_bak(tmp_path):
-    # crash between rename-aside and promote: live dir missing, TWO baks
-    # linger (an old one from a crashed cleanup plus the fresh one).
-    # Monotonic timestamp names make the newest deterministic.
-    live = str(tmp_path / "metajournal")
-    _mk(f"{live}.00000000000000000001.bak", "ancient")
-    _mk(f"{live}.00000000000000000002.bak", "newest")
-    _repair_dir(live)
-    assert _marker(live) == "newest"
-    # the stale bak is garbage and must be gone: a later mid-swap crash
-    # must not be able to resurrect the ancient state
-    assert not any(p.endswith(".bak") for p in os.listdir(tmp_path))
-
-
-def test_repair_cleans_stale_bak_when_live_exists(tmp_path):
-    # crash after promote but before cleanup: live is current, bak lingers
-    live = str(tmp_path / "journal")
-    _mk(live, "current")
-    _mk(f"{live}.00000000000000000009.bak", "stale")
-    _repair_dir(live)
-    assert _marker(live) == "current"
-    assert not any(p.endswith(".bak") for p in os.listdir(tmp_path))
 
 
 def test_catalog_snapshot_invalidated_by_second_instance(spark, tmp_path):
@@ -207,26 +172,6 @@ def test_incremental_compact_rewrites_only_debt_topics(spark, tmp_path):
     assert store.compact(min_debt=1, min_files=10_000) == []
     assert store.compact(topics=["other"]) == ["other"]
     assert {(r.topic, r.id, r.seq_nr) for r in store.read().collect()} == before_vis
-
-
-def test_partition_bak_repair_restores_crashed_topic_swap(spark, tmp_path):
-    """A crash between rename-aside and promote of ONE topic directory is
-    repaired on the next open — the LEGACY (pre-manifest) protocol's crash
-    state, which only a pre-manifest store can be in: drop the manifest
-    token to model a store written by the old version."""
-    root = str(tmp_path / "pbak")
-    store = JournalStore(spark, root)
-    replicate_batch(make_actions(spark, [append("a", 1), append("b", 1)]), store)
-    before = {(r.id, r.seq_nr) for r in store.read().collect()}
-    os.remove(os.path.join(root, "_manifest_journal"))  # legacy store
-    live = os.path.join(root, "journal", "topic=journal")
-    # simulate the crash: live dir renamed aside, promote never happened
-    os.replace(live, f"{live}.00000000000000000042.bak")
-    reopened = JournalStore(spark, root)
-    assert {(r.id, r.seq_nr) for r in reopened.read().collect()} == before
-    assert not any(
-        p.endswith(".bak") for p in os.listdir(os.path.join(root, "journal"))
-    )
 
 
 def test_compact_skips_live_catalog_republish(spark, tmp_path):

@@ -213,7 +213,7 @@ def test_self_maintaining_replicator_bounds_file_count(spark, tmp_path):
     # merged them (the last 2 batches may still be un-merged)
     assert len(files) <= 4, files
     # and the manifest's live view agrees with the physical state
-    live = store._live_files("journal")
+    live = store.tables["journal"].live_files()
     assert live is not None and len(live) == len(files)
 
     # reads equal a one-shot replication of the same actions
