@@ -34,6 +34,7 @@ commit point per unit of state).
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import itertools
 import json
@@ -64,16 +65,16 @@ from kafka_journal_spark.session import local_frame
 #: probes measured single-operator scans of 100–400 s — hence a 15-minute
 #: default (~2x that worst case) rather than the earlier 60 s, which a
 #: long scan under standing maintenance could outlive.  Deployments with
-#: longer analytic scans should raise it (`retire_grace_s=`) toward
+#: longer analytic scans should raise it (``JournalStore(retire_grace_s=)``) toward
 #: Delta's days-scale retention — the only cost is retired bytes on disk.
 #:
 #: Two belts close the window beyond the grace:
 #: - IN-PROCESS, vacuum never reaps a file referenced by a registered
 #:   read snapshot: every manifest read registers its file list for as
 #:   long as the returned DataFrame object is referenced (weakref-scoped),
-#:   and ``JournalStore.pin_reads()`` pins all its tables' current
-#:   snapshots for a whole block of derived-plan work (see
-#:   ``_register_snapshot``);
+#:   and ``ManifestTable.pin()`` (``JournalStore.pin_reads()`` for all
+#:   three journal tables) pins a table's current snapshot for a whole
+#:   block of derived-plan work;
 #: - CROSS-PROCESS, manifest-planned scans run with
 #:   ``ignoreMissingFiles=false``, so a foreign vacuum racing past the
 #:   grace makes the scan FAIL LOUDLY instead of silently dropping rows.
@@ -94,7 +95,7 @@ def _root_lock(root: str) -> threading.RLock:
 #: ``vacuum`` never reaps a retired file named by a registered snapshot —
 #: the in-process belt that lets a scan outlive ``retire_grace_s`` under
 #: standing maintenance (see RETIRE_GRACE_S).  Entries are released by the
-#: reader DataFrame's weakref finalizer or by ``pin_reads()`` exit.
+#: reader DataFrame's weakref finalizer or by ``ManifestTable.pin()`` exit.
 _ACTIVE_SNAPSHOTS: dict[tuple[str, str], dict[int, frozenset[str]]] = {}
 _ACTIVE_SNAPSHOTS_GUARD = threading.Lock()
 _SNAP_COUNTER = itertools.count(1)
@@ -142,11 +143,16 @@ def _maybe_crash(point: str) -> None:
 
 
 def read_token(path: str) -> str | None:
-    """A token's stripped content, or None when the file is absent."""
+    """A token's stripped content, or None when the file is absent.
+
+    Only absence reads as None: any other failure (EACCES, EIO, ESTALE)
+    raises.  A manifest token that could not be read must never pass for
+    an empty table — the commit that follows would publish a manifest
+    without the table's files and its vacuum would reap them."""
     try:
         with open(path) as f:
             return f.read().strip()
-    except OSError:
+    except FileNotFoundError:
         return None
 
 
@@ -172,7 +178,7 @@ def write_token(path: str, value: str) -> None:
         pass  # platforms/filesystems without directory fsync
 
 
-def _walk_parquet(root: str) -> set[str]:
+def walk_parquet(root: str) -> set[str]:
     """Relative paths of every parquet data file under ``root``."""
     out: set[str] = set()
     for r, _, fs in os.walk(root):
@@ -196,18 +202,13 @@ class ManifestTable:
     the journal store passes its lease check there."""
 
     def __init__(
-        self,
-        root: str,
-        name: str,
-        *,
-        retire_grace_s: float = RETIRE_GRACE_S,
-        fence: Callable[[], None] | None = None,
+        self, root: str, name: str, *, fence: Callable[[], None] | None = None
     ):
         self.root = root
         self.name = name
         self.path = os.path.join(root, name)
         #: snapshot retention for superseded files (see RETIRE_GRACE_S)
-        self.retire_grace_s = retire_grace_s
+        self.retire_grace_s = RETIRE_GRACE_S
         self.fence = fence
         self.lock = _root_lock(root)
         self._token = os.path.join(root, f"_manifest_{name}")
@@ -241,7 +242,7 @@ class ManifestTable:
             return _parse(raw)
         except ValueError:
             pass
-        walk = _walk_parquet(self.path)
+        walk = walk_parquet(self.path)
         retired: dict[str, int] = {}
         try:
             prev = _parse(read_token(self._token + ".prev") or "")
@@ -266,6 +267,16 @@ class ManifestTable:
 
     def live_files(self) -> set[str]:
         return set(self.load()[0])
+
+    @contextlib.contextmanager
+    def pin(self):
+        """Pin the table's CURRENT snapshot against this process's vacuum
+        for the duration of the block (see RETIRE_GRACE_S)."""
+        snap_id = _register_snapshot(self.root, self.name, self.load()[0])
+        try:
+            yield
+        finally:
+            _release_snapshot(self.root, self.name, snap_id)
 
     def save(self, files, retired) -> None:
         # preserve the manifest being superseded as `.prev` FIRST: the
@@ -338,10 +349,10 @@ class ManifestTable:
         unreferenced and are reaped by vacuum, never adopted)."""
         with self.lock:
             files, retired = self.load()
-            before = _walk_parquet(self.path)
+            before = walk_parquet(self.path)
             write_fn()
             _maybe_crash(f"append_precommit_{self.name}")
-            new = _walk_parquet(self.path) - before
+            new = walk_parquet(self.path) - before
             self.save(set(files) | new, retired)
             self.vacuum()
 
@@ -392,7 +403,7 @@ class ManifestTable:
             p = self.path
             os.makedirs(p, exist_ok=True)
             moved: list[str] = []
-            for rel in sorted(_walk_parquet(tmp)):
+            for rel in sorted(walk_parquet(tmp)):
                 dst_rel = rel
                 dst = os.path.join(p, dst_rel)
                 if os.path.exists(dst):  # part names carry a per-job UUID;
@@ -442,7 +453,7 @@ class ManifestTable:
                     pass
                 retired.pop(f, None)
             live = set(files)
-            for rel in _walk_parquet(p):
+            for rel in walk_parquet(p):
                 if rel in live or rel in retired:
                     continue
                 fp = os.path.join(p, rel)

@@ -74,11 +74,8 @@ from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.manifest import (
     RETIRE_GRACE_S,
     ManifestTable,
-    _register_snapshot,
-    _release_snapshot,
-    _root_lock,
-    _walk_parquet,
     read_token,
+    walk_parquet,
     write_token,
 )
 
@@ -182,7 +179,7 @@ OWNER_TTL_S = 300.0
 
 #: one token per PROCESS (not per instance): two JournalStore objects in
 #: one process legitimately share ownership — and share one mutation lock
-#: per root (``_root_lock``), so even instance-blind callers can't
+#: per root (``ManifestTable.lock``), so even instance-blind callers can't
 #: interleave a maintenance fold into another instance's batch window.
 _PROCESS_TOKEN = uuid.uuid4().hex
 
@@ -285,7 +282,7 @@ class JournalStore:
         #: the structural one-writer-per-topic rule of the reference
         #: (Replicator.scala:120-170 starts at most one per topic;
         #: CassandraSync takes a distributed lock for schema work).
-        self.mutation_lock = _root_lock(root)
+        self.mutation_lock = self.tables["journal"].lock
         os.makedirs(root, exist_ok=True)
 
     @property
@@ -570,15 +567,10 @@ class JournalStore:
         registration can lapse before the scan runs).  Cross-process
         protection stays the retire grace; beyond it a foreign vacuum
         makes the scan fail loudly (see ``ManifestTable.read``)."""
-        pins = [
-            (t, _register_snapshot(t.root, t.name, t.load()[0]))
-            for t in self.tables.values()
-        ]
-        try:
+        with contextlib.ExitStack() as pins:
+            for t in self.tables.values():
+                pins.enter_context(t.pin())
             yield self
-        finally:
-            for t, snap_id in pins:
-                _release_snapshot(t.root, t.name, snap_id)
 
     @property
     def _catalog_live(self) -> bool:
@@ -888,7 +880,7 @@ class JournalStore:
             sort_cols=["topic", "partition"],
             partition_by=["topic"],
         )
-        scope = {f.split(os.sep, 1)[0] for f in _walk_parquet(tmp)}
+        scope = {f.split(os.sep, 1)[0] for f in walk_parquet(tmp)}
         self._commit_swap("pointers", tmp, scope)
 
     # -- bucketed catalog publication (sources/layout.py as the default) ---
@@ -1333,7 +1325,7 @@ class JournalStore:
         # with ZERO visible rows has no staged dir and its live files
         # simply retire.  Unselected topics' files are untouched
         # (identity-pinned)
-        fresh_dirs = {f.split(os.sep, 1)[0] for f in _walk_parquet(tmp)}
+        fresh_dirs = {f.split(os.sep, 1)[0] for f in walk_parquet(tmp)}
         live_dirs = {f.split(os.sep, 1)[0] for f in journal.live_files()}
         sel = set(topics)
         targets = fresh_dirs | {

@@ -24,7 +24,7 @@ import time
 import pytest
 from conftest import append, make_actions
 
-from kafka_journal_spark.sources.manifest import _walk_parquet
+from kafka_journal_spark.sources.manifest import walk_parquet
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -95,7 +95,7 @@ def test_kill_mid_commit_is_invisible_then_vacuumed(
     )
     pre = _state(store)
     jdir = store._path("journal")
-    files_pre = _walk_parquet(jdir)
+    files_pre = walk_parquet(jdir)
     man_pre = store.tables["journal"].load()
     store.release_ownership()
 
@@ -103,7 +103,7 @@ def test_kill_mid_commit_is_invisible_then_vacuumed(
 
     # the crash's half-done work is physically present but unreferenced...
     reopened = JournalStore(spark, root)
-    orphans = _walk_parquet(jdir) - files_pre
+    orphans = walk_parquet(jdir) - files_pre
     assert orphans, "the crash window must have left files behind"
     assert reopened.tables["journal"].load() == man_pre, (
         "a crash before the manifest publish must leave the manifest "
@@ -120,8 +120,8 @@ def test_kill_mid_commit_is_invisible_then_vacuumed(
         os.utime(p, ns=(old, old))
     reopened.retire_grace_s = 0  # exact disk==manifest after the compact
     reopened.compact(["journal"])
-    assert not (_walk_parquet(jdir) & orphans)
-    assert _walk_parquet(jdir) == (
+    assert not (walk_parquet(jdir) & orphans)
+    assert walk_parquet(jdir) == (
         reopened.tables["journal"].live_files() or set()
     )
     assert _state(reopened) == pre
@@ -183,4 +183,4 @@ def test_corrupt_token_repair_keeps_retired_files_retired(spark, tmp_path):
     _, retired3 = store.tables["journal"].load()
     assert not set(retired) & set(retired3), "aged retired files not reaped"
     jdir = store._path("journal")
-    assert not (_walk_parquet(jdir) & set(retired))
+    assert not (walk_parquet(jdir) & set(retired))

@@ -20,7 +20,7 @@ import time
 import pytest
 from conftest import append, delete, make_actions
 
-from kafka_journal_spark.sources.manifest import _walk_parquet
+from kafka_journal_spark.sources.manifest import walk_parquet
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -58,14 +58,14 @@ def test_held_base_frame_outlives_grace_and_scans_whole(spark, tmp_path):
     # the files the held plan listed were retired rounds ago and the grace
     # lapsed — but the registration kept them on disk, so the scan is whole
     jdir = store._path("journal")
-    assert held_files <= _walk_parquet(jdir), "pinned files vanished"
+    assert held_files <= walk_parquet(jdir), "pinned files vanished"
     assert {(r.id, r.seq_nr) for r in held.collect()} == want
     # release: drop the frame, collect the weakref, next vacuum reaps
     del held
     gc.collect()
     time.sleep(GRACE + 0.1)
     store.compact(["journal"])
-    assert not (held_files & _walk_parquet(jdir)), (
+    assert not (held_files & walk_parquet(jdir)), (
         "released files must be reaped"
     )
 
@@ -97,8 +97,9 @@ def test_corrupt_manifest_token_degrades_to_listing_and_repairs(
     spark, tmp_path
 ):
     """External corruption of the manifest token (power loss cannot tear
-    it — the write fsyncs before its atomic rename): reads warn and fall
-    back to the directory listing; the next mutation adopts the walk as a
+    it — the write fsyncs before its atomic rename): reads warn and plan
+    from the repair view (the directory walk minus the files the ``.prev``
+    manifest lists as retired); the next commit saves that view as a
     fresh manifest."""
     store = _seed(spark, str(tmp_path / "s"), retire_grace_s=0)
     want = {(r.id, r.seq_nr) for r in store.read().collect()}

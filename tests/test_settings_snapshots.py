@@ -20,7 +20,7 @@ from kafka_journal_spark.sources.settings import (
     migrate_store,
 )
 from kafka_journal_spark.sources import manifest
-from kafka_journal_spark.sources.manifest import _walk_parquet
+from kafka_journal_spark.sources.manifest import walk_parquet
 
 SF = "/root/testdata/sf0.001"
 
@@ -221,13 +221,13 @@ def test_settings_crash_before_publish_keeps_old_value(
         with pytest.raises(_Crash):
             s.set("a", "2")
     assert s.get("a") == "1"  # the old value is read back
-    orphans = _walk_parquet(s.table.path) - s.table.live_files()
+    orphans = walk_parquet(s.table.path) - s.table.live_files()
     assert orphans, "the crashed swap must have left its files behind"
     s.set("b", "3")  # the next set succeeds
     assert s.all() == {"a": "1", "b": "3"}
     _age(s.table, orphans)  # grace elapsed: the next commit reaps them
     s.remove("b")
-    assert not (_walk_parquet(s.table.path) & orphans)
+    assert not (walk_parquet(s.table.path) & orphans)
     assert s.all() == {"a": "1"}
 
 
@@ -255,13 +255,13 @@ def test_snapshot_store_crash_before_publish_keeps_old_snapshot(
             s.save("t", "a", 10, "state@10")
     s = SnapshotStore(spark, root)  # restart after the crash
     assert s.load("t", "a").seq_nr == 5
-    orphans = _walk_parquet(s.table.path) - s.table.live_files()
+    orphans = walk_parquet(s.table.path) - s.table.live_files()
     assert orphans, "the crashed swap must have left its files behind"
     s.save("t", "a", 10, "state@10")  # the next save succeeds
     assert s.load("t", "a").seq_nr == 10
     _age(s.table, orphans)
     s.save("t", "b", 7, "b@7")
-    assert not (_walk_parquet(s.table.path) & orphans)
+    assert not (walk_parquet(s.table.path) & orphans)
     assert {(r.id, r.seq_nr) for r in s._df().collect()} == {
         ("a", 5), ("a", 10), ("b", 7)
     }

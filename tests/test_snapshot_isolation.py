@@ -21,7 +21,8 @@ import time
 import pytest
 from conftest import append, delete, make_actions
 
-from kafka_journal_spark.sources.manifest import _walk_parquet
+from kafka_journal_spark.sources import manifest
+from kafka_journal_spark.sources.manifest import walk_parquet
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -133,7 +134,7 @@ def test_vacuum_reaps_retired_files_after_grace(spark, tmp_path):
     store = _seed(spark, str(tmp_path / "s"), retire_grace_s=0)
     store.compact()
     for table in ("journal", "metajournal", "pointers"):
-        on_disk = _walk_parquet(store._path(table))
+        on_disk = walk_parquet(store._path(table))
         live = store.tables[table].live_files()
         assert live == on_disk, (table, live, on_disk)
         man = store.tables[table].load()
@@ -146,9 +147,9 @@ def test_retired_files_linger_but_stay_invisible_within_grace(spark, tmp_path):
     fresh reads — row counts never double."""
     store = _seed(spark, str(tmp_path / "s"))
     want = {(r.id, r.seq_nr, r.offset) for r in store.read().collect()}
-    n_before = len(_walk_parquet(store._path("journal")))
+    n_before = len(walk_parquet(store._path("journal")))
     store.compact()
-    assert len(_walk_parquet(store._path("journal"))) > 0
+    assert len(walk_parquet(store._path("journal"))) > 0
     # retired + fresh coexist on disk...
     man = store.tables["journal"].load()
     assert man is not None and man[1], "compaction must retire files"
@@ -168,9 +169,9 @@ def test_crash_orphans_are_invisible_and_reaped(spark, tmp_path):
     # simulate a crashed append: data lands, the manifest commit never ran
     orphan_src = store.journal().limit(1)
     jdir = store._path("journal")
-    before = _walk_parquet(jdir)
+    before = walk_parquet(jdir)
     orphan_src.write.mode("append").partitionBy("topic").parquet(jdir)
-    orphans = _walk_parquet(jdir) - before
+    orphans = walk_parquet(jdir) - before
     assert orphans
     # invisible to a fresh read
     assert {(r.id, r.seq_nr) for r in store.read().collect()} == want
@@ -181,7 +182,7 @@ def test_crash_orphans_are_invisible_and_reaped(spark, tmp_path):
         p = os.path.join(jdir, rel)
         os.utime(p, ns=(old, old))
     store.compact(["journal"])
-    assert not (_walk_parquet(jdir) & orphans)
+    assert not (walk_parquet(jdir) & orphans)
 
 
 def test_files_without_a_token_are_orphans_not_a_table(spark, tmp_path):
@@ -190,7 +191,7 @@ def test_files_without_a_token_are_orphans_not_a_table(spark, tmp_path):
     read as nothing, and the first commit does not adopt them."""
     store = _seed(spark, str(tmp_path / "s"))
     os.remove(os.path.join(store.root, "_manifest_journal"))
-    stray = _walk_parquet(store._path("journal"))
+    stray = walk_parquet(store._path("journal"))
     assert stray
     fresh = JournalStore(spark, store.root)
     assert fresh.journal().count() == 0
@@ -200,6 +201,42 @@ def test_files_without_a_token_are_orphans_not_a_table(spark, tmp_path):
     )
     assert not (fresh.tables["journal"].live_files() & stray)
     assert {(r.id, r.seq_nr) for r in fresh.journal().collect()} == {("z", 1)}
+
+
+def test_unreadable_token_raises_and_commits_nothing(spark, tmp_path, monkeypatch):
+    """Only an ABSENT token is an empty table.  A token that exists but
+    cannot be read (EACCES, EIO, ESTALE) must fail reads and commits: taken
+    for an empty table, a commit would publish a manifest without the
+    table's files and its vacuum would reap them all."""
+    store = _seed(spark, str(tmp_path / "s"), retire_grace_s=0)
+    token = os.path.join(store.root, "_manifest_journal")
+
+    def _manifests():
+        out = {}
+        for t in store.tables:
+            with open(os.path.join(store.root, f"_manifest_{t}")) as f:
+                out[t] = f.read()
+        return out
+
+    man_before = _manifests()
+    files_before = walk_parquet(store.root)
+    real_open = open
+
+    def _open(path, *a, **kw):
+        if path == token:
+            raise PermissionError(13, "Permission denied", path)
+        return real_open(path, *a, **kw)
+
+    monkeypatch.setattr(manifest, "open", _open, raising=False)
+    with pytest.raises(PermissionError):
+        store.read().collect()
+    with pytest.raises(PermissionError):
+        replicate_batch(
+            make_actions(spark, [append("z", 1)], offset_base=50), store
+        )
+    monkeypatch.undo()
+    assert _manifests() == man_before
+    assert walk_parquet(store.root) == files_before
 
 
 def test_pointer_upsert_scopes_to_written_topics(spark, tmp_path):
