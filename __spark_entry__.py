@@ -23,6 +23,25 @@ def entry(spark: SparkSession) -> DataFrame:
     return recovery_merge(actions)
 
 
+_TMP_PARENT: list[str] = []
+
+
+def _process_tempdir(prefix: str) -> str:
+    """A fresh directory for a query whose returned frame reads it lazily,
+    so the query cannot remove it itself.  Every such directory lives
+    under one per-process parent that an ``atexit`` hook removes: disk is
+    bounded by the live process's queries, and nothing is left behind."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    if not _TMP_PARENT:
+        _TMP_PARENT.append(tempfile.mkdtemp(prefix=f"kjs-{os.getpid()}-"))
+        atexit.register(shutil.rmtree, _TMP_PARENT[0], ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{prefix}-", dir=_TMP_PARENT[0])
+
+
 def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from pyspark.sql import functions as F
 
@@ -113,14 +132,12 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def j_stream_replicate(spark, sf_dir):
         # incremental streaming replication (3 micro-batches by offset range)
         # must equal one-shot materialization — the ConsistencySpec property
-        import tempfile
-
         from kafka_journal_spark.sources.statestore import JournalStore
         from kafka_journal_spark.streaming.replicator import replicate_batch
 
         acts = journal_actions(spark, sf_dir)
         hi = acts.agg(F.max("offset")).collect()[0][0] or 0
-        store = JournalStore(spark, tempfile.mkdtemp(prefix="kjs-stream-"))
+        store = JournalStore(spark, _process_tempdir("stream"))
         cuts = [0, hi // 3, 2 * hi // 3, hi + 1]
         for lo, up in zip(cuts, cuts[1:]):
             replicate_batch(
@@ -356,29 +373,17 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dedup with watermark-bounded eviction, the 100 TB shape for
         # exactly-once semantics over a duplicating transport; the oracle
         # is the plain distinct event set
-        import atexit
         import os
         import shutil
-        import tempfile
 
         from kafka_journal_spark.operators.actions import load_events
 
-        # per-INVOCATION subdir under one per-process parent: the sink
-        # output must outlive this call (the caller consumes the returned
-        # frame lazily), so earlier invocations' dirs are never touched —
-        # a repeat run for the same sf_dir previously rmtree'd the path
-        # backing a still-unconsumed earlier frame (r9 advice).  One
-        # atexit hook removes the whole parent, bounding disk to the live
-        # process's invocations (at sf100p each copy is ~100M rows, and a
-        # process runs each stream query once — the bench/driver shape)
-        parent = os.path.join(
-            tempfile.gettempdir(), f"kjs-dedupstream-{os.getpid()}"
-        )
-        first = not os.path.isdir(parent)
-        os.makedirs(parent, exist_ok=True)
-        if first:
-            atexit.register(shutil.rmtree, parent, ignore_errors=True)
-        d = tempfile.mkdtemp(dir=parent)
+        # per-INVOCATION dir: the sink output must outlive this call (the
+        # caller consumes the returned frame lazily), so earlier
+        # invocations' dirs are never touched — a repeat run for the same
+        # sf_dir previously rmtree'd the path backing a still-unconsumed
+        # earlier frame (r9 advice)
+        d = _process_tempdir("dedupstream")
         ev = load_events(spark, sf_dir).select(
             "event_id", "ts", "user_id", "event_type", "value"
         )
@@ -424,7 +429,7 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "the DISTINCT oracle assumes single-batch delivery"
         )
         # source + checkpoint are scratch; the sink output must outlive the
-        # call (the atexit hook above removes it at process exit)
+        # call (removed at process exit, see _process_tempdir)
         shutil.rmtree(f"{d}/src", ignore_errors=True)
         shutil.rmtree(f"{d}/ckpt", ignore_errors=True)
         return spark.read.parquet(f"{d}/out").select(
@@ -596,8 +601,6 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # S13: the Settings CRUD KV driven by a deterministic op sequence
         # derived from the events table — set, overwrite, remove — read back
         # as last-write-wins state; the oracle recomputes it in SQL
-        import tempfile
-
         from kafka_journal_spark.operators.actions import load_events
         from kafka_journal_spark.sources.settings import Settings
 
@@ -608,7 +611,7 @@ def _journal_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .agg(F.count("*").alias("n"), F.max("event_id").alias("m"))
             .collect()
         }
-        s = Settings(spark, tempfile.mkdtemp(prefix="kjs-settings-"))
+        s = Settings(spark, _process_tempdir("settings"))
         for k in range(10):
             s.set(f"s{k}", str(agg.get(k, (0, 0))[0]), origin="gate")
         for k in range(5):

@@ -145,7 +145,6 @@ class SnapshotStore:
 
         n = self._counts.get((topic, key), self._persisted_count(topic, key))
         slot = n % self.buffer_size
-        self._counts[(topic, key)] = n + 1
         # timezone-aware UTC now: the column holds instants, and a naive
         # utcnow() leaves its zone to whoever converts it
         row = local_frame(
@@ -163,6 +162,8 @@ class SnapshotStore:
             ~((F.col("topic") == topic) & (F.col("id") == key) & (F.col("buffer_nr") == slot))
         )
         self._swap(kept.unionByName(row))
+        # counted only once committed: a failed save must not skip a slot
+        self._counts[(topic, key)] = n + 1
 
     def _persisted_count(self, topic: str, key: str) -> int:
         """Restart recovery: the next save must land one slot past the NEWEST

@@ -26,9 +26,12 @@ def get_spark(app_name: str = "kafka-journal-spark", cpus: int | None = None) ->
         .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 16)))
         # Arrow for pandas UDF / toPandas paths (similarity & multimodal ops).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # let an id-bucketed table co-partition joins whose keys are a
-        # superset of the bucket key (journal ⋈ metajournal on (topic, id)
-        # over id-buckets) — the zero-Exchange co-located read path
+        # let a join whose keys are a superset of its children's hash
+        # partitioning reuse that partitioning: e_ann_recall joins the
+        # exact and approximate top-k lists on (q_id, vec_id), each side
+        # already hash-partitioned by q_id for its per-query top-k
+        # window; with the default (true) its plan re-shuffles both sides
+        # (3 more Exchanges; the other HEADLINE plans are identical)
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # split small-but-CPU-dense inputs across the cluster: a map-only
         # operator (e.g. PII scrub — deliberately zero-Exchange) is

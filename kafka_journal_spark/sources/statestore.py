@@ -38,8 +38,8 @@ snapshot grace, and every read plans from the manifest's file list — so
 reads are snapshot-isolated under standing maintenance, and a crash
 before a manifest publish is invisible.  The store adds what only the
 journal needs on top: the cross-process ownership lease (fenced before
-every token write), the catalog epochs, the dirty-band and delta-seq
-tokens, and ``pin_reads()``.
+every token write), the dirty-band and delta-seq tokens, and
+``pin_reads()``.
 
 The read path (``read()``) joins journal to metajournal (broadcast only
 under a key filter — an unfiltered head table is O(#keys) and AQE picks the
@@ -60,7 +60,6 @@ import contextlib
 import json
 import math
 import os
-import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -210,35 +209,16 @@ class StoreOwnershipError(RuntimeError):
     so the store fails the second writer loudly instead."""
 
 
-def _locked(fn):
-    """Hold the store's mutation lock for the call — maintenance entry
-    points (compact, publish_catalog) vs replication batches; see the
-    ``mutation_lock`` field note."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(self, *args, **kwargs):
-        with self.mutation_lock:
-            return fn(self, *args, **kwargs)
-
-    return wrapper
-
-
 class JournalStore:
-    """Parquet-backed store; pass ``catalog`` (a table-name prefix) to make
-    the bucketed co-located layout (``sources/layout.py``) the DEFAULT read
-    path: ``compact()`` publishes journal+metajournal as id-bucketed catalog
-    tables, and ``read()`` plans the zero-Exchange co-located join against
-    them until the next write staled the publication (then it falls back to
-    the live parquet until the next compaction — the compacted-snapshot +
-    live-tail pattern)."""
+    """Parquet-backed store over one root directory: the journal,
+    metajournal and pointers tables, each committed through its manifest.
+    Every read plans from the live manifests, so a write is visible to
+    the next read of any instance over the same root."""
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
-        catalog: str | None = None,
-        buckets: int = 16,
         meta_bands: int = 256,
         retire_grace_s: float = RETIRE_GRACE_S,
         owner_ttl_s: float = OWNER_TTL_S,
@@ -257,8 +237,6 @@ class JournalStore:
         the segment count."""
         self.spark = spark
         self.root = root
-        self.catalog = catalog
-        self.buckets = buckets
         self.meta_bands = meta_bands
         #: the three tables, each committed through its manifest; every
         #: token write of theirs is fenced by this process's lease
@@ -269,7 +247,7 @@ class JournalStore:
         self.retire_grace_s = retire_grace_s
         self.owner_ttl_s = owner_ttl_s
         #: serializes MUTATIONS (replication batches vs maintenance —
-        #: compact/publish_catalog) within this driver process.  Without
+        #: compact) within this driver process.  Without
         #: it, a maintenance thread's compact() can land between a batch's
         #: append_journal and its upsert_metajournal and drop the freshly
         #: appended rows as orphans (their heads haven't advanced yet) —
@@ -304,15 +282,7 @@ class JournalStore:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
-    # -- catalog publication watermark ------------------------------------
-    #
-    # The bucketed catalog tables are a SNAPSHOT; any journal/metajournal
-    # write stales them.  The watermark is a pair of tiny files in the store
-    # root (not an in-memory flag): every mutating write stamps a fresh
-    # token into ``_store_epoch``, and ``publish_catalog`` copies the token
-    # it published under into ``_catalog_epoch``.  read() compares the two —
-    # so a SECOND store instance (another driver, a restarted job) writing
-    # to the same root invalidates THIS instance's catalog snapshot too.
+    # -- root tokens -------------------------------------------------------
 
     def _read_token(self, name: str) -> str:
         return read_token(self._path(name)) or ""
@@ -320,7 +290,7 @@ class JournalStore:
     def _fence_lease(self) -> None:
         """Raise if ANOTHER process's lease is on the root — the fencing
         check every token commit runs (tokens are the store's commit
-        points: manifests, epochs, dirty bands, delta seq).  This is what
+        points: manifests, dirty bands, delta seq).  This is what
         makes a TTL takeover of a live-but-idle owner LOUD: the old
         owner's in-flight mutation computed against pre-takeover state,
         and publishing it would clobber the new owner's committed files —
@@ -347,57 +317,6 @@ class JournalStore:
         against lease takeover."""
         self._fence_lease()
         write_token(self._path(name), value)
-
-    def _mark_stale(self, topics: list[str] | None = None) -> None:
-        """Stamp a fresh store epoch AND record which topics the write
-        touched (``topics=None`` = unknown scope → the whole catalog is
-        dirty).  The dirty-topic set is what lets ``publish_catalog``
-        republish O(written topics) instead of O(table).
-
-        Every writer stamps TWICE — once before the data lands and once
-        after (two cheap token writes):
-
-        - the PRE-write mark makes a crash mid-write safe: data that
-          committed without its post-mark is already covered (epoch
-          bumped, topic dirty) — worst case a wasted partition rewrite,
-          never a stale catalog;
-        - the POST-write mark makes a CONCURRENT publication safe: a
-          publication that snapshot-reset the dirty token and scanned
-          before this write's data landed published a stale partition,
-          but the post-mark re-dirties the topic (surviving the reset,
-          which happened earlier) and moves the epoch past the
-          publication's captured token — so that catalog grades stale and
-          the next publication republishes the topic with the data.
-
-        The PRE-write mark is every mutation's first token write, so the
-        lease is asserted here — a foreign-owned store refuses the
-        mutation with the canonical ownership error before any state
-        (even a token) changes."""
-        self._assert_ownership()
-        cur = self._read_token("_catalog_dirty")
-        if topics is None:
-            val = "*"
-        elif cur == "*":
-            val = "*"
-        else:
-            try:
-                known = set(json.loads(cur)) if cur else set()
-            except ValueError:
-                known = None
-            val = "*" if known is None else json.dumps(sorted(known | set(topics)))
-        self._write_token("_catalog_dirty", val)
-        self._write_token("_store_epoch", uuid.uuid4().hex)
-
-    def _dirty_catalog_topics(self) -> list[str] | None:
-        """Topics written since the last catalog publication, or ``None``
-        when the scope is unknown (full republish required)."""
-        tok = self._read_token("_catalog_dirty")
-        if not tok or tok == "*":
-            return None
-        try:
-            return sorted(set(json.loads(tok)))
-        except ValueError:
-            return None
 
     # -- metajournal delta bookkeeping ------------------------------------
     #
@@ -572,24 +491,6 @@ class JournalStore:
                 pins.enter_context(t.pin())
             yield self
 
-    @property
-    def _catalog_live(self) -> bool:
-        """Epoch tokens match AND the bucketed tables are actually
-        registered in THIS session's catalog: table metadata lives in the
-        session metastore (in-memory by default), so a fresh session
-        opening an old store root sees live tokens but no tables — it
-        must fall back to the parquet path (and republish to re-register)
-        rather than plan against missing relations."""
-        pub = self._read_token("_catalog_epoch")
-        if not (bool(pub) and pub == self._read_token("_store_epoch")):
-            return False
-        if self.catalog and not all(
-            self.spark.catalog.tableExists(f"{self.catalog}_{s}")
-            for s in ("journal", "metajournal")
-        ):
-            return False
-        return True
-
     def journal(self) -> DataFrame:
         return self.tables["journal"].read(self.spark, JOURNAL_SCHEMA_DDL)
 
@@ -659,24 +560,20 @@ class JournalStore:
 
     # -- writers -----------------------------------------------------------
 
-    def append_journal(self, rows: DataFrame, topics: list[str] | None = None) -> None:
+    def append_journal(self, rows: DataFrame) -> None:
         """Append event rows (partitioned by topic — partition pruning on
-        every topic-scoped read).  ``topics`` scopes the catalog
-        staleness to the written topics (the replicator knows them); left
-        None, the whole catalog is marked dirty."""
-        self._mark_stale(topics)  # pre-write: crash safety
+        every topic-scoped read)."""
         self._commit_append(
             "journal",
             lambda: rows.write.mode("append")
             .partitionBy("topic")
             .parquet(self._path("journal")),
         )
-        self._mark_stale(topics)  # post-write: concurrent-publication safety
 
     def swap_metajournal(self, df: DataFrame) -> None:
         """Full head-table rewrite (initial materialization / compaction) —
         same band-partitioned layout as the incremental path."""
-        self._mark_stale()  # pre-write: crash safety
+        self._assert_ownership()
         tmp = self.tables["metajournal"].stage(
             df.withColumn("seg_band", self._seg_band()),
             sort_cols=["seg_band", "segment", "topic", "id"],
@@ -687,7 +584,6 @@ class JournalStore:
         # would only cost identity windows, but clear them (crash before
         # this line is the safe direction)
         self._set_dirty_bands(set())
-        self._mark_stale()  # post-write: concurrent-publication safety
 
     def swap_pointers(self, df: DataFrame) -> None:
         tmp = self.tables["pointers"].stage(
@@ -733,7 +629,6 @@ class JournalStore:
         self,
         df: DataFrame,
         touched_segments: list[int],
-        topics: list[str] | None = None,
     ) -> None:
         """Incremental metajournal write, merge-on-read shape: APPEND one
         small delta file per touched band holding the merged head rows of
@@ -751,7 +646,8 @@ class JournalStore:
         resolver keeps the newest row per (topic, segment, id);
         ``fold_metajournal`` later rewrites dirty bands to pure base.
 
-        Crash safety: the dirty-band token is written first (see the
+        Crash safety: the lease is asserted before the first token write,
+        the dirty-band token is written before the append (see the
         bookkeeping comment above), and a partially-landed append is
         simply re-merged by the replayed batch under a HIGHER delta_seq —
         the partial rows lose the window, so replay is idempotent.
@@ -769,9 +665,9 @@ class JournalStore:
         path = self._path("metajournal")
         bands = self._bands_of(touched_segments)
         if len(bands) >= max(2, math.ceil(WIDE_BATCH_BAND_FRACTION * self.meta_bands)):
-            self._upsert_metajournal_wide(df, bands, topics)
+            self._upsert_metajournal_wide(df, bands)
             return
-        self._mark_stale(topics)  # pre-write: crash safety
+        self._assert_ownership()
         self._set_dirty_bands(set(self._dirty_bands()) | set(bands))
         w = df.withColumn("seg_band", self._seg_band()).withColumn(
             "delta_seq", F.lit(self._next_delta_seq())
@@ -788,11 +684,8 @@ class JournalStore:
                 .parquet(path)
             ),
         )
-        self._mark_stale(topics)  # post-write: concurrent-publication safety
 
-    def _upsert_metajournal_wide(
-        self, df: DataFrame, bands: list[int], topics: list[str] | None
-    ) -> None:
+    def _upsert_metajournal_wide(self, df: DataFrame, bands: list[int]) -> None:
         """Band-complete write for bulk batches: newest-wins-merge the
         batch rows into the touched bands' RESOLVED content and swap those
         bands to pure base (tombstoned keys dropped physically) — the cost
@@ -804,7 +697,7 @@ class JournalStore:
         A crash mid-swap is invisible (the manifest still names the old
         files); the batch's offsets were not committed, so the replicator
         replays it."""
-        self._mark_stale(topics)  # pre-write: crash safety
+        self._assert_ownership()
         w = df.withColumn("seg_band", self._seg_band())
         if "deleted" not in w.columns:
             w = w.withColumn("deleted", F.lit(False))
@@ -822,7 +715,6 @@ class JournalStore:
         # LAST keeps the crash direction safe (a flag on a clean band only
         # costs an identity resolution window)
         self._set_dirty_bands(set(self._dirty_bands()) - set(bands))
-        self._mark_stale(topics)  # post-write: concurrent-publication safety
 
     def _swap_meta_bands(self, resolved: DataFrame, bands: list[int]) -> None:
         """Materialize ``resolved`` (which may lazily read the live band
@@ -883,213 +775,31 @@ class JournalStore:
         scope = {f.split(os.sep, 1)[0] for f in walk_parquet(tmp)}
         self._commit_swap("pointers", tmp, scope)
 
-    # -- bucketed catalog publication (sources/layout.py as the default) ---
-
-    def _catalog_partial_ready(self) -> bool:
-        """Partial republication requires both catalog tables to exist
-        AND be topic-partitioned (pre-incremental publications left the
-        metajournal table unpartitioned — detected and upgraded by a full
-        republish)."""
-        for suffix in ("journal", "metajournal"):
-            t = f"{self.catalog}_{suffix}"
-            if not self.spark.catalog.tableExists(t):
-                return False
-            if not any(
-                c.isPartition and c.name == "topic"
-                for c in self.spark.catalog.listColumns(t)
-            ):
-                return False
-        return True
-
-    @_locked
-    def publish_catalog(self) -> None:
-        """Publish the store as id-bucketed, sorted, topic-partitioned
-        catalog tables — the co-located layout of ``sources/layout.py`` —
-        making the zero-Exchange journal⋈metajournal join the default
-        ``read()`` plan.  Aligned bucket counts on both sides are what buy
-        the shuffle-free join; the sort by (id, seq_nr) buys min-max
-        row-group skipping inside each bucket file.
-
-        Publication is INCREMENTAL when it can be: every store write
-        records its topics (``_mark_stale``), and a republication
-        dynamic-partition-overwrites ONLY the dirty topics' partitions of
-        both tables (dirty topics that resolved to zero rows get their
-        partitions dropped) — O(written topics), not O(table), per
-        publication.  The full ``saveAsTable`` path remains for the first
-        publication and for writes of unknown scope.
-
-        Concurrency protocol (a scheduler/maintenance thread may publish
-        WHILE the streaming replicator writes — the advertised deployment):
-
-        1. capture the epoch BEFORE snapshotting: a write landing while the
-           catalog tables are being built bumps ``_store_epoch`` past this
-           token, so the publication correctly reports stale.  Reading the
-           token afterwards would stamp the concurrent write over and
-           serve a catalog that is missing it.
-        2. snapshot-AND-RESET the dirty token BEFORE any scan begins:
-           writers re-mark their topics AFTER their data lands (the
-           post-write half of ``_mark_stale``'s two-stamp protocol), so a
-           write whose data this publication's scans miss leaves its topic
-           in the (freshly reset) dirty token — the clear-at-the-end
-           design instead erased such topics, and the NEXT publication
-           would no-op over an empty dirty set and go live over a catalog
-           missing the write.
-        3. an EMPTY dirty snapshot while the catalog is stale is the
-           signature of a lost mark (a crash between the reset and the
-           epoch stamp, or a token overwritten in the tiny read-modify
-           window): the scope is unknown, so escalate to a full republish
-           — conservative, never stale.
-        """
-        assert self.catalog, "construct the store with catalog=<prefix>"
-        self._assert_ownership()
-        tok = self._read_token("_store_epoch")
-        if not tok:
-            self._mark_stale()
-            tok = self._read_token("_store_epoch")
-        dirty = self._dirty_catalog_topics()
-        if dirty == [] and not self._catalog_live:
-            dirty = None  # lost-mark signature: scope unknown, publish all
-        self._write_token("_catalog_dirty", json.dumps([]))
-        if dirty is not None and self._catalog_partial_ready():
-            self._publish_catalog_topics(dirty)
-        else:
-            # a FRESH session republishing an old store root: the tables
-            # aren't registered in this session's (in-memory) metastore,
-            # but their warehouse directories survive from the previous
-            # session — saveAsTable would fail LOCATION_ALREADY_EXISTS.
-            # An unregistered leftover location is dead weight; clear it.
-            from urllib.parse import urlparse
-
-            wh = urlparse(
-                self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-            ).path
-            # Scope the leftover-location cleanup to IN-MEMORY metastores:
-            # only there can a directory exist with no table registered (the
-            # registration died with the previous session).  A persistent
-            # (hive) metastore keeps registrations across sessions, and its
-            # database location may differ from the derived default — this
-            # path heuristic would then be checking (and deleting) the wrong
-            # directory for a table that still exists.
-            in_memory = (
-                self.spark.conf.get(
-                    "spark.sql.catalogImplementation", "in-memory"
-                )
-                == "in-memory"
-            )
-            for suffix in ("journal", "metajournal"):
-                t = f"{self.catalog}_{suffix}"
-                loc = os.path.join(wh, t.lower())
-                if (
-                    in_memory
-                    and not self.spark.catalog.tableExists(t)
-                    and os.path.exists(loc)
-                ):
-                    shutil.rmtree(loc, ignore_errors=True)
-            (
-                self.journal()
-                .write.mode("overwrite")
-                .partitionBy("topic")
-                .bucketBy(self.buckets, "id")
-                .sortBy("id", "seq_nr")
-                .format("parquet")
-                .saveAsTable(f"{self.catalog}_journal")
-            )
-            (
-                self.metajournal()
-                .write.mode("overwrite")
-                .partitionBy("topic")
-                .bucketBy(self.buckets, "id")
-                .sortBy("id")
-                .format("parquet")
-                .saveAsTable(f"{self.catalog}_metajournal")
-            )
-        # the dirty token was consumed up front (step 2); if a writer's
-        # post-write mark landed since, _store_epoch moved past ``tok`` and
-        # the epoch comparison keeps the catalog stale until the next
-        # publication picks the re-marked topics up.
-        self._write_token("_catalog_epoch", tok)
-
-    def _publish_catalog_topics(self, topics: list[str]) -> None:
-        """Dynamic-partition overwrite of the given topics' catalog
-        partitions (``insertInto`` preserves the tables' bucket/sort spec;
-        verified by the co-located-plan pin in ``test_plans.py``)."""
-        if not topics:
-            return
-        for suffix, df in (
-            ("journal", self.journal()),
-            ("metajournal", self.metajournal()),
-        ):
-            t = f"{self.catalog}_{suffix}"
-            cols = self.spark.table(t).columns  # insertInto is positional
-            fresh = df.filter(F.col("topic").isin(topics)).localCheckpoint(
-                eager=True
-            )
-            # ``insertInto`` reads the overwrite mode from the SESSION conf
-            # (the writer-level option only applies to path-based writes) —
-            # static mode would silently truncate the whole table here
-            key = "spark.sql.sources.partitionOverwriteMode"
-            prev = self.spark.conf.get(key, "static")
-            self.spark.conf.set(key, "dynamic")
-            try:
-                fresh.select(*cols).write.mode("overwrite").insertInto(t)
-            finally:
-                self.spark.conf.set(key, prev)
-            # a dirty topic whose rows all vanished (purge + compaction)
-            # cannot be expressed by dynamic overwrite — drop its partition
-            present = {
-                r.topic for r in fresh.select("topic").distinct().collect()
-            }
-            for gone in set(topics) - present:
-                lit = gone.replace("'", "''")
-                self.spark.sql(
-                    f"ALTER TABLE {t} DROP IF EXISTS PARTITION (topic='{lit}')"
-                )
-
-    def _read_catalog(
-        self,
-        topic: str | None,
-        key: str | None,
-        from_seq_nr: int,
-        cfg: "JournalConfig",
-    ) -> DataFrame:
-        """The co-located read: same semantics as the parquet path, planned
-        against the bucketed tables — the join and the R5 window both run on
-        the scan's hash(id) bucketing, so the whole read has zero Exchange.
-
-        Requires ``spark.sql.requireAllClusterKeysForCoPartition=false``
-        (set by ``session.get_spark``): the join clusters on (topic, id)
-        [+ record_id when correlation is on, Catalyst extracts it into the
-        equi-keys], and hash(id) buckets co-partition any superset of the
-        bucket key under that setting."""
-        from kafka_journal_spark.operators.read import apply_seq_nr_uniqueness
-
-        j = self.spark.table(f"{self.catalog}_journal")
-        m = self.spark.table(f"{self.catalog}_metajournal").select(
-            "topic",
-            "id",
-            "record_id",
-            F.col("delete_to").alias("_dt"),
-            F.col("seq_nr").alias("_hs"),
-        )
-        if topic is not None:
-            j = j.filter(F.col("topic") == topic)
-            m = m.filter(F.col("topic") == topic)
-        if key is not None:
-            j = j.filter(F.col("id") == key)
-            m = m.filter(F.col("id") == key)
-        df = j.join(m, ["topic", "id"], "inner")  # co-located, never hinted
-        if cfg.correlate_events_with_meta:
-            df = df.filter(F.col("meta_record_id") == F.col("record_id"))
-        df = df.filter(F.col("seq_nr") > F.coalesce(F.col("_dt"), F.lit(0))).filter(
-            F.col("seq_nr") >= F.lit(from_seq_nr)
-        )
-        if cfg.clamp_to_head:
-            df = df.filter(F.col("seq_nr") <= F.col("_hs"))
-        return apply_seq_nr_uniqueness(df, cfg.seq_nr_uniqueness).drop(
-            "_dt", "_hs", "record_id"
-        )
-
     # -- read path (EventualCassandra.read semantics) ----------------------
+
+    def _key_heads(self, key: str, scope) -> DataFrame:
+        """The head rows ``read(key=...)`` joins against: ``topic, id,
+        record_id, _dt`` (delete_to), ``_hs`` (head seq_nr) and ``_del``
+        (tombstone).  Planned from the key's band files (the whole table
+        for a non-ASCII key, see ``metajournal_of_keys``) and narrowed by
+        ``scope`` inside that read, so the newest-wins aggregate of
+        ``_resolved_meta`` — needed only when the band holds un-folded
+        deltas — runs over the key's few rows, not the band's."""
+        seg = segment_of(key, SEGMENTS_DEFAULT)
+        bands = None if seg is None else [seg % self.meta_bands]
+        dirty = set(self._dirty_bands())
+        if bands is not None:
+            dirty &= set(bands)
+        df = self._metajournal_phys(bands).filter(scope)
+        # SQL strings, not Column builders: every builder call is several
+        # py4j round trips, and this plan is built on every client read
+        cols = "record_id, delete_to AS _dt, seq_nr AS _hs, deleted AS _del"
+        if not dirty:
+            return df.selectExpr("topic", "id", *cols.split(", "))
+        newest = F.expr(f"max_by(struct({cols}), coalesce(delta_seq, -1))")
+        return df.groupBy("topic", "id").agg(newest.alias("_r")).select(
+            "topic", "id", "_r.*"
+        )
 
     def read(
         self,
@@ -1100,43 +810,43 @@ class JournalStore:
     ) -> DataFrame:
         """Recovery read over the replicated store (R1 eventual side +
         R5 dedup + R8 orphan filtering), under the configured integrity
-        modes (``JournalConfig``)."""
+        modes (``JournalConfig``).  One predicate scopes each side to the
+        topic/key, and one filter after the join applies the tombstone,
+        incarnation, delete_to, ``from_seq_nr`` and clamp conditions."""
         from kafka_journal_spark.operators.read import apply_seq_nr_uniqueness
 
         cfg = config or JournalConfig()
-        if self.catalog and self._catalog_live:
-            return self._read_catalog(topic, key, from_seq_nr, cfg)
+        scope = None
+        for col, val in (("topic", topic), ("id", key)):
+            if val is not None:
+                eq = F.col(col) == val
+                scope = eq if scope is None else scope & eq
         j = self.journal()
-        heads = self.metajournal() if key is None else self.metajournal_of_keys([key])
-        m = heads.select(
-            "topic",
-            "id",
-            "record_id",
-            F.col("delete_to").alias("_dt"),
-            F.col("seq_nr").alias("_hs"),
-        )
-        if topic is not None:
-            j = j.filter(F.col("topic") == topic)
-            m = m.filter(F.col("topic") == topic)
-        if key is not None:
-            j = j.filter(F.col("id") == key)
-            m = m.filter(F.col("id") == key)
-        # broadcast the head side only when a key filter bounds it to O(1)
-        # rows; an unfiltered (or merely topic-filtered) metajournal is
-        # O(#keys) and would OOM the executors at 100x scale — let AQE pick
-        # the strategy from the observed size there
-        m_side = F.broadcast(m) if key is not None else m
-        df = j.join(m_side, ["topic", "id"], "inner")
+        if scope is not None:
+            j = j.filter(scope)
+        # one SQL string for the row conditions (see ``_key_heads``)
+        keep = [f"seq_nr > coalesce(_dt, 0) AND seq_nr >= {int(from_seq_nr)}"]
+        if key is None:
+            m = self.metajournal().selectExpr(
+                "topic", "id", "record_id", "delete_to AS _dt", "seq_nr AS _hs"
+            )
+            if scope is not None:
+                m = m.filter(scope)
+            # an unfiltered (or merely topic-filtered) metajournal is
+            # O(#keys) and would OOM the executors if broadcast at 100x
+            # scale — let AQE pick the strategy from the observed size
+            df = j.join(m, ["topic", "id"], "inner")
+        else:
+            # a key bounds the head side to O(1) rows: broadcast it
+            df = j.join(F.broadcast(self._key_heads(key, scope)), ["topic", "id"])
+            keep.append("NOT coalesce(_del, false)")
         if cfg.correlate_events_with_meta:
-            df = df.filter(F.col("meta_record_id") == F.col("record_id"))
-        df = df.filter(F.col("seq_nr") > F.coalesce(F.col("_dt"), F.lit(0))).filter(
-            F.col("seq_nr") >= F.lit(from_seq_nr)
-        )
+            keep.append("meta_record_id = record_id")
         if cfg.clamp_to_head:
-            df = df.filter(F.col("seq_nr") <= F.col("_hs"))
-        return apply_seq_nr_uniqueness(df, cfg.seq_nr_uniqueness).drop(
-            "_dt", "_hs", "record_id"
-        )
+            keep.append("seq_nr <= _hs")
+        return apply_seq_nr_uniqueness(
+            df.filter(" AND ".join(keep)), cfg.seq_nr_uniqueness
+        ).drop("_dt", "_hs", "_del", "record_id")
 
     def pointer(self, topic: str, key: str):
         """Last seq_nr for a key (R6), None if absent."""
@@ -1244,7 +954,6 @@ class JournalStore:
         rows = [(b, n, b in dirty) for b, n in sorted(counts.items())]
         return local_frame(self.spark, rows, "band long, n_files long, dirty boolean")
 
-    @_locked
     def compact(
         self,
         topics: list[str] | None = None,
@@ -1267,7 +976,7 @@ class JournalStore:
           scheduler calls ``compact(min_debt=1, min_files=64)`` and the
           cost is O(topics-with-debt), not O(table)).
         - no arguments       — all topics (full compaction, the previous
-          behavior; initial materialization / catalog publication point).
+          behavior; initial materialization).
 
         Each selected ``topic=`` directory is manifest-swapped (fresh
         files move in, replaced files retire behind the snapshot grace —
@@ -1278,70 +987,62 @@ class JournalStore:
         count and clustered by (topic, id, seq_nr) so post-compaction scans
         get min-max skipping on both the key and the seq range — the 100 TB
         layout where one journal read touches a handful of row groups, not
-        the whole topic.  Returns the topics actually compacted.
+        the whole topic.  Returns the topics actually compacted.  Holds
+        the store's mutation lock, so it never lands inside a replication
+        batch (see the ``mutation_lock`` field note).
         """
         from urllib.parse import unquote
 
-        # compaction is the store's maintenance entry point, so it also
-        # folds head deltas: full compaction folds every dirty band; the
-        # health-driven form folds bands at a file-count tier — min_files
-        # when the caller gave one, else a default tier (a debt-only call
-        # like compact(min_debt=1) is a MAINTENANCE call and must not
-        # degenerate into an unconditional O(all-dirty-rows) full fold).
-        # Folding never changes visible rows, so it neither stales nor
-        # republishes the catalog.
-        if min_debt is None and min_files is None:
-            fold_tier = None  # full compaction: fold every dirty band
-        else:
-            fold_tier = min_files if min_files is not None else META_FOLD_TIER
-        self.fold_metajournal(min_files=fold_tier)
-        if topics is None:
+        with self.mutation_lock:
+            # compaction is the store's maintenance entry point, so it also
+            # folds head deltas: full compaction folds every dirty band; the
+            # health-driven form folds bands at a file-count tier — min_files
+            # when the caller gave one, else a default tier (a debt-only call
+            # like compact(min_debt=1) is a MAINTENANCE call and must not
+            # degenerate into an unconditional O(all-dirty-rows) full fold).
+            # Folding never changes visible rows.
             if min_debt is None and min_files is None:
-                topics = [
-                    r.topic
-                    for r in self.journal().select("topic").distinct().collect()
-                ]
+                fold_tier = None  # full compaction: fold every dirty band
             else:
-                topics = [
-                    r.topic
-                    for r in self.health().collect()
-                    if (min_debt is not None and r.compaction_debt >= min_debt)
-                    or (min_files is not None and r.n_files >= min_files)
-                ]
-        topics = sorted(set(topics))
-        if not topics:
-            return []
-        # the isin filter prunes the scan to the selected partition dirs
-        visible = self.read().filter(F.col("topic").isin(topics))
-        journal = self.tables["journal"]
-        tmp = journal.stage(
-            visible.repartitionByRange("topic", "id", "seq_nr").sortWithinPartitions(
-                "topic", "id", "seq_nr"
-            ),
-            partition_by=["topic"],
-        )
-        # manifest-swap per topic directory: names come from Spark's own
-        # partition path escaping on the staged write; a selected topic
-        # with ZERO visible rows has no staged dir and its live files
-        # simply retire.  Unselected topics' files are untouched
-        # (identity-pinned)
-        fresh_dirs = {f.split(os.sep, 1)[0] for f in walk_parquet(tmp)}
-        live_dirs = {f.split(os.sep, 1)[0] for f in journal.live_files()}
-        sel = set(topics)
-        targets = fresh_dirs | {
-            d
-            for d in live_dirs
-            if d.startswith("topic=") and unquote(d[len("topic="):]) in sel
-        }
-        self._commit_swap("journal", tmp, targets)
-        # compaction is the natural publication point for the bucketed
-        # co-located layout — refresh it so read() planning stays
-        # catalog-first (the catalog is a SNAPSHOT by contract; stores that
-        # want O(touched) maintenance run without one).  When the catalog
-        # is ALREADY live, skip: compaction never changes visible rows, so
-        # the published snapshot still equals the store and republishing
-        # would be a pure O(table) rewrite for nothing (pinned by
-        # test_store_recovery.py::test_compact_skips_live_catalog_republish).
-        if self.catalog and not self._catalog_live:
-            self.publish_catalog()
-        return topics
+                fold_tier = min_files if min_files is not None else META_FOLD_TIER
+            self.fold_metajournal(min_files=fold_tier)
+            if topics is None:
+                if min_debt is None and min_files is None:
+                    topics = [
+                        r.topic
+                        for r in self.journal().select("topic").distinct().collect()
+                    ]
+                else:
+                    topics = [
+                        r.topic
+                        for r in self.health().collect()
+                        if (min_debt is not None and r.compaction_debt >= min_debt)
+                        or (min_files is not None and r.n_files >= min_files)
+                    ]
+            topics = sorted(set(topics))
+            if not topics:
+                return []
+            # the isin filter prunes the scan to the selected partition dirs
+            visible = self.read().filter(F.col("topic").isin(topics))
+            journal = self.tables["journal"]
+            tmp = journal.stage(
+                visible.repartitionByRange("topic", "id", "seq_nr").sortWithinPartitions(
+                    "topic", "id", "seq_nr"
+                ),
+                partition_by=["topic"],
+            )
+            # manifest-swap per topic directory: names come from Spark's own
+            # partition path escaping on the staged write; a selected topic
+            # with ZERO visible rows has no staged dir and its live files
+            # simply retire.  Unselected topics' files are untouched
+            # (identity-pinned)
+            fresh_dirs = {f.split(os.sep, 1)[0] for f in walk_parquet(tmp)}
+            live_dirs = {f.split(os.sep, 1)[0] for f in journal.live_files()}
+            sel = set(topics)
+            targets = fresh_dirs | {
+                d
+                for d in live_dirs
+                if d.startswith("topic=") and unquote(d[len("topic="):]) in sel
+            }
+            self._commit_swap("journal", tmp, targets)
+            return topics

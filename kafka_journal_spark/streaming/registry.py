@@ -45,7 +45,6 @@ class ReplicatorRegistry:
         schema_ddl: str,
         topic_filter: Optional[Callable[[str], bool]] = None,
         processing_time: Optional[str] = None,
-        store_factory: Optional[Callable[[SparkSession, str], JournalStore]] = None,
     ):
         self.spark = spark
         self.source_root = source_root
@@ -59,11 +58,6 @@ class ReplicatorRegistry:
         #: TopicReplicator.scala:280-284); None = as-fast-as-possible
         #: micro-batches (the test-drain default)
         self.processing_time = processing_time
-        #: per-topic store construction hook (e.g. to attach a catalog
-        #: prefix so a maintenance thread can publish_catalog concurrently)
-        self.store_factory = store_factory or (
-            lambda spark, path: JournalStore(spark, path)
-        )
         self._queries: dict[str, object] = {}  # topic -> StreamingQuery
         self.stores: dict[str, JournalStore] = {}
 
@@ -87,9 +81,7 @@ class ReplicatorRegistry:
     # -- lifecycle ---------------------------------------------------------
 
     def _start_topic(self, topic: str) -> None:
-        store = self.store_factory(
-            self.spark, os.path.join(self.store_root, topic)
-        )
+        store = JournalStore(self.spark, os.path.join(self.store_root, topic))
         self.stores[topic] = store
         stream = self.spark.readStream.schema(self.schema_ddl).parquet(
             os.path.join(self.source_root, topic)

@@ -101,10 +101,10 @@ def replicate_batch(batch: DataFrame, store: JournalStore) -> None:
     """Apply one micro-batch of actions to the store (idempotent).
 
     The whole batch holds the store's mutation lock: journal append, head
-    upsert and pointer upsert must be atomic w.r.t. MAINTENANCE (compact/
-    publish_catalog from another thread) — a compact landing between the
-    append and the head upsert sees the fresh rows as orphans (their
-    heads haven't advanced yet) and drops them.  Readers never block.
+    upsert and pointer upsert must be atomic w.r.t. MAINTENANCE (compact()
+    from another thread) — a compact landing between the append and the
+    head upsert sees the fresh rows as orphans (their heads haven't
+    advanced yet) and drops them.  Readers never block.
     """
     with store.mutation_lock:
         _replicate_batch_impl(batch, store)
@@ -145,20 +145,22 @@ def _replicate_batch_impl(batch: DataFrame, store: JournalStore) -> None:
         "_seg", meta_segment(F.col("id"), SEGMENTS_DEFAULT)
     )
     summ = summ.localCheckpoint(eager=True)  # reused for segments + merge
-    # one driver action serves three decisions: the emptiness guard (no
-    # rows at all -> nothing fresh), the touched metajournal segments, and
-    # the mark-only discrimination — a key whose batch actions are ALL
-    # marks has max_off NULL and must NOT reach the head merge (marks are
-    # read-side fencing records; the reference never writes metajournal
-    # rows for them, and the pre-fix path minted spurious heads with
-    # seq_nr=0/offset=-1 for mark-only keys).  Mark-only BATCHES still
-    # advance the pointers below (the reference commits offsets for every
-    # consumed record).
+    # one driver action serves four decisions: the emptiness guard (no
+    # rows at all -> nothing fresh), the touched topics (summ is grouped
+    # by (topic, id), so it holds every topic of ``fresh``), the touched
+    # metajournal segments, and the mark-only discrimination — a key
+    # whose batch actions are ALL marks has max_off NULL and must NOT
+    # reach the head merge (marks are read-side fencing records; the
+    # reference never writes metajournal rows for them, and the pre-fix
+    # path minted spurious heads with seq_nr=0/offset=-1 for mark-only
+    # keys).  Mark-only BATCHES still advance the pointers below (the
+    # reference commits offsets for every consumed record).
     seg_rows = summ.select(
-        "_seg", F.col("max_off").isNotNull().alias("_nm")
+        "topic", "_seg", F.col("max_off").isNotNull().alias("_nm")
     ).distinct().collect()
     if not seg_rows:
         return
+    touched_topics = sorted({r.topic for r in seg_rows})
     touched_segments = sorted({r._seg for r in seg_rows if r._nm})
     summ = summ.filter(F.col("max_off").isNotNull())
     # merge-on-read upsert: the store APPENDS per-key head deltas, so the
@@ -353,7 +355,6 @@ def _replicate_batch_impl(batch: DataFrame, store: JournalStore) -> None:
 
     # 4. pointers merge — restricted to the batch's topics (the pointers
     #    table is partitioned by topic; only those partitions are rewritten)
-    touched_topics = [r.topic for r in fresh.select("topic").distinct().collect()]
     new_ptr = (
         fresh.groupBy("topic", "partition")
         .agg(F.max("offset").alias("b_off"), F.min("timestamp").alias("b_created"), F.max("timestamp").alias("b_updated"))
@@ -383,8 +384,8 @@ def _replicate_batch_impl(batch: DataFrame, store: JournalStore) -> None:
     # exactly the reference's handling of mark records)
     if touched_segments:
         rows = rows.localCheckpoint(eager=True)
-        store.append_journal(rows, topics=touched_topics)
-        store.upsert_metajournal(heads_all, touched_segments, topics=touched_topics)
+        store.append_journal(rows)
+        store.upsert_metajournal(heads_all, touched_segments)
     store.upsert_pointers(new_ptr)
 
 

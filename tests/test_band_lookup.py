@@ -7,8 +7,10 @@ Two contracts are pinned here:
 
 - parity: the pruned lookup answers exactly what the unpruned resolution
   of the whole head table answers, on a store with dirty bands (delta
-  files and a purge tombstone) and after the fold, for ASCII keys and for
-  a non-ASCII key (which takes the unpruned path);
+  files, a purge tombstone, purge orphans and a duplicated seq_nr) and
+  after the fold, for ASCII keys and for a non-ASCII key (which takes the
+  unpruned path), under every read option: each ``JournalConfig`` mode
+  and a ``from_seq_nr`` bound;
 - cost: on a store with more than 32 band files (Spark's parallel-listing
   threshold) a pointer lookup is ONE Spark job of ONE task, and building a
   single-key read starts no job at all.
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 from kafka_journal_spark import SEGMENTS_DEFAULT
 from kafka_journal_spark.operators.replicate import segment_of
 from kafka_journal_spark.sources.statestore import JournalStore
+from kafka_journal_spark.sources.statestore import JournalConfig
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
 TOPIC = "journal"
@@ -33,6 +36,14 @@ ASCII_KEYS = ["a", "User-ABC", "polygenelubricants"] + [
     f"k-{i:03d}" for i in range(12)
 ]
 NON_ASCII = "naïve-ключ"
+#: ``read()`` options the key read must resolve like the whole-table read
+READ_OPTIONS = [
+    {},
+    {"config": JournalConfig(clamp_to_head=True)},
+    {"config": JournalConfig(correlate_events_with_meta=False)},
+    {"config": JournalConfig(seq_nr_uniqueness="quarantine")},
+    {"from_seq_nr": 2},
+]
 
 
 @contextlib.contextmanager
@@ -68,18 +79,27 @@ def _assert_pruned_equals_unpruned(store: JournalStore) -> None:
         r.id: r.asDict()
         for r in store.metajournal().filter(F.col("topic") == TOPIC).collect()
     }
-    full_read: dict[str, set] = {}
-    for r in store.read(topic=TOPIC).collect():
-        full_read.setdefault(r.id, set()).add((r.seq_nr, r.offset, r.payload_txt))
+    full_reads = []
+    for opts in READ_OPTIONS:
+        full: dict[str, set] = {}
+        for r in store.read(topic=TOPIC, **opts).collect():
+            full.setdefault(r.id, set()).add((r.seq_nr, r.offset, r.payload_txt))
+        full_reads.append(full)
+    # the options bite on this store: orphans, the duplicate and the
+    # seq_nr bound each change the result (the clamp is a no-op at batch
+    # boundaries, where every head equals its journal's last seq_nr)
+    results = {frozenset((k, frozenset(v)) for k, v in f.items()) for f in full_reads}
+    assert len(results) == 4
     all_files = set(store.metajournal().inputFiles())
     for key in ASCII_KEYS + [NON_ASCII, "absent"]:
         head = full_meta.get(key)
         assert store.pointer(TOPIC, key) == (head["seq_nr"] if head else None), key
-        got = {
-            (r.seq_nr, r.offset, r.payload_txt)
-            for r in store.read(topic=TOPIC, key=key).collect()
-        }
-        assert got == full_read.get(key, set()), key
+        for opts, full in zip(READ_OPTIONS, full_reads):
+            got = {
+                (r.seq_nr, r.offset, r.payload_txt)
+                for r in store.read(topic=TOPIC, key=key, **opts).collect()
+            }
+            assert got == full.get(key, set()), (key, opts)
         rows = [
             r.asDict()
             for r in store.metajournal_of_keys([key])
@@ -112,6 +132,9 @@ def test_pruned_lookups_equal_unpruned_resolution_dirty_and_folded(spark, tmp_pa
                 delete(NON_ASCII, 1),
                 append(NON_ASCII, 3),
                 append("k-000", 3),
+                purge("k-001"),  # its earlier rows become orphans
+                append("k-001", 1),
+                append("k-002", 2),  # seq_nr 2 again, at a new offset
             ],
             offset_base=1000,
         ),

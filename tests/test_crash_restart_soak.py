@@ -86,14 +86,14 @@ def test_crash_restart_converges_to_one_shot(spark, tmp_path, kill):
     real_meta = store.upsert_metajournal
     real_ptr = store.upsert_pointers
 
-    def app(rows, topics=None):
+    def app(rows):
         batch_no["n"] += 1
-        return real_app(rows, topics=topics)
+        return real_app(rows)
 
-    def meta(df, segs, topics=None):
+    def meta(df, segs):
         if kill == "before_meta" and batch_no["n"] == 2:
             raise RuntimeError("injected crash: after journal, before heads")
-        return real_meta(df, segs, topics=topics)
+        return real_meta(df, segs)
 
     def ptr(df):
         if batch_no["n"] == 2:

@@ -1,12 +1,11 @@
-"""Merge-on-read metajournal deltas + incremental catalog publication —
-the write-path economics pins.
+"""Merge-on-read metajournal deltas — the write-path economics pins.
 
 The reference upserts ONE Cassandra row per key per batch
 (``MetaJournalStatements.scala:315-634``); the parquet equivalent must not
 secretly rewrite a band's worth of neighbor keys per trigger.  These tests
 pin the file-level contract: a 1-key batch APPENDS O(1) files and rewrites
-NOTHING, the maintenance fold collapses deltas without changing any read,
-and a catalog republication touches only the topics that were written.
+NOTHING, and the maintenance fold collapses deltas without changing any
+read.
 """
 
 from __future__ import annotations
@@ -139,16 +138,6 @@ def test_resolver_fast_path_skips_merge_when_folded(spark, tmp_path):
     assert "max_by" not in clean_plan and "HashAggregate" not in clean_plan
 
 
-def _table_location(spark, table: str) -> str:
-    row = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
-        .filter(F.col("col_name") == "Location")
-        .collect()
-    )
-    loc = row[0].data_type
-    return loc[len("file:"):] if loc.startswith("file:") else loc
-
-
 def test_second_instance_reads_deltas_and_folds(spark, tmp_path):
     """The delta bookkeeping (dirty bands, write stamps) lives in store
     ROOT tokens, not instance memory: a FRESH JournalStore over the same
@@ -166,157 +155,6 @@ def test_second_instance_reads_deltas_and_folds(spark, tmp_path):
     # A sees B's fold through the on-disk token — clean fast path, same rows
     assert a._dirty_bands() == []
     assert {r.id: r.seq_nr for r in a.metajournal().collect()} == {"k": 2}
-
-
-def test_partial_catalog_publication_scopes_to_dirty_topics(spark, tmp_path):
-    try:
-        store = JournalStore(spark, str(tmp_path / "s"), catalog="t_partial")
-        replicate_batch(
-            make_actions(spark, [append("a1", 1), append("b1", 1, topic="other")]),
-            store,
-        )
-        store.publish_catalog()
-        assert store._catalog_live
-        locs = {
-            t: _table_location(spark, f"t_partial_{t}")
-            for t in ("journal", "metajournal")
-        }
-        before = {t: _file_inventory(loc) for t, loc in locs.items()}
-
-        # write to topic "journal" only -> catalog stale, "other" untouched
-        replicate_batch(
-            make_actions(spark, [append("a1", 2)], offset_base=100), store
-        )
-        assert not store._catalog_live
-        assert store._dirty_catalog_topics() == ["journal"]
-        store.publish_catalog()
-        assert store._catalog_live
-
-        for t, loc in locs.items():
-            after = _file_inventory(loc)
-            untouched = {
-                p: mt for p, mt in before[t].items() if "topic=other" in p
-            }
-            assert untouched and all(
-                after.get(p) == mt for p, mt in untouched.items()
-            ), (t, untouched)
-
-        # the catalog read path serves the merged state
-        got = {
-            (r.topic, r.id, r.seq_nr) for r in store.read().collect()
-        }
-        assert got == {
-            ("journal", "a1", 1),
-            ("journal", "a1", 2),
-            ("other", "b1", 1),
-        }
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_partial_journal")
-        spark.sql("DROP TABLE IF EXISTS t_partial_metajournal")
-
-
-def test_partial_publication_drops_emptied_topic_partition(spark, tmp_path):
-    """A topic whose rows all vanish (purge, then compaction) loses its
-    catalog partition on the next publication instead of serving stale
-    rows forever."""
-    try:
-        store = JournalStore(spark, str(tmp_path / "s"), catalog="t_gone")
-        replicate_batch(
-            make_actions(spark, [append("a", 1), append("b", 1, topic="other")]),
-            store,
-        )
-        store.publish_catalog()
-        replicate_batch(
-            make_actions(spark, [purge("a")], offset_base=100), store
-        )
-        store.compact(["journal"])  # physically drops the purged rows
-        store.publish_catalog()
-        assert store._catalog_live
-        assert store.read().filter(F.col("topic") == "journal").count() == 0
-        assert {
-            (r.id, r.seq_nr)
-            for r in store.read().filter(F.col("topic") == "other").collect()
-        } == {("b", 1)}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_gone_journal")
-        spark.sql("DROP TABLE IF EXISTS t_gone_metajournal")
-
-
-def test_concurrent_write_survives_publication_dirty_reset(spark, tmp_path):
-    """The publish-during-write race (round-8 advice): a writer pre-marks
-    its topic dirty, a concurrent publication consumes the dirty token and
-    scans BEFORE the writer's data lands, then the data lands.  The
-    post-write mark must (a) keep that publication stale and (b) leave the
-    topic dirty so the NEXT publication republishes it with the data —
-    the old clear-at-the-end design erased the topic from the dirty set
-    and the next publication no-op'd itself live over a stale catalog."""
-    try:
-        store = JournalStore(spark, str(tmp_path / "s"), catalog="t_race")
-        replicate_batch(make_actions(spark, [append("a", 1)]), store)
-        store.publish_catalog()
-        assert store._catalog_live
-
-        # interleave by hand: pre-mark fires, publication runs, THEN the
-        # data lands and the post-mark fires (the exact window a
-        # scheduler-thread publish_catalog hits against the replicator)
-        rows = store.journal().filter(F.col("seq_nr") == 1).withColumn(
-            "seq_nr", F.lit(2).cast("long")
-        ).localCheckpoint(eager=True)
-        store._mark_stale(["journal"])               # writer: pre-mark
-        store.publish_catalog()                      # concurrent publication
-        store._commit_append(                        # writer: data lands
-            "journal",
-            lambda: rows.write.mode("append")
-            .partitionBy("topic")
-            .parquet(store._path("journal")),
-        )
-        store._mark_stale(["journal"])               # writer: post-mark
-
-        # the publication that raced the write must grade stale, and the
-        # topic must still be dirty for the next one
-        assert not store._catalog_live
-        assert store._dirty_catalog_topics() == ["journal"]
-
-        store.publish_catalog()
-        assert store._catalog_live
-        assert {
-            (r.id, r.seq_nr) for r in store.read().collect()
-        } == {("a", 1), ("a", 2)}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_race_journal")
-        spark.sql("DROP TABLE IF EXISTS t_race_metajournal")
-
-
-def test_stale_catalog_with_empty_dirty_set_escalates_to_full_republish(
-    spark, tmp_path
-):
-    """A stale epoch with an EMPTY dirty token is the lost-mark signature
-    (crash between the publication's dirty reset and its epoch stamp):
-    the next publication must treat the scope as unknown and republish
-    everything rather than no-op itself live."""
-    try:
-        store = JournalStore(spark, str(tmp_path / "s"), catalog="t_lost")
-        replicate_batch(make_actions(spark, [append("a", 1)]), store)
-        store.publish_catalog()
-        replicate_batch(
-            make_actions(spark, [append("a", 2)], offset_base=100), store
-        )
-        # simulate the lost mark: epoch moved (write above) but the dirty
-        # token was wiped without the epoch stamp
-        import json
-
-        store._write_token("_catalog_dirty", json.dumps([]))
-        assert not store._catalog_live
-
-        store.publish_catalog()
-        assert store._catalog_live
-        assert {(r.id, r.seq_nr) for r in store.read().collect()} == {
-            ("a", 1),
-            ("a", 2),
-        }
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_lost_journal")
-        spark.sql("DROP TABLE IF EXISTS t_lost_metajournal")
 
 
 def test_wide_batch_takes_band_complete_path_and_leaves_no_debt(spark, tmp_path):

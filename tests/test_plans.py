@@ -69,37 +69,6 @@ def test_store_read_prunes_partitions_and_pushes_seq_nr(spark, tmp_path):
     assert "PartitionFilters" in p
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    from kafka_journal_spark.operators.actions import journal_actions
-    from kafka_journal_spark.operators.replicate import (
-        materialize_journal,
-        materialize_metajournal,
-    )
-    from kafka_journal_spark.sources.layout import (
-        read_journal_colocated,
-        write_journal_bucketed,
-        write_metajournal_bucketed,
-    )
-
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force the issue
-    try:
-        acts = journal_actions(spark, SF)
-        write_journal_bucketed(materialize_journal(acts), "t_j")
-        write_metajournal_bucketed(materialize_metajournal(acts), "t_m")
-        df = read_journal_colocated(spark, "t_j", "t_m")
-        p = _plan(df)
-        assert "SortMergeJoin" in p or "ShuffledHashJoin" in p
-        # aligned buckets -> NO exchange above either side of the join
-        assert "Exchange hashpartitioning" not in p, p
-        # sanity: result matches the unbucketed read
-        assert df.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS t_j")
-        spark.sql("DROP TABLE IF EXISTS t_m")
-
-
 def test_recovery_merge_plan_is_lean(spark):
     from kafka_journal_spark.operators.actions import journal_actions
     from kafka_journal_spark.operators.read import recovery_merge
@@ -117,58 +86,6 @@ def test_recovery_merge_plan_is_lean(spark):
     # 100M actions)
     assert p.count("Scan parquet") <= 2
     assert "SortMergeJoin" not in p
-
-
-def test_store_catalog_read_is_colocated_and_correct(spark, tmp_path):
-    """With catalog=<prefix>, compaction publishes id-bucketed tables and
-    read() plans the co-located join: ZERO exchange anywhere in the read
-    (join AND R5 window both reuse the scan's hash(id) bucketing)."""
-    from conftest import append, delete, make_actions
-
-    from kafka_journal_spark.sources.statestore import JournalStore
-    from kafka_journal_spark.streaming.replicator import replicate_batch
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # session.get_spark sets this; the test session opts in explicitly
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    try:
-        store = JournalStore(spark, str(tmp_path / "cat"), catalog="t_store")
-        replicate_batch(
-            make_actions(
-                spark,
-                [append("a", 1), append("a", 2), delete("a", 1), append("b", 1)],
-            ),
-            store,
-        )
-        parquet_rows = {(r.id, r.seq_nr) for r in store.read().collect()}
-
-        store.compact()  # publication point
-        assert store._catalog_live
-        p = _plan(store.read())
-        assert "Exchange" not in p, p
-        catalog_rows = {(r.id, r.seq_nr) for r in store.read().collect()}
-        assert catalog_rows == parquet_rows == {("a", 2), ("b", 1)}
-
-        # any write stales the publication -> read falls back to live parquet
-        replicate_batch(
-            make_actions(spark, [append("b", 2)], offset_base=10), store
-        )
-        assert not store._catalog_live
-        assert {(r.id, r.seq_nr) for r in store.read().collect()} == {
-            ("a", 2), ("b", 1), ("b", 2),
-        }
-
-        # recompaction republishes with the new tail folded in
-        store.compact()
-        assert store._catalog_live
-        assert {(r.id, r.seq_nr) for r in store.read().collect()} == {
-            ("a", 2), ("b", 1), ("b", 2),
-        }
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "true")
-        spark.sql("DROP TABLE IF EXISTS t_store_journal")
-        spark.sql("DROP TABLE IF EXISTS t_store_metajournal")
 
 
 def test_pack_chunks_single_shuffle(spark):

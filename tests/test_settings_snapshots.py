@@ -265,3 +265,20 @@ def test_snapshot_store_crash_before_publish_keeps_old_snapshot(
     assert {(r.id, r.seq_nr) for r in s._df().collect()} == {
         ("a", 5), ("a", 10), ("b", 7)
     }
+
+
+def test_snapshot_store_retry_after_failed_save_reuses_its_slot(
+    spark, tmp_path, monkeypatch
+):
+    """A save that fails before its commit must not advance the ring: the
+    same instance's retry lands in the slot the failed save targeted."""
+    from kafka_journal_spark.operators.snapshots import SnapshotStore
+
+    s = SnapshotStore(spark, str(tmp_path / "snapstore"))
+    s.save("t", "a", 5, "state@5")  # slot 0
+    with monkeypatch.context() as m:
+        _crash_at(m, "swap_precommit_snapshots")
+        with pytest.raises(_Crash):
+            s.save("t", "a", 10, "state@10")  # targets slot 1
+    s.save("t", "a", 10, "state@10")
+    assert {(r.buffer_nr, r.seq_nr) for r in s._df().collect()} == {(0, 5), (1, 10)}

@@ -1,8 +1,8 @@
 """Crash-recovery and multi-instance invariants of the JournalStore — the
 tests behind the documented architecture decision (COVERAGE.md "Authoritative
 head store"): the parquet metajournal is the AUTHORITY, the journal is the
-source of truth it can always be rebuilt from, and the bucketed catalog /
-standing head-state stream are caches that must never serve stale state.
+source of truth it can always be rebuilt from, and the standing head-state
+stream is a cache that must never serve stale state.
 
 Reference parity: the reference recovers from a crashed replicator batch via
 Kafka-offset replay + idempotent Cassandra upserts
@@ -20,24 +20,6 @@ from conftest import append, delete, make_actions
 
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
-
-
-def test_catalog_snapshot_invalidated_by_second_instance(spark, tmp_path):
-    # the catalog publication watermark lives in the store ROOT, not in
-    # instance memory: a write through instance B stales instance A's
-    # bucketed-catalog snapshot (the cache can never mask new appends)
-    try:
-        a = JournalStore(spark, str(tmp_path / "s"), catalog="t_xinst")
-        replicate_batch(make_actions(spark, [append("k", 1)]), a)
-        a.compact()
-        assert a._catalog_live
-        b = JournalStore(spark, str(tmp_path / "s"), catalog="t_xinst")
-        replicate_batch(make_actions(spark, [append("k", 2)], offset_base=10), b)
-        assert not a._catalog_live  # A sees B's write through the watermark
-        assert {(r.id, r.seq_nr) for r in a.read().collect()} == {("k", 1), ("k", 2)}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_xinst_journal")
-        spark.sql("DROP TABLE IF EXISTS t_xinst_metajournal")
 
 
 def test_restart_after_crash_mid_batch_preserves_authority(spark, tmp_path):
@@ -172,35 +154,3 @@ def test_incremental_compact_rewrites_only_debt_topics(spark, tmp_path):
     assert store.compact(min_debt=1, min_files=10_000) == []
     assert store.compact(topics=["other"]) == ["other"]
     assert {(r.topic, r.id, r.seq_nr) for r in store.read().collect()} == before_vis
-
-
-def test_compact_skips_live_catalog_republish(spark, tmp_path):
-    """Compaction never changes visible rows, so a LIVE catalog snapshot
-    stays valid across it — compact() must not rewrite the catalog tables
-    (file identity check), while a stale catalog still gets republished."""
-    import glob
-
-    store = JournalStore(
-        spark, str(tmp_path / "cat2"), catalog="t_skip_cat", buckets=4
-    )
-    try:
-        replicate_batch(
-            make_actions(spark, [append("a", 1), append("a", 2), delete("a", 1)]),
-            store,
-        )
-        store.compact()  # stale -> publishes
-        assert store._catalog_live
-        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        cat_files = lambda: {  # noqa: E731
-            (p, os.path.getmtime(p))
-            for p in glob.glob(os.path.join(wh, "t_skip_cat_*", "**", "*"), recursive=True)
-        }
-        before = cat_files()
-        want = {(r.id, r.seq_nr) for r in store.read().collect()}
-        store.compact()  # live -> must NOT republish
-        assert store._catalog_live
-        assert cat_files() == before
-        assert {(r.id, r.seq_nr) for r in store.read().collect()} == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_skip_cat_journal")
-        spark.sql("DROP TABLE IF EXISTS t_skip_cat_metajournal")

@@ -154,15 +154,15 @@ def test_multi_topic_soak_discovery_and_concurrent_maintenance(spark, tmp_path):
     """The reference Replicator's full lifecycle under standing triggers
     (``Replicator.scala:43-170``): >= 2 topics with one APPEARING MID-RUN
     (registry discovery), while a REAL second thread runs the maintenance
-    loop (``compact()`` + ``publish_catalog()``) against the live stores —
-    the two-stamp catalog staleness protocol exercised by genuine thread
-    interleaving, not the hand-built race in test_meta_deltas.
+    loop (``compact()``) against the live stores — the store's mutation
+    lock and the manifest's snapshot isolation exercised by genuine thread
+    interleaving.
 
     Asserts: the new topic is discovered and drains; every mid-run read is
     prefix-consistent; the maintenance thread completes cycles without an
     exception; and both topics' final states equal one-shot
-    materializations (so no concurrent compaction/publication ever
-    dropped, duplicated, or served a stale row)."""
+    materializations (so no concurrent compaction ever dropped,
+    duplicated, or served a stale row)."""
     import threading
 
     from kafka_journal_spark.streaming.registry import ReplicatorRegistry
@@ -185,9 +185,6 @@ def test_multi_topic_soak_discovery_and_concurrent_maintenance(spark, tmp_path):
         store_root,
         ACTIONS_DDL,
         processing_time="200 milliseconds",
-        store_factory=lambda s, path: JournalStore(
-            s, path, catalog=f"soak9_{os.path.basename(path)}"
-        ),
     )
 
     def feed(topic: str, rnd: int) -> list[dict]:
@@ -209,7 +206,6 @@ def test_multi_topic_soak_discovery_and_concurrent_maintenance(spark, tmp_path):
             try:
                 for st in list(reg.stores.values()):
                     st.compact(min_files=4, min_debt=1)
-                    st.publish_catalog()
                 maint_cycles["n"] += 1
             except BaseException as e:  # noqa: BLE001 — recorded, re-raised below
                 maint_errors.append(e)

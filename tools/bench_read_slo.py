@@ -1,17 +1,16 @@
 """Per-journal recovery-latency SLO harness: p50/p95 of single-key
-``read()`` over sampled keys of a replicated store, via BOTH the
-live-parquet path and the bucketed-catalog path, graded against the
+``read()`` over sampled keys of a replicated store, graded against the
 reference's recovery ceilings (``JournalPerfSpec.scala:116-117``: a
 journal must recover in <= 1 s, <= 2 s under the slower shape).
 
 The store is built once per sf dir (3-batch replication of the events
-action log + catalog publication) and cached under ``.scale/`` so repeat
+action log, then ``compact()``) and cached under ``.scale/`` so repeat
 runs measure READS, not builds.
 
 Usage: python tools/bench_read_slo.py [sf_dir] [n_keys]
 Prints one JSON line:
-  {"metric": "read_slo", "paths": {"parquet": {"p50": ..., "p95": ...},
-   "catalog": {...}}, "n_keys": N, "sf_dir": ...}
+  {"metric": "read_slo", "read": {"p50": ..., "p95": ..., ...},
+   "n_keys": N, "sf_dir": ...}
 """
 
 from __future__ import annotations
@@ -26,18 +25,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-def build_store(spark, sf_dir: str, root: str, catalog: str):
-    """Replicate sf_dir's action log into a catalog-published store at
-    ``root`` (reused when already built)."""
+def build_store(spark, sf_dir: str, root: str):
+    """Replicate sf_dir's action log into a compacted store at ``root``
+    (reused when already built)."""
     from kafka_journal_spark.operators.actions import journal_actions
     from kafka_journal_spark.sources.statestore import JournalStore
     from kafka_journal_spark.streaming.replicator import replicate_batch
 
-    store = JournalStore(spark, root, catalog=catalog)
+    store = JournalStore(spark, root)
     done = os.path.join(root, "_slo_store_ready")
     if os.path.exists(done):
-        if not store._catalog_live:
-            store.publish_catalog()
         return store
     acts = journal_actions(spark, sf_dir)
     hi = acts.agg(F.max("offset")).collect()[0][0] or 0
@@ -46,9 +43,7 @@ def build_store(spark, sf_dir: str, root: str, catalog: str):
         replicate_batch(
             acts.filter((F.col("offset") >= lo) & (F.col("offset") < up)), store
         )
-    store.compact()  # fold + publish: the steady-state layout reads hit
-    if not store._catalog_live:
-        store.publish_catalog()
+    store.compact()  # fold: the steady-state layout reads hit
     with open(done, "w") as f:
         f.write("ok")
     return store
@@ -74,47 +69,38 @@ def _pct(xs: list[float], q: float) -> float:
 
 
 def measure(spark, sf_dir: str, n_keys: int = 100) -> dict:
-    from kafka_journal_spark.sources.statestore import JournalStore
-
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scale",
         f"slo_store_{tag}",
     )
-    cat_store = build_store(spark, sf_dir, root, catalog=f"slo_{tag}")
-    # same root WITHOUT a catalog handle = the live-parquet read path
-    pq_store = JournalStore(spark, root)
-    keys = sample_keys(cat_store, n_keys)
-    assert cat_store._catalog_live
-
-    out = {}
-    for path_name, store in (("parquet", pq_store), ("catalog", cat_store)):
-        lat = []
-        nonempty = 0
-        # one warm-up read pays one-time planning/listing costs
-        store.read(*keys[0]).count()
-        for topic, key in keys:
-            t0 = time.perf_counter()
-            n = store.read(topic, key).count()
-            lat.append(time.perf_counter() - t0)
-            nonempty += n > 0
-        # a key whose whole journal is deleted legitimately reads 0 rows
-        # (head survives, events hidden) — but a mostly-empty sample would
-        # mean the measurement isn't exercising real recoveries
-        assert nonempty * 2 >= len(keys), (path_name, nonempty, len(keys))
-        out[path_name] = {
-            "p50": round(_pct(lat, 0.50), 4),
-            "p95": round(_pct(lat, 0.95), 4),
-            "max": round(max(lat), 4),
-            "mean": round(sum(lat) / len(lat), 4),
-        }
+    store = build_store(spark, sf_dir, root)
+    keys = sample_keys(store, n_keys)
+    # one warm-up read pays one-time planning/listing costs
+    store.read(*keys[0]).count()
+    lat = []
+    nonempty = 0
+    for topic, key in keys:
+        t0 = time.perf_counter()
+        n = store.read(topic, key).count()
+        lat.append(time.perf_counter() - t0)
+        nonempty += n > 0
+    # a key whose whole journal is deleted legitimately reads 0 rows
+    # (head survives, events hidden) — but a mostly-empty sample would
+    # mean the measurement isn't exercising real recoveries
+    assert nonempty * 2 >= len(keys), (nonempty, len(keys))
     return {
         "metric": "read_slo",
         "unit": "sec",
         "sf_dir": sf_dir,
         "n_keys": len(keys),
-        "paths": out,
+        "read": {
+            "p50": round(_pct(lat, 0.50), 4),
+            "p95": round(_pct(lat, 0.95), 4),
+            "max": round(max(lat), 4),
+            "mean": round(sum(lat) / len(lat), 4),
+        },
         "ceilings": {"p50": 1.0, "p95": 2.0},
     }
 
@@ -132,12 +118,12 @@ def main():
     spark.stop()
     # standalone runs assert the ceilings; a caller that owns the
     # assertion (tests/test_read_slo.py retries noisy attempts and asserts
-    # the per-path minimum) sets KJ_SLO_NO_ASSERT=1 — without this, one
+    # the minimum) sets KJ_SLO_NO_ASSERT=1 — without this, one
     # over-ceiling attempt exits non-zero and the caller's retry logic
     # never runs (the exact flake the min-of-attempts fix was for)
     if os.environ.get("KJ_SLO_NO_ASSERT") != "1":
-        for p, v in res["paths"].items():
-            assert v["p50"] <= 1.0 and v["p95"] <= 2.0, (p, v)
+        v = res["read"]
+        assert v["p50"] <= 1.0 and v["p95"] <= 2.0, v
 
 
 if __name__ == "__main__":
