@@ -25,24 +25,37 @@ Mark (W4) does not exist here by design: the end-offset of the actions log
 is the fence (SURVEY §3.1) — the client never needs to write to read.
 
 Client calls are single-key and driver-side (like the reference's); bulk
-work belongs to the replicator/streaming pipeline.  A call folds its key's
-un-replicated tail once: ``read`` collects the tail one time for both the
-HeadInfo and the tail's purge horizon, and ``purge`` decides "absent" from
-one tail pass plus one head lookup.  The rows a call writes, and every
-empty frame it plans over, enter Spark through Arrow
+work belongs to the replicator/streaming pipeline.  A client call starts
+Spark jobs only for data Spark has to scan.  The client keeps a footer
+index of the actions log on the driver: per file, keyed by (name,
+mtime_ns, size), its max offset per partition, read once with pyarrow.
+From it ``_next_offset`` is a max over the index (the broker's log-end
+offset, no scan), and ``_tail`` reads a key's un-replicated rows with
+pyarrow from only the files that reach past their partition's replicated
+pointer — so a call's log cost follows the tail, not the log ("the other
+one loses its tail").  The pointers themselves are collected once per
+pointers commit (``_pointers``).  ``read`` folds the tail rows for the
+HeadInfo and the purge horizon, and hands them to Spark (as a local
+frame) only when the plan reads the tail.  The rows a call writes, and
+every empty frame it plans over, enter Spark through Arrow
 (``session.local_frame``), so no call starts a Python worker.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import json
 import os
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_journal_spark.folds import ActionRec, HeadInfo, head_info
-from kafka_journal_spark.plans.recovery import read_with_plan
+from kafka_journal_spark.plans.recovery import plan_recovery, read_with_plan
 from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.manifest import ManifestTable, read_token, write_token
 from kafka_journal_spark.sources.statestore import JournalStore
@@ -60,6 +73,22 @@ ACTIONS_LOG_DDL = (
 
 #: the log columns the HeadInfo fold reads, in ``folds.ActionRec`` order
 FOLD_COLS = ("action_type", "offset", "seq_nr_from", "seq_nr_to", "delete_to")
+
+
+@functools.lru_cache(maxsize=1)
+def _log_struct():
+    """``ACTIONS_LOG_DDL`` parsed (a JVM call, so once per process)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    return _parse_datatype_string(ACTIONS_LOG_DDL)
+
+
+@functools.lru_cache(maxsize=1)
+def _log_arrow_schema() -> pa.Schema:
+    """``ACTIONS_LOG_DDL`` as the Arrow schema of a driver-side tail."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(_log_struct())
 
 
 #: per-key HeadInfo snapshot row (head_info_batch output)
@@ -101,6 +130,13 @@ class JournalClient:
         self.head_snapshot_token = os.path.join(root, "head-snapshot.token")
         self.store = JournalStore(spark, os.path.join(root, "store"))
         os.makedirs(root, exist_ok=True)
+        #: the log's footer index: (name, mtime_ns, size) of every data
+        #: file -> {partition: max offset}; holds exactly the files of the
+        #: last listing
+        self._log_index: dict[tuple[str, int, int], dict[int, int]] = {}
+        #: (pointers live files, {(topic, partition): offset}) — the
+        #: replicated fence, re-collected only when a commit changed it
+        self._ptr_cache: tuple[set[str], dict[tuple[str, int], int]] | None = None
 
     # -- log access --------------------------------------------------------
 
@@ -109,13 +145,63 @@ class JournalClient:
             return self.spark.read.schema(ACTIONS_LOG_DDL).parquet(self.log_path)
         return local_frame(self.spark, [], ACTIONS_LOG_DDL)
 
-    def _next_offset(self) -> int:
-        row = self._log().agg(F.max("offset").alias("m")).collect()[0]
-        return (row.m if row.m is not None else -1) + 1
+    def _index(self) -> dict[tuple[str, int, int], dict[int, int]]:
+        """The log's footer index, brought up to date with one listing.
 
-    def _tail(self, topic: str, key: str) -> DataFrame:
+        Files are listed the way ``spark.read.parquet(log_path)`` lists
+        them (names starting with ``_`` or ``.`` are Spark's commit
+        markers and checksums, not data), and a file is read — its
+        ``partition`` and ``offset`` columns only — the first time its
+        (name, mtime_ns, size) shows up.  Any writer, this client or an
+        out-of-band producer, adds a freshly named file or replaces one
+        under a new size or mtime, so a stale entry cannot match.
+        Entries of files that left the listing are dropped: the index
+        never holds more entries than the log has files."""
+        listed = []
+        try:
+            with os.scandir(self.log_path) as it:
+                for e in it:
+                    if e.name.startswith(("_", ".")) or not e.is_file():
+                        continue
+                    try:
+                        st = e.stat()
+                    except FileNotFoundError:
+                        continue  # replaced mid-listing; the next call sees it
+                    listed.append((e.name, st.st_mtime_ns, st.st_size))
+        except FileNotFoundError:
+            pass
+        old = self._log_index
+        self._log_index = {k: old[k] if k in old else self._file_maxes(k[0]) for k in listed}
+        return self._log_index
+
+    def _file_maxes(self, name: str) -> dict[int, int]:
+        t = pq.read_table(
+            os.path.join(self.log_path, name), columns=["partition", "offset"]
+        ).group_by("partition").aggregate([("offset", "max")])
+        return dict(zip(t["partition"].to_pylist(), t["offset_max"].to_pylist()))
+
+    def _next_offset(self) -> int:
+        """The log-end offset: the max over the footer index, plus 1."""
+        return max((o for m in self._index().values() for o in m.values()), default=-1) + 1
+
+    def _pointers(self) -> dict[tuple[str, int], int]:
+        """The replicated pointers as {(topic, partition): offset}.
+
+        Collected again only when the pointers table's live files changed:
+        every pointers commit brings in freshly named files.  The file
+        list is read before the rows, so a commit landing in between can
+        only make the cached rows newer than their key, which costs one
+        more collect later, never a stale fence."""
+        files = self.store.tables["pointers"].live_files()
+        if self._ptr_cache is None or self._ptr_cache[0] != files:
+            rows = self.store.pointers().collect()
+            self._ptr_cache = (files, {(r.topic, r.partition): r.offset for r in rows})
+        return self._ptr_cache[1]
+
+    def _tail(self, topic: str, key: str) -> pa.Table:
         """Un-replicated actions of a key (offset beyond the replicated
-        pointer of its partition).
+        pointer of its partition), in offset order, as an Arrow table of
+        ``ACTIONS_LOG_DDL``.
 
         Fences by each ROW's own partition column, not a partition
         re-derived from ``md5(key)``: a store replicated from a log with a
@@ -124,24 +210,44 @@ class JournalClient:
         fresh ones.  The sibling paths (``_unreplicated_tail``,
         ``read_many``) fence the same way.
 
-        The topic's pointers (one row per log partition) are collected
-        here and inlined as a per-partition literal fence, so every plan
-        over the returned frame — a read's tail collect and its final
-        plan — scans the log with no broadcast join of its own."""
-        fence = F.lit(-1)
-        for r in self.store.pointers().filter(F.col("topic") == topic).collect():
-            fence = F.when(F.col("partition") == r.partition, F.lit(r.offset)).otherwise(
-                fence
+        Only files whose max offset in some partition is above that
+        partition's fence are read, with the key's (topic, id) pushed into
+        the parquet reader; columns a file lacks come back as typed
+        NULLs.  No Spark job runs."""
+        fence = {p: o for (t, p), o in self._pointers().items() if t == topic}
+        schema = _log_arrow_schema()
+        parts = []
+        for (name, _, _), maxes in self._index().items():
+            if not any(o > fence.get(p, -1) for p, o in maxes.items()):
+                continue
+            t = pq.read_table(
+                os.path.join(self.log_path, name),
+                filters=[("topic", "=", topic), ("id", "=", key)],
+                partitioning=None,
             )
-        return self._log().filter(
-            (F.col("topic") == topic) & (F.col("id") == key) & (F.col("offset") > fence)
-        )
+            parts.append(
+                pa.table(
+                    [
+                        t[f.name].cast(f.type) if f.name in t.column_names
+                        else pa.nulls(t.num_rows, f.type)
+                        for f in schema
+                    ],
+                    schema=schema,
+                )
+            )
+        if not parts:
+            return schema.empty_table()
+        tail = pa.concat_tables(parts)
+        keep = [
+            o > fence.get(p, -1)
+            for p, o in zip(tail["partition"].to_pylist(), tail["offset"].to_pylist())
+        ]
+        return tail.filter(pa.array(keep, pa.bool_())).sort_by("offset")
 
     @staticmethod
-    def _fold_recs(tail: DataFrame) -> list[ActionRec]:
-        """A key's tail as fold records: one collect, projected to the
-        fold's columns."""
-        return [ActionRec(*r) for r in tail.select(*FOLD_COLS).collect()]
+    def _fold_recs(tail: pa.Table) -> list[ActionRec]:
+        """A key's tail rows as fold records."""
+        return [ActionRec(*r) for r in zip(*(tail[c].to_pylist() for c in FOLD_COLS))]
 
     def _tail_head(self, topic: str, key: str):
         return head_info(self._fold_recs(self._tail(topic, key)))
@@ -162,61 +268,20 @@ class JournalClient:
             .drop("_ptr_off")
         )
 
-    @staticmethod
-    def _dir_sig(path: str) -> str:
-        """Cheap filesystem signature of a parquet dir: md5 over the
-        sorted (name, mtime_ns, size) of every file.  Any writer — this
-        client OR an out-of-band process — creates/replaces part files,
-        changing the signature.  A content digest, not Python ``hash()``:
-        a 64-bit hash collision (or an equal-size in-place overwrite under
-        coarse mtime) would validate a stale head-snapshot token and
-        silently mis-plan a snapshot read (r9 advice) — same O(files)
-        cost, no collision exposure beyond md5's."""
-        import hashlib
-
-        sig = []
-        for root, _, files in os.walk(path):
-            for f in files:
-                p = os.path.join(root, f)
-                try:
-                    st = os.stat(p)
-                except FileNotFoundError:
-                    continue  # concurrent swap mid-walk; next call re-reads
-                sig.append(f"{p}\x00{st.st_mtime_ns}\x00{st.st_size}")
-        return hashlib.md5("\n".join(sorted(sig)).encode()).hexdigest()
-
     def _log_fingerprint(self) -> str:
-        """Validity token for the head snapshot: the log end offset plus
-        the replicated pointers.  Appends move the former, replication the
-        latter — either invalidates the snapshot.
+        """Validity token for the head snapshot: the log's files (from the
+        footer index) plus the replicated pointers.  Appends move the
+        former, replication the latter — either invalidates the snapshot,
+        and so does any out-of-band writer, which adds or replaces a log
+        file or commits a new pointers manifest.  Starts no Spark job
+        unless the pointers changed since the last call.
 
-        The Spark jobs (max-offset scan + pointers collect) run only when
-        the underlying FILES changed since the last call: snapshot-mode
-        reads otherwise paid two full log-metadata jobs per call just to
-        validate the token, defeating the snapshot's point-lookup purpose.
-        The log side is a stat-walk signature of the actions log; the
-        pointers side is the pointers table's live-file list (one manifest
-        read — every commit moves in freshly named files, and vacuuming
-        retired files leaves it unchanged).  Out-of-band mutation safety
-        is preserved — any writer changes the log's part files or
-        commits a new pointers manifest, which forces a recompute."""
-        import hashlib
-        import json
-
-        stat = (
-            self._dir_sig(self.log_path),
-            sorted(self.store.tables["pointers"].live_files()),
-        )
-        cached = getattr(self, "_fp_cache", None)
-        if cached is not None and cached[0] == stat:
-            return cached[1]
-        end = self._log().agg(F.max("offset").alias("m")).collect()[0].m
-        ptrs = sorted(
-            (r.topic, r.partition, r.offset) for r in self.store.pointers().collect()
-        )
-        fp = hashlib.md5(json.dumps([end, ptrs]).encode()).hexdigest()
-        self._fp_cache = (stat, fp)
-        return fp
+        A content digest, not Python ``hash()``: a 64-bit hash collision
+        would validate a stale head-snapshot token and silently mis-plan a
+        snapshot read — md5 costs the same and has no such exposure."""
+        log = sorted((k, sorted(m.items())) for k, m in self._index().items())
+        ptrs = sorted(self._pointers().items())
+        return hashlib.md5(json.dumps([log, ptrs]).encode()).hexdigest()
 
     def refresh_head_snapshot(self) -> None:
         """Materialize the per-key HeadInfo of the un-replicated tail with
@@ -262,7 +327,7 @@ class JournalClient:
         """The R2 HeadInfo for one key, via the configured mode (snapshot
         with silent fold fallback on staleness, or fold directly).  A
         caller that already holds the key's tail records passes them as
-        ``recs``, and the fold reuses them instead of collecting again."""
+        ``recs``, and the fold reuses them instead of reading again."""
         if self.head_mode == "snapshot":
             h = self._snapshot_head(topic, key)
             if h is not None:
@@ -273,8 +338,6 @@ class JournalClient:
 
     @staticmethod
     def _partition(key: str) -> int:
-        import hashlib
-
         return int(hashlib.md5(key.encode()).hexdigest()[:8], 16) % N_PARTITIONS
 
     def _emit(self, rows: list[dict]) -> int:
@@ -379,7 +442,7 @@ class JournalClient:
 
         # absent journal: no un-replicated action and no head row (a live
         # stored pointer implies a head row, so the head check covers it)
-        if self._tail(topic, key).isEmpty() and not self.store.metajournal_of_keys(
+        if self._tail(topic, key).num_rows == 0 and not self.store.metajournal_of_keys(
             [key]
         ).filter((F.col("topic") == topic) & (F.col("id") == key)).take(1):
             return None
@@ -404,15 +467,18 @@ class JournalClient:
         """Recovery read: (seq_nr, payload) pairs — replicated prefix
         stitched with the un-replicated tail per the R2 plan.
 
-        The key's tail is collected once (``_fold_recs``) and serves both
-        the HeadInfo fold (unless a fresh head snapshot serves the head)
-        and the tail's purge horizon; the final plan reads the tail's
-        events from the log with the same pointer fence."""
+        The key's tail rows are read once (``_tail``, no Spark job) and
+        serve both the HeadInfo fold (unless a fresh head snapshot serves
+        the head) and the tail's purge horizon; they enter Spark as a
+        local frame only when the plan reads the tail."""
         tail = self._tail(topic, key)
         recs = self._fold_recs(tail)
         head = self._head(topic, key, recs)
         purge_off = max((r.offset for r in recs if r.kind == "purge"), default=None)
-        df = read_with_plan(self.store, tail, topic, key, head, purge_off, from_seq_nr)
+        tail_df = None
+        if plan_recovery(head, from_seq_nr).read_kafka:
+            tail_df = self.spark.createDataFrame(tail, _log_struct())
+        df = read_with_plan(self.store, tail_df, topic, key, head, purge_off, from_seq_nr)
         out = []
         for r in df.collect():
             payload = r.payload_txt
@@ -561,9 +627,7 @@ class JournalClient:
     def replicate(self) -> None:
         """Drain the un-replicated log through the replication fold (the
         standing pipeline's foreachBatch, invoked on demand)."""
-        ptr = {
-            (r.topic, r.partition): r.offset for r in self.store.pointers().collect()
-        }
+        ptr = self._pointers()
         log = self._log()
         if ptr:
             conds = None

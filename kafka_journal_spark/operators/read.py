@@ -153,6 +153,21 @@ def integrity_violations(journal: DataFrame) -> DataFrame:
     )
 
 
+def first_delivery(df: DataFrame) -> DataFrame:
+    """The R5 guard's default: keep the first-delivered copy (lowest
+    offset) of each (topic, id, seq_nr).  The window is one SQL
+    expression: built from Column builders it cost a single-key store
+    read 60 more py4j round trips to construct (194 instead of 134)."""
+    return (
+        df.selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY topic, id, seq_nr ORDER BY offset) AS _rn",
+        )
+        .filter("_rn = 1")
+        .drop("_rn")
+    )
+
+
 def apply_seq_nr_uniqueness(df: DataFrame, mode: str = "ignore") -> DataFrame:
     """The R5 guard under the reference's configurable integrity modes
     (config ``seq_nr_uniqueness``; ``Journal.scala:458-480`` chooses whether
@@ -171,14 +186,9 @@ def apply_seq_nr_uniqueness(df: DataFrame, mode: str = "ignore") -> DataFrame:
     """
     if mode not in ("ignore", "quarantine", "raise"):
         raise ValueError(f"unknown seq_nr_uniqueness mode {mode!r}")
-    wk = Window.partitionBy("topic", "id", "seq_nr")
     if mode == "ignore":
-        wdup = wk.orderBy("offset")
-        return (
-            df.withColumn("_rn", F.row_number().over(wdup))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        return first_delivery(df)
+    wk = Window.partitionBy("topic", "id", "seq_nr")
     # SAME-offset copies are physical crash replays (replicate_batch died
     # between journal append and pointer upsert; the replay re-appends
     # identical rows) — harmless, collapsed to one here exactly as

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kafka_journal_spark.folds import HeadInfo
+from kafka_journal_spark.operators.read import first_delivery
 from kafka_journal_spark.operators.replicate import explode_events
 from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.statestore import JournalStore
@@ -121,11 +122,4 @@ def read_with_plan(
     for p in parts[1:]:
         out = out.unionByName(p)
     # R5 monotonic guard across the seam
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("topic", "id", "seq_nr").orderBy("offset")
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return first_delivery(out)

@@ -302,7 +302,11 @@ class ManifestTable:
         )
 
     def read(
-        self, spark: SparkSession, ddl: str, parts: set[str] | None = None
+        self,
+        spark: SparkSession,
+        ddl: str,
+        parts: set[str] | None = None,
+        files: list[str] | None = None,
     ) -> DataFrame:
         """Snapshot read: plan against the manifest's explicit file list
         (point-in-time-consistent), with ``basePath`` preserving the hive
@@ -318,6 +322,8 @@ class ManifestTable:
         metajournal's ~128–256 band files paid a listing job and footer
         reads for every band; a one-band plan lists on the driver and
         scans one band.  Only the files planned are registered.
+        ``files`` is a live list the caller already took from ``load()``,
+        so the plan reads the same snapshot the caller inspected.
 
         Two guarantees close the beyond-grace window (RETIRE_GRACE_S):
         the snapshot's file list is REGISTERED against this process's
@@ -327,7 +333,8 @@ class ManifestTable:
         ``ignoreMissingFiles=false`` so a FOREIGN process vacuuming past
         the grace makes this scan raise instead of silently dropping a
         file's rows."""
-        files = self.load()[0]
+        if files is None:
+            files = self.load()[0]
         if parts is not None:
             files = [f for f in files if f.split(os.sep, 1)[0] in parts]
         if not files:

@@ -22,9 +22,10 @@ Layout (mirrors SURVEY.md §1.3, designed for 100 TB):
   O(1) files no matter how many keys the band holds — the economics of
   the reference's per-key point upserts
   (``MetaJournalStatements.scala:315-634``) on parquet.  ``metajournal()``
-  resolves last-write-wins per (topic, segment, id) with ONE window over
-  the DIRTY bands only (clean bands stream through untouched; a fully
-  folded store pays nothing), and the maintenance pass
+  resolves last-write-wins per (topic, segment, id) with ONE aggregate
+  over the dirty bands of two or more files only (clean bands stream
+  through untouched, a dirty band of one file only drops its tombstones;
+  a fully folded store pays nothing), and the maintenance pass
   (``fold_metajournal``, run by the replicator's ``maintain_every``)
   size-tiers deltas back into the band base with the same per-directory
   manifest swap compaction uses.
@@ -62,6 +63,7 @@ import math
 import os
 import time
 import uuid
+from collections import Counter
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -494,52 +496,78 @@ class JournalStore:
     def journal(self) -> DataFrame:
         return self.tables["journal"].read(self.spark, JOURNAL_SCHEMA_DDL)
 
-    def _metajournal_phys(self, bands: list[int] | None = None) -> DataFrame:
+    def _metajournal_phys(
+        self, bands: list[int] | None = None, files: list[str] | None = None
+    ) -> DataFrame:
         """Head table WITH its physical band partition column and the
         delta bookkeeping columns, planned from the given bands' files
-        only when ``bands`` is set.  Base (folded) files do not carry
-        ``delta_seq``/``deleted`` physically — the explicit read schema
-        surfaces them as NULL, which the resolver orders last / treats as
-        live, so pre-delta stores read unchanged."""
+        only when ``bands`` is set (and from ``files``, a live list the
+        caller already loaded, when given).  Base (folded) files do not
+        carry ``delta_seq``/``deleted`` physically — the explicit read
+        schema surfaces them as NULL, which the resolver orders last /
+        treats as live, so pre-delta stores read unchanged."""
         return self.tables["metajournal"].read(
             self.spark,
             META_SCHEMA_DDL + ", seg_band long, delta_seq long, deleted boolean",
             None if bands is None else {f"seg_band={int(b)}" for b in bands},
+            files,
         )
+
+    @staticmethod
+    def _band_file_counts(files) -> Counter:
+        """Live files per band, keyed by the ``seg_band=<b>`` directory."""
+        return Counter(f.split(os.sep, 1)[0] for f in files)
+
+    def _merge_bands(self, files: list[str], dirty) -> list[int]:
+        """The dirty bands that hold at least two of ``files`` — the only
+        bands where one key can have two head rows.  Every writer writes
+        one row per key per band file (a delta its batch's merged heads, a
+        fold or wide swap the resolved ones), so a dirty band of ONE file
+        needs no newest-wins merge: dropping its tombstoned rows resolves
+        it."""
+        n = self._band_file_counts(files)
+        return sorted(b for b in dirty if n[f"seg_band={b}"] >= 2)
 
     def _resolved_meta(
         self,
         bands: list[int] | None = None,
         segments: list[int] | None = None,
     ) -> DataFrame:
-        """Last-write-wins resolution of base + delta head rows, windowed
-        over the DIRTY bands only: clean bands (no un-folded deltas) have
-        exactly one row per key by construction and bypass the window, so
-        the merge-on-read tax is O(dirty-band rows), never O(#keys) — and
-        zero on a fully folded store.  Keeps ``seg_band``.  ``bands`` plans
-        from those bands' files only; the ``seg_band`` filter stays so the
-        scan still reports its PartitionFilters."""
-        df = self._metajournal_phys(bands)
+        """Last-write-wins resolution of base + delta head rows, merged
+        over the dirty bands of two or more files only (``_merge_bands``):
+        clean bands (no un-folded deltas) have exactly one row per key by
+        construction and bypass the merge, and a dirty band of one file
+        only drops its tombstones, so the merge-on-read tax is O(rows of
+        multi-file dirty bands), never O(#keys) — and zero on a fully
+        folded store.  Keeps ``seg_band``.  ``bands`` plans from those
+        bands' files only; the ``seg_band`` filter stays so the scan still
+        reports its PartitionFilters."""
+        files = self.tables["metajournal"].load()[0]
+        df = self._metajournal_phys(bands, files)
         if bands is not None:
             df = df.filter(F.col("seg_band").isin(bands))
         if segments is not None:
             df = df.filter(F.col("segment").isin([int(s) for s in segments]))
-        dirty = self._dirty_bands()
+        dirty = set(self._dirty_bands())
         if bands is not None:
-            dirty = sorted(set(dirty) & set(bands))
+            dirty &= set(bands)
         helper = ["delta_seq", "deleted"]
         if not dirty:
             return df.drop(*helper)
-        clean = df.filter(~F.col("seg_band").isin(dirty)).drop(*helper)
+        merge = self._merge_bands(files, dirty)
+        rest = df.filter(~F.col("seg_band").isin(merge)) if merge else df
+        rest = rest.filter("NOT coalesce(deleted, false)").drop(*helper)
+        if not merge:
+            return rest
         # newest-wins as ONE hash-aggregate (max_by on the write stamp;
         # base rows sort at -1) — partial aggregation collapses a key's
         # delta copies map-side and nothing is sorted, unlike a
         # row_number window which shuffles AND sorts every row
         keys = ["topic", "segment", "id"]
         payload = [c for c in df.columns if c not in keys]
-        dirty_rows = df.filter(F.col("seg_band").isin(dirty))
         resolved = (
-            dirty_rows.groupBy(*keys)
+            df.filter(F.col("seg_band").isin(merge))
+            .groupBy(*keys)
             .agg(
                 F.max_by(
                     F.struct(*payload),
@@ -550,7 +578,7 @@ class JournalStore:
             .filter(~F.coalesce(F.col("deleted"), F.lit(False)))
             .drop(*helper)
         )
-        return clean.unionByName(resolved.select(*clean.columns))
+        return rest.unionByName(resolved.select(*rest.columns))
 
     def metajournal(self) -> DataFrame:
         return self._resolved_meta().drop("seg_band")
@@ -745,13 +773,8 @@ class JournalStore:
         bands folded."""
         dirty = self._dirty_bands()
         if min_files is not None:
-            live = self.tables["metajournal"].live_files()
-
-            def _nfiles(b: int) -> int:
-                prefix = f"seg_band={b}{os.sep}"
-                return sum(1 for f in live if f.startswith(prefix))
-
-            dirty = [b for b in dirty if _nfiles(b) >= min_files]
+            n = self._band_file_counts(self.tables["metajournal"].live_files())
+            dirty = [b for b in dirty if n[f"seg_band={b}"] >= min_files]
         if not dirty:
             return []
         self._swap_meta_bands(self._resolved_meta(bands=dirty), dirty)
@@ -782,19 +805,22 @@ class JournalStore:
         record_id, _dt`` (delete_to), ``_hs`` (head seq_nr) and ``_del``
         (tombstone).  Planned from the key's band files (the whole table
         for a non-ASCII key, see ``metajournal_of_keys``) and narrowed by
-        ``scope`` inside that read, so the newest-wins aggregate of
-        ``_resolved_meta`` — needed only when the band holds un-folded
-        deltas — runs over the key's few rows, not the band's."""
+        ``scope`` inside that read, so the newest-wins aggregate — needed
+        only when the band is dirty and holds two or more files
+        (``_merge_bands``) — runs over the key's few rows, not the
+        band's.  Otherwise the key has at most one row, and ``read``'s
+        ``_del`` condition drops a tombstone."""
         seg = segment_of(key, SEGMENTS_DEFAULT)
         bands = None if seg is None else [seg % self.meta_bands]
+        files = self.tables["metajournal"].load()[0]
+        df = self._metajournal_phys(bands, files).filter(scope)
         dirty = set(self._dirty_bands())
         if bands is not None:
             dirty &= set(bands)
-        df = self._metajournal_phys(bands).filter(scope)
         # SQL strings, not Column builders: every builder call is several
         # py4j round trips, and this plan is built on every client read
         cols = "record_id, delete_to AS _dt, seq_nr AS _hs, deleted AS _del"
-        if not dirty:
+        if not self._merge_bands(files, dirty):
             return df.selectExpr("topic", "id", *cols.split(", "))
         newest = F.expr(f"max_by(struct({cols}), coalesce(delta_seq, -1))")
         return df.groupBy("topic", "id").agg(newest.alias("_r")).select(

@@ -25,11 +25,24 @@ def register_journal_views(spark: SparkSession, sf_dir: str) -> None:
     materialize_pointers(acts).createOrReplaceTempView("kj_pointers")
 
 
+#: the store snapshots each registered read function selects from, by
+#: function name: holding the DataFrames keeps their manifest snapshots
+#: registered against vacuum for as long as the function exists
+_TVF_SNAPSHOTS: dict[str, tuple[DataFrame, DataFrame]] = {}
+
+
 def register_store_read_tvf(spark: SparkSession, store, name: str = "read_journal") -> None:
     """SURVEY §4 nicety (a) as a genuine SQL TABLE FUNCTION: expose the R2
     recovery read over a :class:`JournalStore` to pure SQL —
     ``SELECT * FROM read_journal('topic', 'key', from_seq_nr)`` — via a
     Spark 4 SQL UDF (``CREATE TEMPORARY FUNCTION ... RETURNS TABLE``).
+
+    The body selects from two temp views over ``store.journal()`` and
+    ``store.metajournal()``, so it reads the manifests' live files (never
+    a retired file still inside the grace) and the newest-wins resolved
+    heads (a delta's delete watermark or purge tombstone hides what it
+    covers), exactly like ``store.read()``.  The function reads the store
+    AS OF REGISTRATION: register again to see later commits.
 
     The body is INLINED into the calling plan, so Catalyst sees the final
     predicates exactly like the DataFrame path: a literal topic/id
@@ -40,11 +53,10 @@ def register_store_read_tvf(spark: SparkSession, store, name: str = "read_journa
     orphan correlation on (incarnation match), delete watermark, seq_nr
     lower bound, and the R5 first-offset-wins dedup window.
     """
-    j_path = store._path("journal")
-    m_path = store._path("metajournal")
-    # make sure crashed swaps are repaired before SQL reads the dirs
-    store.journal()
-    store.metajournal()
+    journal, meta = store.journal(), store.metajournal()
+    _TVF_SNAPSHOTS[name] = (journal, meta)
+    journal.createOrReplaceTempView(f"_{name}_journal")
+    meta.createOrReplaceTempView(f"_{name}_metajournal")
     spark.sql(
         f"""
         CREATE OR REPLACE TEMPORARY FUNCTION {name}(
@@ -63,8 +75,8 @@ def register_store_read_tvf(spark: SparkSession, store, name: str = "read_journa
                    row_number() OVER (
                        PARTITION BY j.topic, j.id, j.seq_nr
                        ORDER BY j.offset) AS _rn
-            FROM parquet.`{j_path}` j
-            JOIN parquet.`{m_path}` m
+            FROM _{name}_journal j
+            JOIN _{name}_metajournal m
               ON j.topic = m.topic AND j.id = m.id
              AND j.meta_record_id = m.record_id
             WHERE j.seq_nr > coalesce(m.delete_to, 0)

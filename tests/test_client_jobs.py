@@ -1,20 +1,23 @@
 """Spark work of the client's calls, counted through the status tracker.
 
-Driver rows enter Spark through Arrow (``session.local_frame``), so a
-handful of rows starts no Python worker: an append's log write is one job
-of one task, and an empty frame (a store table with no file in the
-planned band) collects without any task.  A read collects its key's tail
-once, for both the HeadInfo fold and the purge horizon, and the final
-plan scans the log once more with the same inlined pointer fence;
-``read_with_plan`` starts no job itself.
+A client call starts Spark jobs only for data Spark has to scan.  The
+log's end offset and a key's un-replicated tail come from the driver's
+footer index of the actions log (pyarrow, no job), and the replicated
+pointers are collected once per pointers commit.  Driver rows enter Spark
+through Arrow (``session.local_frame``), so a handful of rows starts no
+Python worker: an append's log write is one job of one task, and an empty
+frame (a store table with no file in the planned band) collects without
+any task.  A dirty head band of one file needs no newest-wins merge, so a
+pointer lookup there is one job; ``read_with_plan`` starts no job itself.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from test_band_lookup import _spark_jobs
 
 from kafka_journal_spark import SEGMENTS_DEFAULT
-from kafka_journal_spark.api import JournalClient
+from kafka_journal_spark.api import JournalClient, _log_struct
 from kafka_journal_spark.folds import head_info
 from kafka_journal_spark.operators.replicate import segment_of
 from kafka_journal_spark.plans.recovery import read_with_plan
@@ -26,11 +29,23 @@ def test_client_calls_run_few_jobs_and_no_python_workers(spark, tmp_path, monkey
     for key in ("a", "b", "c"):
         c.append("t", key, [f"{key}1", f"{key}2"])
     c.replicate()
-    # a clean head table, as a wide set-up replicate leaves it (dirty bands
-    # add the merge-on-read aggregate to every head lookup)
-    c.store.fold_metajournal()
+    # a narrow replicate leaves each touched band dirty with ONE delta file
+    store = c.store
+    bands = {f.split("/", 1)[0] for f in store.tables["metajournal"].live_files()}
+    assert len(bands) == 3 and len(store._dirty_bands()) == 3
     c.delete_to("t", "a", 1)
     c.append("t", "a", ["a3"])  # un-replicated tail beside the prefix
+
+    with _spark_jobs(spark) as nxt:
+        assert c._next_offset() == 5
+    assert nxt["jobs"] == 0, nxt
+
+    with _spark_jobs(spark) as app:
+        assert c.append("t", "b", ["b3"])[1] == 5
+    assert app["jobs"] <= 2, app  # the head lookup and the log write
+    with _spark_jobs(spark) as fp:
+        c._log_fingerprint()
+    assert fp["jobs"] == 0, fp
 
     writes = []
     emit = c._emit
@@ -45,19 +60,25 @@ def test_client_calls_run_few_jobs_and_no_python_workers(spark, tmp_path, monkey
     c.append("t", "a", ["a4"])
     assert writes == [{"jobs": 1, "tasks": 1}]
 
+    # "c" has no tail: its pointer is the stored head of a one-file band
+    with _spark_jobs(spark) as ptr:
+        assert c.pointer("t", "c") == 2
+    assert ptr["jobs"] == 1, ptr
+
     with _spark_jobs(spark) as read:
         got = c.read("t", "a")
     assert got == [(2, "a2"), (3, "a3"), (4, "a4")]
-    assert read["jobs"] <= 6, read
+    assert read["jobs"] <= 4, read
 
     tail = c._tail("t", "a")
+    assert isinstance(tail, pa.Table) and tail["offset"].to_pylist() == [3, 4, 6]
     head = head_info(c._fold_recs(tail))
+    tail_df = spark.createDataFrame(tail, _log_struct())
     for horizon in (None, 0):
         with _spark_jobs(spark) as build:
-            read_with_plan(c.store, tail, "t", "a", head, horizon)
+            read_with_plan(c.store, tail_df, "t", "a", head, horizon)
         assert build["jobs"] == 0, (horizon, build)
 
-    store = c.store
     live = {f.split("/", 1)[0] for f in store.tables["metajournal"].live_files()}
     band = next(
         f"seg_band={b}" for b in range(store.meta_bands) if f"seg_band={b}" not in live

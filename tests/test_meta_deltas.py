@@ -124,18 +124,54 @@ def test_fold_min_files_size_tiers(spark, tmp_path):
     assert store._dirty_bands() == []
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_resolver_fast_path_skips_merge_when_folded(spark, tmp_path):
-    """A fully folded store's metajournal() plans WITHOUT the
-    last-write-wins resolution (the max_by hash-aggregate) — the
-    merge-on-read tax is zero once deltas are folded (and O(dirty bands)
+    """A band only needs the last-write-wins resolution (the max_by
+    hash-aggregate) while it is dirty AND holds two or more files: a
+    second batch into the same band plans the aggregate, and a fully
+    folded store's metajournal() plans without it — the merge-on-read tax
+    is zero once deltas are folded (and O(multi-file dirty bands)
     before)."""
     store = JournalStore(spark, str(tmp_path / "s"))
     replicate_batch(make_actions(spark, [append("k", 1)]), store)
-    dirty_plan = store.metajournal()._jdf.queryExecution().executedPlan().toString()
-    assert "max_by" in dirty_plan
+    replicate_batch(make_actions(spark, [append("k", 2)], offset_base=10), store)
+    band = f"seg_band={store._dirty_bands()[0]}{os.sep}"
+    assert sum(f.startswith(band) for f in store.tables["metajournal"].live_files()) == 2
+    assert "max_by" in _plan(store.metajournal())
+    assert {r.id: r.seq_nr for r in store.metajournal().collect()} == {"k": 2}
     store.fold_metajournal()
-    clean_plan = store.metajournal()._jdf.queryExecution().executedPlan().toString()
+    clean_plan = _plan(store.metajournal())
     assert "max_by" not in clean_plan and "HashAggregate" not in clean_plan
+
+
+def test_single_file_dirty_band_resolves_tombstone_without_merge(spark, tmp_path):
+    """A dirty band of ONE file cannot hold two rows of one key (every
+    writer writes one row per key per band file), so it plans no max_by
+    aggregate — its purge tombstone still hides the key from pointer(),
+    read() and metajournal()."""
+    from kafka_journal_spark.api import JournalClient
+
+    c = JournalClient(spark, str(tmp_path / "c"))
+    c.append("journal", "k", ["p1"])
+    c.purge("journal", "k")
+    c.replicate()  # one narrow batch: append + purge -> one tombstone delta
+    store = c.store
+    (b,) = store._dirty_bands()
+    band = f"seg_band={b}{os.sep}"
+    assert sum(f.startswith(band) for f in store.tables["metajournal"].live_files()) == 1
+    phys = store._metajournal_phys([b])
+    assert phys.filter(F.col("id") == "k").select("deleted").collect()[0].deleted
+
+    assert store.pointer("journal", "k") is None
+    assert c.pointer("journal", "k") is None
+    assert c.read("journal", "k") == []
+    assert store.read(topic="journal", key="k").collect() == []
+    assert store.metajournal().filter(F.col("id") == "k").collect() == []
+    for df in (store.metajournal(), store.read(topic="journal", key="k")):
+        assert "max_by" not in _plan(df)
 
 
 def test_second_instance_reads_deltas_and_folds(spark, tmp_path):

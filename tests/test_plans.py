@@ -277,6 +277,38 @@ def test_read_journal_tvf_plans_like_store_read(spark, tmp_path):
     assert got == want == {("a", 2)}
 
 
+def test_read_journal_tvf_resolves_heads_like_store_read(spark, tmp_path):
+    """The table function reads the store through its manifests and the
+    newest-wins resolved heads: after two narrow batches (append a 1..2,
+    then delete_to a 2) the band holds two head rows of ``a``, and the
+    function must return what ``store.read`` returns — nothing — also
+    after a purge tombstones the key."""
+    from conftest import append, delete, make_actions, purge
+    from kafka_journal_spark.sources.statestore import JournalStore
+    from kafka_journal_spark.sql_surface import register_store_read_tvf
+    from kafka_journal_spark.streaming.replicator import replicate_batch
+
+    def tvf():
+        q = "SELECT seq_nr FROM read_journal('journal', 'a', 1)"
+        return sorted(r.seq_nr for r in spark.sql(q).collect())
+
+    def want():
+        return sorted(r.seq_nr for r in store.read(topic="journal", key="a").collect())
+
+    store = JournalStore(spark, str(tmp_path / "tvf"))
+    replicate_batch(make_actions(spark, [append("a", 1), append("a", 2)]), store)
+    replicate_batch(make_actions(spark, [delete("a", 2)], offset_base=10), store)
+    register_store_read_tvf(spark, store)
+    assert tvf() == want() == []
+
+    replicate_batch(make_actions(spark, [append("a", 3)], offset_base=20), store)
+    register_store_read_tvf(spark, store)
+    assert tvf() == want() == [3]
+    replicate_batch(make_actions(spark, [purge("a")], offset_base=30), store)
+    register_store_read_tvf(spark, store)
+    assert tvf() == want() == []
+
+
 def test_duplicate_spans_plan_is_count_and_flag(spark):
     """Span detection must stay a count-and-flag shape with ONE pass over
     the gram relation: corpus frequency is a count window over the
