@@ -7,6 +7,8 @@ CTEs) comes for free.
 
 from __future__ import annotations
 
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_journal_spark.operators.actions import journal_actions
@@ -25,10 +27,11 @@ def register_journal_views(spark: SparkSession, sf_dir: str) -> None:
     materialize_pointers(acts).createOrReplaceTempView("kj_pointers")
 
 
-#: the store snapshots each registered read function selects from, by
-#: function name: holding the DataFrames keeps their manifest snapshots
-#: registered against vacuum for as long as the function exists
-_TVF_SNAPSHOTS: dict[str, tuple[DataFrame, DataFrame]] = {}
+#: per registered read function name, the pins that keep the store
+#: snapshot it reads registered against this process's vacuum for as long
+#: as the function exists (a frame derived from ``store.metajournal()``
+#: does not keep the weakref-scoped registration of its scan alive)
+_TVF_PINS: dict[str, contextlib.ExitStack] = {}
 
 
 def register_store_read_tvf(spark: SparkSession, store, name: str = "read_journal") -> None:
@@ -53,10 +56,14 @@ def register_store_read_tvf(spark: SparkSession, store, name: str = "read_journa
     orphan correlation on (incarnation match), delete watermark, seq_nr
     lower bound, and the R5 first-offset-wins dedup window.
     """
-    journal, meta = store.journal(), store.metajournal()
-    _TVF_SNAPSHOTS[name] = (journal, meta)
-    journal.createOrReplaceTempView(f"_{name}_journal")
-    meta.createOrReplaceTempView(f"_{name}_metajournal")
+    pins = contextlib.ExitStack()
+    pins.enter_context(store.pin_reads())
+    store.journal().createOrReplaceTempView(f"_{name}_journal")
+    store.metajournal().createOrReplaceTempView(f"_{name}_metajournal")
+    old = _TVF_PINS.pop(name, None)
+    _TVF_PINS[name] = pins
+    if old is not None:
+        old.close()
     spark.sql(
         f"""
         CREATE OR REPLACE TEMPORARY FUNCTION {name}(

@@ -307,6 +307,11 @@ def test_read_journal_tvf_resolves_heads_like_store_read(spark, tmp_path):
     replicate_batch(make_actions(spark, [purge("a")], offset_base=30), store)
     register_store_read_tvf(spark, store)
     assert tvf() == want() == []
+    # the function's snapshot stays pinned against this process's vacuum
+    from kafka_journal_spark.sources.manifest import _snapshot_referenced
+
+    live = store.tables["metajournal"].live_files()
+    assert live and live <= _snapshot_referenced(store.root, "metajournal")
 
 
 def test_duplicate_spans_plan_is_count_and_flag(spark):
