@@ -35,10 +35,12 @@ pyarrow from only the files that reach past their partition's replicated
 pointer — so a call's log cost follows the tail, not the log ("the other
 one loses its tail").  The pointers themselves are collected once per
 pointers commit (``_pointers``).  ``read`` folds the tail rows for the
-HeadInfo and the purge horizon, and hands them to Spark (as a local
-frame) only when the plan reads the tail.  The rows a call writes, and
-every empty frame it plans over, enter Spark through Arrow
-(``session.local_frame``), so no call starts a Python worker.
+HeadInfo and the purge horizon, and stitches their events onto the
+replicated prefix on the driver (``read_with_plan``): the key's store
+read is the call's one Spark job.  The rows a call writes go to the log
+as one parquet file written with pyarrow (``_emit``), so an append's only
+job is the head lookup of its pointer, and no call starts a Python
+worker.
 """
 
 from __future__ import annotations
@@ -47,6 +49,7 @@ import functools
 import hashlib
 import json
 import os
+import uuid
 from typing import Optional
 
 import pyarrow as pa
@@ -55,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_journal_spark.folds import ActionRec, HeadInfo, head_info
-from kafka_journal_spark.plans.recovery import plan_recovery, read_with_plan
+from kafka_journal_spark.plans.recovery import read_with_plan
 from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.manifest import ManifestTable, read_token, write_token
 from kafka_journal_spark.sources.statestore import JournalStore
@@ -85,7 +88,8 @@ def _log_struct():
 
 @functools.lru_cache(maxsize=1)
 def _log_arrow_schema() -> pa.Schema:
-    """``ACTIONS_LOG_DDL`` as the Arrow schema of a driver-side tail."""
+    """``ACTIONS_LOG_DDL`` as the Arrow schema of a driver-side tail and
+    of the log files ``_emit`` writes."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(_log_struct())
@@ -341,9 +345,15 @@ class JournalClient:
         return int(hashlib.md5(key.encode()).hexdigest()[:8], 16) % N_PARTITIONS
 
     def _emit(self, rows: list[dict]) -> int:
-        local_frame(self.spark, rows, ACTIONS_LOG_DDL).write.mode("append").parquet(
-            self.log_path
-        )
+        """Append ``rows`` to the log as one new parquet file, written with
+        pyarrow (no Spark job).  The file is written under a dot-prefixed
+        name, which ``_index`` and Spark's listing both skip, and renamed
+        into place: a crash before the rename leaves no visible file."""
+        os.makedirs(self.log_path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(self.log_path, f".{name}")
+        pq.write_table(pa.Table.from_pylist(rows, schema=_log_arrow_schema()), tmp)
+        os.replace(tmp, os.path.join(self.log_path, name))
         return rows[-1]["offset"]
 
     # -- the Journal API ---------------------------------------------------
@@ -468,24 +478,19 @@ class JournalClient:
         stitched with the un-replicated tail per the R2 plan.
 
         The key's tail rows are read once (``_tail``, no Spark job) and
-        serve both the HeadInfo fold (unless a fresh head snapshot serves
-        the head) and the tail's purge horizon; they enter Spark as a
-        local frame only when the plan reads the tail."""
+        serve the HeadInfo fold (unless a fresh head snapshot serves the
+        head), the tail's purge horizon and the tail's events, which
+        ``read_with_plan`` stitches on the driver."""
         tail = self._tail(topic, key)
         recs = self._fold_recs(tail)
         head = self._head(topic, key, recs)
         purge_off = max((r.offset for r in recs if r.kind == "purge"), default=None)
-        tail_df = None
-        if plan_recovery(head, from_seq_nr).read_kafka:
-            tail_df = self.spark.createDataFrame(tail, _log_struct())
-        df = read_with_plan(self.store, tail_df, topic, key, head, purge_off, from_seq_nr)
-        out = []
-        for r in df.collect():
-            payload = r.payload_txt
-            if payload is None and "payload_bin" in df.columns and r.payload_bin is not None:
-                payload = bytes(r.payload_bin)
-            out.append((r.seq_nr, payload))
-        return sorted(out, key=lambda t: t[0])
+        rows = read_with_plan(self.store, tail, topic, key, head, purge_off, from_seq_nr)
+        return [
+            (r.seq_nr, r.payload_bin if r.payload_txt is None and r.payload_bin is not None
+             else r.payload_txt)
+            for r in rows
+        ]
 
     def read_many(
         self, topic: str, keys: list[str], from_seq_nr: int = 1

@@ -14,28 +14,33 @@ planner decides which sources the read touches and tightens the lower bound
 
 This is a *semantic* rewrite Catalyst cannot do (it needs a state lookup);
 once chosen, the seq_nr bound pushes into the parquet scan for free.
+
+``read_with_plan`` runs the plan: the replicated prefix is the one Spark
+job (``JournalStore.read`` of the key, collected once), and the key's
+un-replicated tail — a handful of driver rows the client already holds —
+is exploded and stitched across the seam in Python, where a Spark union
+and a second R5 window cost several jobs and ~500 py4j round trips to
+build for rows that never needed a cluster.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Optional
+from typing import NamedTuple, Optional
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import pyarrow as pa
 
 from kafka_journal_spark.folds import HeadInfo
-from kafka_journal_spark.operators.read import first_delivery
-from kafka_journal_spark.operators.replicate import explode_events
-from kafka_journal_spark.session import local_frame
 from kafka_journal_spark.sources.statestore import JournalStore
 
-#: columns of a recovery read
-READ_DDL = (
-    "id string, topic string, seq_nr long, partition int, offset long, "
-    "timestamp timestamp, origin string, version string, payload_type string, "
-    "payload_txt string, payload_bin binary"
-)
+
+class ReadRow(NamedTuple):
+    """One event of a recovery read."""
+
+    seq_nr: int
+    offset: int
+    payload_txt: Optional[str]
+    payload_bin: Optional[bytes]
 
 
 @dataclass(frozen=True)
@@ -67,20 +72,60 @@ def plan_recovery(
     )
 
 
+def _tail_events(tail: pa.Table, topic: str, key: str, plan: ReadPlan):
+    """The key's tail append rows from ``plan.kafka_from_offset`` on,
+    exploded to one ``ReadRow`` per event at or above
+    ``plan.from_seq_nr`` — ``operators.replicate.explode_events``'
+    alignment in Python: event ``i`` of ``sequence(seq_nr_from,
+    seq_nr_to)`` takes ``payloads[i]`` / ``payloads_bin[i]``, a missing or
+    short array gives NULL, and only a tail without either array column
+    gives every event the single ``payload`` (with ``payload_bin``)."""
+    cols = set(tail.column_names)
+    arrays = "payloads" in cols or "payloads_bin" in cols
+
+    def col(name):
+        return tail[name].to_pylist() if name in cols else [None] * tail.num_rows
+
+    rows = zip(
+        col("topic"), col("id"), col("action_type"), col("offset"),
+        col("seq_nr_from"), col("seq_nr_to"), col("payload"), col("payload_bin"),
+        col("payloads"), col("payloads_bin"),
+    )
+    for t, k, kind, off, lo, hi, pl, pl_bin, pls, pls_bin in rows:
+        if (t, k, kind) != (topic, key, "append") or off is None:
+            continue
+        if off < plan.kafka_from_offset or lo is None or hi is None:
+            continue
+        step = 1 if lo <= hi else -1  # Spark's sequence() counts down too
+        for i, seq in enumerate(range(lo, hi + step, step)):
+            if seq < plan.from_seq_nr:
+                continue
+            if arrays:
+                pl = pls[i] if pls is not None and i < len(pls) else None
+                pl_bin = pls_bin[i] if pls_bin is not None and i < len(pls_bin) else None
+            yield ReadRow(seq, off, pl, pl_bin)
+
+
 def read_with_plan(
     store: JournalStore,
-    kafka_tail: Optional[DataFrame],
+    tail: Optional[pa.Table],
     topic: str,
     key: str,
     head: HeadInfo,
     tail_purge_offset: Optional[int],
     from_seq_nr: int = 1,
-) -> DataFrame:
-    """Build the recovery-read DataFrame for one key according to the plan;
-    building it runs no Spark job.
+) -> list[ReadRow]:
+    """Run the recovery read of one key according to the plan; the
+    events come back in seq_nr order.
 
-    ``kafka_tail`` is the un-replicated actions DataFrame (Kafka-envelope
-    already decoded); only consulted when the plan says so.
+    The replicated prefix is collected once (one Spark job, see
+    ``JournalStore.read``), projected to the four columns a read returns.
+    ``tail`` is the key's un-replicated actions as an Arrow table
+    (``JournalClient._tail``: ``ACTIONS_LOG_DDL`` columns, Kafka envelope
+    already decoded); it is consulted only when the plan says so, and its
+    append rows are exploded on the driver (``_tail_events``).  Across
+    the seam the R5 guard keeps the first-delivered copy (lowest offset)
+    of each seq_nr, as ``operators.read.first_delivery`` does in Spark.
 
     ``tail_purge_offset`` is the offset of the key's last purge in the
     tail, or None when the tail holds none.  An un-replicated purge erases
@@ -92,34 +137,20 @@ def read_with_plan(
     model instead.)
     """
     plan = plan_recovery(head, from_seq_nr)
-    cols = [f.split()[0] for f in READ_DDL.split(", ")]
-
-    def _project(df: DataFrame) -> DataFrame:
-        # tolerate sources without the binary twin column (narrow tails)
-        if "payload_bin" not in df.columns:
-            df = df.withColumn("payload_bin", F.lit(None).cast("binary"))
-        return df.select(*cols)
-
-    parts = []
+    events: list[ReadRow] = []
     if plan.read_store:
         prefix = store.read(topic=topic, key=key, from_seq_nr=plan.from_seq_nr)
         if tail_purge_offset is not None:
-            prefix = prefix.filter(F.col("offset") > F.lit(tail_purge_offset))
-        parts.append(_project(prefix))
-    if plan.read_kafka and kafka_tail is not None:
-        tail = kafka_tail.filter(
-            (F.col("topic") == topic)
-            & (F.col("id") == key)
-            & (F.col("action_type") == "append")
-            & (F.col("offset") >= F.lit(plan.kafka_from_offset))
+            prefix = prefix.filter(f"offset > {int(tail_purge_offset)}")
+        rows = prefix.select("seq_nr", "offset", "payload_txt", "payload_bin").collect()
+        events += (
+            ReadRow(s, o, t, None if b is None else bytes(b)) for s, o, t, b in rows
         )
-        parts.append(
-            _project(explode_events(tail).filter(F.col("seq_nr") >= plan.from_seq_nr))
-        )
-    if not parts:
-        return local_frame(store.spark, [], READ_DDL)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    if plan.read_kafka and tail is not None:
+        events += _tail_events(tail, topic, key, plan)
     # R5 monotonic guard across the seam
-    return first_delivery(out)
+    first: dict[int, ReadRow] = {}
+    for e in events:
+        if e.seq_nr not in first or e.offset < first[e.seq_nr].offset:
+            first[e.seq_nr] = e
+    return [first[s] for s in sorted(first)]

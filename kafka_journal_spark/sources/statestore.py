@@ -42,9 +42,9 @@ journal needs on top: the cross-process ownership lease (fenced before
 every token write), the dirty-band and delta-seq tokens, and
 ``pin_reads()``.
 
-The read path (``read()``) joins journal to metajournal (broadcast only
-under a key filter — an unfiltered head table is O(#keys) and AQE picks the
-join strategy for it) and applies: incarnation match, delete_to watermark,
+The read path (``read()``) joins journal to metajournal (in one
+partition with no Exchange under a key filter — an unfiltered head table
+is O(#keys) and AQE picks the join strategy for it) and applies: incarnation match, delete_to watermark,
 seq_nr lower bound, plus the R5 defensive dedup (first offset per
 (id, seq_nr) wins) that also makes crash-replayed appends harmless.
 Single-key lookups (``read(key=...)``, ``pointer()``) plan the head side
@@ -809,11 +809,12 @@ class JournalStore:
         only when the band is dirty and holds two or more files
         (``_merge_bands``) — runs over the key's few rows, not the
         band's.  Otherwise the key has at most one row, and ``read``'s
-        ``_del`` condition drops a tombstone."""
+        ``_del`` condition drops a tombstone.  The scan is coalesced to one
+        partition before the aggregate, so the merge needs no Exchange."""
         seg = segment_of(key, SEGMENTS_DEFAULT)
         bands = None if seg is None else [seg % self.meta_bands]
         files = self.tables["metajournal"].load()[0]
-        df = self._metajournal_phys(bands, files).filter(scope)
+        df = self._metajournal_phys(bands, files).filter(scope).coalesce(1)
         dirty = set(self._dirty_bands())
         if bands is not None:
             dirty &= set(bands)
@@ -838,7 +839,17 @@ class JournalStore:
         R5 dedup + R8 orphan filtering), under the configured integrity
         modes (``JournalConfig``).  One predicate scopes each side to the
         topic/key, and one filter after the join applies the tombstone,
-        incarnation, delete_to, ``from_seq_nr`` and clamp conditions."""
+        incarnation, delete_to, ``from_seq_nr`` and clamp conditions.
+
+        A key read runs as ONE Spark job: both scans are coalesced to one
+        partition at the leaves and joined as a shuffled hash join, and a
+        single-partition child already satisfies the distribution the
+        join, the head merge and the R5 window require, so the plan holds
+        no Exchange.  The trade-off: the key's journal scan opens every
+        live file of its topic in one task (the key predicate prunes row
+        groups, not files), which compaction keeps to a handful — the
+        sf0.1 SLO store holds 4.  The whole-table read keeps its
+        distributed shape."""
         from kafka_journal_spark.operators.read import apply_seq_nr_uniqueness
 
         cfg = config or JournalConfig()
@@ -850,6 +861,8 @@ class JournalStore:
         j = self.journal()
         if scope is not None:
             j = j.filter(scope)
+        if key is not None:
+            j = j.coalesce(1)
         # one SQL string for the row conditions (see ``_key_heads``)
         keep = [f"seq_nr > coalesce(_dt, 0) AND seq_nr >= {int(from_seq_nr)}"]
         if key is None:
@@ -863,8 +876,10 @@ class JournalStore:
             # scale — let AQE pick the strategy from the observed size
             df = j.join(m, ["topic", "id"], "inner")
         else:
-            # a key bounds the head side to O(1) rows: broadcast it
-            df = j.join(F.broadcast(self._key_heads(key, scope)), ["topic", "id"])
+            # both sides are one partition: a hash join needs no Exchange
+            # (a broadcast would cost its own job)
+            heads = self._key_heads(key, scope).hint("shuffle_hash")
+            df = j.join(heads, ["topic", "id"])
             keep.append("NOT coalesce(_del, false)")
         if cfg.correlate_events_with_meta:
             keep.append("meta_record_id = record_id")

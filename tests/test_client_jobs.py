@@ -5,10 +5,13 @@ log's end offset and a key's un-replicated tail come from the driver's
 footer index of the actions log (pyarrow, no job), and the replicated
 pointers are collected once per pointers commit.  Driver rows enter Spark
 through Arrow (``session.local_frame``), so a handful of rows starts no
-Python worker: an append's log write is one job of one task, and an empty
-frame (a store table with no file in the planned band) collects without
-any task.  A dirty head band of one file needs no newest-wins merge, so a
-pointer lookup there is one job; ``read_with_plan`` starts no job itself.
+Python worker, and an empty frame (a store table with no file in the
+planned band) collects without any task.  An append writes its log file
+with pyarrow (no job), so its one job is the pointer's head lookup.  A
+dirty head band of one file needs no newest-wins merge, so a pointer
+lookup there is one job.  A key read is one job with or without a tail:
+the store read plans in one partition with no Exchange, and the tail is
+stitched on the driver.
 """
 
 from __future__ import annotations
@@ -17,7 +20,7 @@ import pyarrow as pa
 from test_band_lookup import _spark_jobs
 
 from kafka_journal_spark import SEGMENTS_DEFAULT
-from kafka_journal_spark.api import JournalClient, _log_struct
+from kafka_journal_spark.api import JournalClient
 from kafka_journal_spark.folds import head_info
 from kafka_journal_spark.operators.replicate import segment_of
 from kafka_journal_spark.plans.recovery import read_with_plan
@@ -42,7 +45,7 @@ def test_client_calls_run_few_jobs_and_no_python_workers(spark, tmp_path, monkey
 
     with _spark_jobs(spark) as app:
         assert c.append("t", "b", ["b3"])[1] == 5
-    assert app["jobs"] <= 2, app  # the head lookup and the log write
+    assert app["jobs"] <= 1, app  # the head lookup
     with _spark_jobs(spark) as fp:
         c._log_fingerprint()
     assert fp["jobs"] == 0, fp
@@ -58,7 +61,7 @@ def test_client_calls_run_few_jobs_and_no_python_workers(spark, tmp_path, monkey
 
     monkeypatch.setattr(c, "_emit", counted_emit)
     c.append("t", "a", ["a4"])
-    assert writes == [{"jobs": 1, "tasks": 1}]
+    assert writes == [{"jobs": 0, "tasks": 0}]
 
     # "c" has no tail: its pointer is the stored head of a one-file band
     with _spark_jobs(spark) as ptr:
@@ -68,16 +71,18 @@ def test_client_calls_run_few_jobs_and_no_python_workers(spark, tmp_path, monkey
     with _spark_jobs(spark) as read:
         got = c.read("t", "a")
     assert got == [(2, "a2"), (3, "a3"), (4, "a4")]
-    assert read["jobs"] <= 4, read
+    assert read["jobs"] <= 1, read
+    with _spark_jobs(spark) as read:
+        assert c.read("t", "c") == [(1, "c1"), (2, "c2")]  # no tail
+    assert read["jobs"] <= 1, read
 
     tail = c._tail("t", "a")
     assert isinstance(tail, pa.Table) and tail["offset"].to_pylist() == [3, 4, 6]
     head = head_info(c._fold_recs(tail))
-    tail_df = spark.createDataFrame(tail, _log_struct())
     for horizon in (None, 0):
-        with _spark_jobs(spark) as build:
-            read_with_plan(c.store, tail_df, "t", "a", head, horizon)
-        assert build["jobs"] == 0, (horizon, build)
+        with _spark_jobs(spark) as run:
+            read_with_plan(c.store, tail, "t", "a", head, horizon)
+        assert run["jobs"] <= 1, (horizon, run)
 
     live = {f.split("/", 1)[0] for f in store.tables["metajournal"].live_files()}
     band = next(

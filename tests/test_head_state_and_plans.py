@@ -104,11 +104,11 @@ def test_read_with_plan_end_to_end(spark, tmp_path):
         for r in tail.collect()
     ]
     head = head_info(recs)
-    out = read_with_plan(store, tail, "journal", "a", head, None)
-    assert sorted((r.seq_nr, r.offset) for r in out.collect()) == [(2, 1), (3, 3)]
+    out = read_with_plan(store, tail.toArrow(), "journal", "a", head, None)
+    assert sorted((r.seq_nr, r.offset) for r in out) == [(2, 1), (3, 3)]
     # purge head -> empty
-    out2 = read_with_plan(store, tail, "journal", "a", HeadInfo(kind="purge"), None)
-    assert out2.count() == 0
+    out2 = read_with_plan(store, tail.toArrow(), "journal", "a", HeadInfo(kind="purge"), None)
+    assert len(out2) == 0
 
 
 def test_read_with_plan_tail_purge_horizon_erases_prefix(spark, tmp_path):
@@ -125,11 +125,11 @@ def test_read_with_plan_tail_purge_horizon_erases_prefix(spark, tmp_path):
         ]
     )
     assert (head.kind, head.offset, head.seq_nr) == ("append", 3, 1)
-    out = read_with_plan(store, tail, "journal", "a", head, 2)
-    assert [(r.seq_nr, r.offset, r.payload_txt) for r in out.collect()] == [(1, 3, "p1")]
+    out = read_with_plan(store, tail.toArrow(), "journal", "a", head, 2)
+    assert [(r.seq_nr, r.offset, r.payload_txt) for r in out] == [(1, 3, "p1")]
     # without the horizon the stale prefix would win the seam
-    stale = read_with_plan(store, tail, "journal", "a", head, None)
-    assert sorted((r.seq_nr, r.offset) for r in stale.collect()) == [(1, 0), (2, 1)]
+    stale = read_with_plan(store, tail.toArrow(), "journal", "a", head, None)
+    assert sorted((r.seq_nr, r.offset) for r in stale) == [(1, 0), (2, 1)]
 
 
 def test_head_info_stream_auto_selects_by_dependency(spark, tmp_path):

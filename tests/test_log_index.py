@@ -3,9 +3,13 @@
 ``_next_offset`` and ``_tail`` read the log with pyarrow on the driver
 instead of through Spark.  These tests hold the index to the Spark scan
 it replaces: the same rows for a key's un-replicated tail on a log that
-mixes a pyarrow producer's file with the client's Spark-written appends,
-the same file set as ``spark.read.parquet``, and no stale entry after a
-foreign writer adds, replaces or removes a file.
+mixes a producer's file with the client's own appends, the same file set
+as ``spark.read.parquet``, and no stale entry after a foreign writer adds,
+replaces or removes a file.
+
+The client appends to the log with pyarrow too (``_emit``): its files
+read back through Spark as the rows a Spark-written file gives, and the
+temp file a crash leaves before the rename is invisible to every reader.
 """
 
 from __future__ import annotations
@@ -15,9 +19,18 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
-from kafka_journal_spark.api import JournalClient, _log_arrow_schema, _log_struct
+from kafka_journal_spark.api import (
+    ACTIONS_LOG_DDL,
+    JournalClient,
+    _log_arrow_schema,
+    _log_struct,
+)
+from kafka_journal_spark.session import local_frame
+from kafka_journal_spark.sources.statestore import JournalStore
+from kafka_journal_spark.streaming.replicator import run_parquet_replicator
 
 #: an out-of-band producer's schema (``ACTIONS_LOG_DDL`` written by
 #: pyarrow: microsecond UTC timestamps, Arrow list/map field names)
@@ -82,7 +95,7 @@ def test_driver_tail_equals_spark_scan_on_a_mixed_log(spark, tmp_path):
              payload="o1", payloads=["o1"]),
     ])
     c.replicate()
-    # the client's own Spark-written appends: binary, headers, tags, TTL
+    # the client's own appends: binary, headers, tags, TTL
     c.append("t", "k", [b"\x01", b"\x02\x03"], headers={"h": "v"}, tags=["a", "b"],
              expire_after_secs=43_200)
     c.append("t", "k", ["text"], headers={"h2": "w"})
@@ -151,3 +164,77 @@ def test_index_lists_the_files_spark_reads_and_evicts_removed_ones(spark, tmp_pa
     assert c._next_offset() == 3
     assert len(c._log_index) == 3
     assert {name for name, _, _ in c._log_index} == spark_files - {"part-foreign.parquet"}
+
+
+def _by_offset(df) -> list:
+    return sorted(df.collect(), key=lambda r: r.offset)
+
+
+def test_emitted_file_reads_back_like_a_spark_written_one(spark, tmp_path, monkeypatch):
+    c = JournalClient(spark, str(tmp_path / "c"))
+    emitted = []
+    emit = c._emit
+
+    def capture(rows):
+        emitted.append(rows)
+        return emit(rows)
+
+    monkeypatch.setattr(c, "_emit", capture)
+    c.append("t", "k", [b"\x00\xff", b"\x01"], headers={"h": "v"}, tags=["a", "b"],
+             expire_after_secs=60)
+    # the head keeps the last append's TTL
+    c.append("t", "k", ["x", "y"], headers={"h2": "w"}, tags=[], expire_after_secs=43_200)
+    c.append("t", "j", ["z"])
+    c.delete_to("t", "k", 3)  # NULL-heavy delete and purge rows
+    c.purge("t", "j")
+    # the same rows, written by Spark into a second client's log
+    s = JournalClient(spark, str(tmp_path / "s"))
+    for rows in emitted:
+        local_frame(spark, rows, ACTIONS_LOG_DDL).write.mode("append").parquet(s.log_path)
+    assert _by_offset(c._log()) == _by_offset(s._log())
+    assert len(emitted) == 5
+
+    for cl in (c, s):
+        cl.replicate()
+        assert cl._tail("t", "k").num_rows == 0
+    journal = ["topic", "id", "seq_nr", "offset", "payload_txt", "payload_bin", "tags", "headers"]
+    meta = ["topic", "id", "seq_nr", "delete_to", "expire_after_secs", "expire_on_ts"]
+    assert _by_offset(c.store.read().select(*journal)) == _by_offset(
+        s.store.read().select(*journal)
+    )
+    heads = [c.store.metajournal().select(*meta).collect(), s.store.metajournal().select(*meta).collect()]
+    assert heads[0] == heads[1] and [(r.id, r.expire_after_secs) for r in heads[0]] == [("k", 43_200)]
+    assert c.read("t", "k") == [(4, "y")] and c.pointer("t", "j") is None
+
+
+def test_a_crash_before_the_rename_leaves_nothing_visible(spark, tmp_path, monkeypatch):
+    c = JournalClient(spark, str(tmp_path / "c"))
+    c.append("t", "k", ["a"])
+
+    def crash(src, dst):
+        raise OSError("crash between write and rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(OSError):
+            c.append("t", "k", ["b"])
+    temps = [n for n in os.listdir(c.log_path) if n.startswith(".part-")]
+    assert len(temps) == 1 and temps[0].endswith(".parquet")
+    # the temp file holds the lost append, complete
+    assert pq.read_table(os.path.join(c.log_path, temps[0]))["offset"].to_pylist() == [1]
+    # and a torn one beside it must not be read either
+    with open(os.path.join(c.log_path, ".part-torn.parquet"), "wb") as f:
+        f.write(b"PAR1\x00")
+
+    assert [name for name, _, _ in c._index()] == [
+        n for n in os.listdir(c.log_path) if not n.startswith(".")
+    ]
+    assert c._next_offset() == 1
+    assert [r.offset for r in c._log().collect()] == [0]
+    assert c.read("t", "k") == [(1, "a")]
+    store = JournalStore(spark, str(tmp_path / "stream"))
+    run_parquet_replicator(spark, c.log_path, store, ACTIONS_LOG_DDL)
+    assert [(r.seq_nr, r.payload_txt) for r in store.read().collect()] == [(1, "a")]
+    # the retried append takes the offset the crashed one never published
+    assert c.append("t", "k", ["b"]) == (c._partition("k"), 1)
+    assert c.read("t", "k") == [(1, "a"), (2, "b")]
