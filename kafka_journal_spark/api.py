@@ -487,8 +487,7 @@ class JournalClient:
         purge_off = max((r.offset for r in recs if r.kind == "purge"), default=None)
         rows = read_with_plan(self.store, tail, topic, key, head, purge_off, from_seq_nr)
         return [
-            (r.seq_nr, r.payload_bin if r.payload_txt is None and r.payload_bin is not None
-             else r.payload_txt)
+            (r.seq_nr, r.payload_txt if r.payload_txt is not None else r.payload_bin)
             for r in rows
         ]
 

@@ -92,9 +92,9 @@ def _tail_events(tail: pa.Table, topic: str, key: str, plan: ReadPlan):
         col("payloads"), col("payloads_bin"),
     )
     for t, k, kind, off, lo, hi, pl, pl_bin, pls, pls_bin in rows:
-        if (t, k, kind) != (topic, key, "append") or off is None:
+        if (t, k, kind) != (topic, key, "append") or None in (off, lo, hi):
             continue
-        if off < plan.kafka_from_offset or lo is None or hi is None:
+        if off < plan.kafka_from_offset:
             continue
         step = 1 if lo <= hi else -1  # Spark's sequence() counts down too
         for i, seq in enumerate(range(lo, hi + step, step)):
@@ -108,7 +108,7 @@ def _tail_events(tail: pa.Table, topic: str, key: str, plan: ReadPlan):
 
 def read_with_plan(
     store: JournalStore,
-    tail: Optional[pa.Table],
+    tail: pa.Table,
     topic: str,
     key: str,
     head: HeadInfo,
@@ -146,7 +146,7 @@ def read_with_plan(
         events += (
             ReadRow(s, o, t, None if b is None else bytes(b)) for s, o, t, b in rows
         )
-    if plan.read_kafka and tail is not None:
+    if plan.read_kafka:
         events += _tail_events(tail, topic, key, plan)
     # R5 monotonic guard across the seam
     first: dict[int, ReadRow] = {}

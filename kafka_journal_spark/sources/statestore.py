@@ -44,9 +44,10 @@ every token write), the dirty-band and delta-seq tokens, and
 
 The read path (``read()``) joins journal to metajournal (in one
 partition with no Exchange under a key filter — an unfiltered head table
-is O(#keys) and AQE picks the join strategy for it) and applies: incarnation match, delete_to watermark,
-seq_nr lower bound, plus the R5 defensive dedup (first offset per
-(id, seq_nr) wins) that also makes crash-replayed appends harmless.
+is O(#keys) and AQE picks the join strategy for it) and applies:
+incarnation match, delete_to watermark, seq_nr lower bound, plus the R5
+defensive dedup (first offset per (id, seq_nr) wins) that also makes
+crash-replayed appends harmless.
 Single-key lookups (``read(key=...)``, ``pointer()``) plan the head side
 from the band files of the key's segment only (``metajournal_of_keys``),
 the parquet form of the reference's point read at (topic, segment, id):
@@ -848,8 +849,8 @@ class JournalStore:
         no Exchange.  The trade-off: the key's journal scan opens every
         live file of its topic in one task (the key predicate prunes row
         groups, not files), which compaction keeps to a handful — the
-        sf0.1 SLO store holds 4.  The whole-table read keeps its
-        distributed shape."""
+        compacted sf0.1 SLO store holds one live journal file.  The
+        whole-table read keeps its distributed shape."""
         from kafka_journal_spark.operators.read import apply_seq_nr_uniqueness
 
         cfg = config or JournalConfig()
