@@ -174,6 +174,11 @@ def explode_events(appends: DataFrame, extra_cols: tuple[str, ...] = ()) -> Data
     ``tags_list`` column (one tag-array per event, as produced by
     ``decode_kafka_to_actions``) is zipped positionally; only without it does
     the batch-level ``tags`` column apply to every event of the batch.
+
+    ``plans.recovery._tail_events`` mirrors this payload alignment on the
+    driver for a client read's tail; ``test_driver_stitch_matches_the_spark_form``
+    (tests/test_one_job_reads.py) pins the two together, so a change to the
+    event-array format belongs in both.
     """
     cols = appends.columns
     per_event_tags = "tags_list" in cols

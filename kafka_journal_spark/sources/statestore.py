@@ -66,6 +66,7 @@ import time
 import uuid
 from collections import Counter
 from dataclasses import dataclass
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,6 +81,15 @@ from kafka_journal_spark.sources.manifest import (
     walk_parquet,
     write_token,
 )
+
+
+def _topic_of(rel: str) -> str | None:
+    """The topic of a journal file path relative to the table root (its
+    hive ``topic=`` directory, unescaped), None outside one."""
+    top = rel.split(os.sep, 1)[0]
+    if not top.startswith("topic="):
+        return None
+    return unquote(top[len("topic="):])
 
 
 @dataclass(frozen=True)
@@ -156,6 +166,15 @@ WIDE_BATCH_BAND_FRACTION = 0.5
 #: the merge-on-read window shallow, large enough that a debt-only
 #: maintenance call never degenerates into a full fold of every dirty band
 META_FOLD_TIER = 8
+
+#: a single-key read scans one side (journal files of the key's topic,
+#: head files of the key's band) in ONE task while that side has at most
+#: this many live files: the scan needs no Exchange and the read runs as
+#: one job.  Above it the side scans in parallel and one Exchange gathers
+#: the key's rows into one partition — one task opening every file
+#: serially costs more than the extra job (crossover measured on an
+#: uncompacted sf0.1 store, see ``_one_partition``)
+KEY_READ_SERIAL_FILES = 16
 
 #: ownership lease TTL: a foreign owner whose heartbeat (lockfile mtime)
 #: is older than this AND whose liveness cannot be confirmed is considered
@@ -801,6 +820,17 @@ class JournalStore:
 
     # -- read path (EventualCassandra.read semantics) ----------------------
 
+    @staticmethod
+    def _one_partition(df: DataFrame, n_files: int) -> DataFrame:
+        """``df`` (one side of a single-key read) as ONE partition, so the
+        join, the head merge and the R5 window above it need no Exchange:
+        coalesced at the leaf (one task, no job of its own) when the side
+        has at most ``KEY_READ_SERIAL_FILES`` files, else scanned in
+        parallel and gathered by a ``repartition(1)`` of the key's rows."""
+        if n_files <= KEY_READ_SERIAL_FILES:
+            return df.coalesce(1)
+        return df.repartition(1)
+
     def _key_heads(self, key: str, scope) -> DataFrame:
         """The head rows ``read(key=...)`` joins against: ``topic, id,
         record_id, _dt`` (delete_to), ``_hs`` (head seq_nr) and ``_del``
@@ -810,12 +840,17 @@ class JournalStore:
         only when the band is dirty and holds two or more files
         (``_merge_bands``) — runs over the key's few rows, not the
         band's.  Otherwise the key has at most one row, and ``read``'s
-        ``_del`` condition drops a tombstone.  The scan is coalesced to one
-        partition before the aggregate, so the merge needs no Exchange."""
+        ``_del`` condition drops a tombstone.  The scan is one partition
+        before the aggregate (``_one_partition``), so the merge needs no
+        Exchange of its own."""
         seg = segment_of(key, SEGMENTS_DEFAULT)
         bands = None if seg is None else [seg % self.meta_bands]
         files = self.tables["metajournal"].load()[0]
-        df = self._metajournal_phys(bands, files).filter(scope).coalesce(1)
+        if bands is not None:
+            files = [f for f in files if f.split(os.sep, 1)[0] == f"seg_band={bands[0]}"]
+        df = self._one_partition(
+            self._metajournal_phys(None, files).filter(scope), len(files)
+        )
         dirty = set(self._dirty_bands())
         if bands is not None:
             dirty &= set(bands)
@@ -842,15 +877,18 @@ class JournalStore:
         topic/key, and one filter after the join applies the tombstone,
         incarnation, delete_to, ``from_seq_nr`` and clamp conditions.
 
-        A key read runs as ONE Spark job: both scans are coalesced to one
-        partition at the leaves and joined as a shuffled hash join, and a
+        A key read makes both sides one partition at the leaves
+        (``_one_partition``) and joins them as a shuffled hash join; a
         single-partition child already satisfies the distribution the
-        join, the head merge and the R5 window require, so the plan holds
-        no Exchange.  The trade-off: the key's journal scan opens every
-        live file of its topic in one task (the key predicate prunes row
-        groups, not files), which compaction keeps to a handful — the
-        compacted sf0.1 SLO store holds one live journal file.  The
-        whole-table read keeps its distributed shape."""
+        join, the head merge and the R5 window require.  A side of at most
+        ``KEY_READ_SERIAL_FILES`` live files is coalesced: its scan opens
+        every file in one task (the key predicate prunes row groups, not
+        files) with no Exchange, so on a compacted store the read is ONE
+        Spark job (the compacted sf0.1 SLO store holds one live journal
+        file).  A side with more files — a topic the standing replicator
+        has appended to up to 63 times between compactions at its
+        64-file tier — scans in parallel and pays one Exchange of the
+        key's rows.  The whole-table read keeps its distributed shape."""
         from kafka_journal_spark.operators.read import apply_seq_nr_uniqueness
 
         cfg = config or JournalConfig()
@@ -859,11 +897,15 @@ class JournalStore:
             if val is not None:
                 eq = F.col(col) == val
                 scope = eq if scope is None else scope & eq
-        j = self.journal()
+        files = self.tables["journal"].load()[0]
+        if key is not None and topic is not None:
+            # plan from the topic's files only (fewer paths to list)
+            files = [f for f in files if _topic_of(f) == topic]
+        j = self.tables["journal"].read(self.spark, JOURNAL_SCHEMA_DDL, None, files)
         if scope is not None:
             j = j.filter(scope)
         if key is not None:
-            j = j.coalesce(1)
+            j = self._one_partition(j, len(files))
         # one SQL string for the row conditions (see ``_key_heads``)
         keep = [f"seq_nr > coalesce(_dt, 0) AND seq_nr >= {int(from_seq_nr)}"]
         if key is None:
@@ -877,8 +919,8 @@ class JournalStore:
             # scale — let AQE pick the strategy from the observed size
             df = j.join(m, ["topic", "id"], "inner")
         else:
-            # both sides are one partition: a hash join needs no Exchange
-            # (a broadcast would cost its own job)
+            # both sides are one partition: a hash join needs no further
+            # Exchange (a broadcast would cost its own job)
             heads = self._key_heads(key, scope).hint("shuffle_hash")
             df = j.join(heads, ["topic", "id"])
             keep.append("NOT coalesce(_del, false)")
@@ -907,15 +949,12 @@ class JournalStore:
         which needs a scan).  Retired files awaiting vacuum are not
         compaction debt: they're already compacted away from every
         reader's snapshot."""
-        from urllib.parse import unquote
-
         root = self._path("journal")
         agg: dict[str, list[int]] = {}
         for rel in self.tables["journal"].live_files():
-            top = rel.split(os.sep, 1)[0]
-            if not top.startswith("topic="):
+            t = _topic_of(rel)
+            if t is None:
                 continue
-            t = unquote(top[len("topic="):])
             a = agg.setdefault(t, [0, 0])
             a[0] += 1
             try:
@@ -1033,8 +1072,6 @@ class JournalStore:
         the store's mutation lock, so it never lands inside a replication
         batch (see the ``mutation_lock`` field note).
         """
-        from urllib.parse import unquote
-
         with self.mutation_lock:
             # compaction is the store's maintenance entry point, so it also
             # folds head deltas: full compaction folds every dirty band; the

@@ -5,7 +5,9 @@ Two contracts are pinned here:
 - plan shape: a single-key ``JournalStore.read`` plans with no Exchange on
   a folded head band, on a dirty band of one file and on a dirty band of
   two or more files (both scans are coalesced to one partition at the
-  leaves), while the whole-table read keeps its distributed shape;
+  leaves), while the whole-table read keeps its distributed shape; a side
+  with more than ``KEY_READ_SERIAL_FILES`` files scans in parallel and is
+  gathered by one single-partition Exchange, with the same rows;
 - parity: ``read_with_plan`` stitches the key's tail onto the replicated
   prefix on the driver, and returns exactly the rows of the Spark form it
   replaced — ``explode_events`` over the tail's append rows, the seq_nr
@@ -28,6 +30,7 @@ from kafka_journal_spark.folds import head_info
 from kafka_journal_spark.operators.read import first_delivery
 from kafka_journal_spark.operators.replicate import explode_events, segment_of
 from kafka_journal_spark.plans.recovery import plan_recovery, read_with_plan
+from kafka_journal_spark.sources import statestore
 from kafka_journal_spark.sources.statestore import JournalStore
 from kafka_journal_spark.streaming.replicator import replicate_batch
 
@@ -60,6 +63,23 @@ def test_key_read_plans_without_exchange_on_every_band_state(spark, tmp_path):
     key_read(1, False, [1, 2, 3])
 
     assert "Exchange" in _executed(store.read(topic="journal"))
+
+
+def test_key_read_above_the_serial_file_bound_gathers_in_one_exchange(
+    spark, tmp_path, monkeypatch
+):
+    store = JournalStore(spark, str(tmp_path / "s"))
+    rows = [append(k, s) for s in (1, 2) for k in ("a", "b", "c")]
+    replicate_batch(make_actions(spark, rows), store)
+    replicate_batch(make_actions(spark, [append("a", 3)], offset_base=10), store)
+    serial = sorted(store.read(topic="journal", key="a").collect())
+    # two journal files and two head files: both sides above a bound of 1
+    monkeypatch.setattr(statestore, "KEY_READ_SERIAL_FILES", 1)
+    df = store.read(topic="journal", key="a")
+    plan = _executed(df)
+    assert plan.count("Exchange SinglePartition") == plan.count("Exchange") == 2, plan
+    assert sorted(df.collect()) == serial
+    assert [r.seq_nr for r in serial] == [1, 2, 3]
 
 
 # -- parity of the driver stitch -------------------------------------------

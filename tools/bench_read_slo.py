@@ -3,14 +3,21 @@
 reference's recovery ceilings (``JournalPerfSpec.scala:116-117``: a
 journal must recover in <= 1 s, <= 2 s under the slower shape).
 
-The store is built once per sf dir (3-batch replication of the events
-action log, then ``compact()``) and cached under ``.scale/`` so repeat
-runs measure READS, not builds.
+The store is built once per sf dir and layout and cached under
+``.scale/`` so repeat runs measure READS, not builds.  Two layouts sit on
+either side of ``KEY_READ_SERIAL_FILES`` (the live-file count up to which
+a key read scans a side in one task):
 
-Usage: python tools/bench_read_slo.py [sf_dir] [n_keys]
+- ``compacted`` (default): 3-batch replication of the events action log,
+  then ``compact()`` — one live journal file per topic;
+- ``uncompacted``: 63-batch replication and no maintenance — 63 live
+  journal files per topic, the most a topic holds under the standing
+  replicator's 64-file compaction tier.
+
+Usage: python tools/bench_read_slo.py [sf_dir] [n_keys] [layout]
 Prints one JSON line:
-  {"metric": "read_slo", "read": {"p50": ..., "p95": ..., ...},
-   "n_keys": N, "sf_dir": ...}
+  {"metric": "read_slo", "layout": ..., "journal_files": ...,
+   "read": {"p50": ..., "p95": ..., ...}, "n_keys": N, "sf_dir": ...}
 """
 
 from __future__ import annotations
@@ -25,9 +32,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 
-def build_store(spark, sf_dir: str, root: str):
-    """Replicate sf_dir's action log into a compacted store at ``root``
-    (reused when already built)."""
+#: replicate batches per layout; the uncompacted one stops a batch short
+#: of the standing replicator's compaction tier (``min_files=64``)
+LAYOUT_BATCHES = {"compacted": 3, "uncompacted": 63}
+
+
+def build_store(spark, sf_dir: str, root: str, layout: str = "compacted"):
+    """Replicate sf_dir's action log into a store of the given layout at
+    ``root`` (reused when already built)."""
     from kafka_journal_spark.operators.actions import journal_actions
     from kafka_journal_spark.sources.statestore import JournalStore
     from kafka_journal_spark.streaming.replicator import replicate_batch
@@ -38,12 +50,14 @@ def build_store(spark, sf_dir: str, root: str):
         return store
     acts = journal_actions(spark, sf_dir)
     hi = acts.agg(F.max("offset")).collect()[0][0] or 0
-    cuts = [0, hi // 3, 2 * hi // 3, hi + 1]
+    n = LAYOUT_BATCHES[layout]
+    cuts = [0, *(i * hi // n for i in range(1, n)), hi + 1]
     for lo, up in zip(cuts, cuts[1:]):
         replicate_batch(
             acts.filter((F.col("offset") >= lo) & (F.col("offset") < up)), store
         )
-    store.compact()  # fold: the steady-state layout reads hit
+    if layout == "compacted":
+        store.compact()  # fold: the steady-state layout reads hit
     with open(done, "w") as f:
         f.write("ok")
     return store
@@ -68,14 +82,18 @@ def _pct(xs: list[float], q: float) -> float:
     return ys[min(len(ys) - 1, int(round(q * (len(ys) - 1))))]
 
 
-def measure(spark, sf_dir: str, n_keys: int = 100) -> dict:
+def measure(
+    spark, sf_dir: str, n_keys: int = 100, layout: str = "compacted"
+) -> dict:
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
+    if layout != "compacted":
+        tag += f"_{layout}"
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         ".scale",
         f"slo_store_{tag}",
     )
-    store = build_store(spark, sf_dir, root)
+    store = build_store(spark, sf_dir, root, layout)
     keys = sample_keys(store, n_keys)
     # one warm-up read pays one-time planning/listing costs
     store.read(*keys[0]).count()
@@ -94,6 +112,8 @@ def measure(spark, sf_dir: str, n_keys: int = 100) -> dict:
         "metric": "read_slo",
         "unit": "sec",
         "sf_dir": sf_dir,
+        "layout": layout,
+        "journal_files": max(n for _, n, _ in store._journal_file_stats()),
         "n_keys": len(keys),
         "read": {
             "p50": round(_pct(lat, 0.50), 4),
@@ -108,12 +128,15 @@ def measure(spark, sf_dir: str, n_keys: int = 100) -> dict:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf10"
     n_keys = int(sys.argv[2]) if len(sys.argv) > 2 else 100
+    layout = sys.argv[3] if len(sys.argv) > 3 else "compacted"
+    if layout not in LAYOUT_BATCHES:
+        sys.exit(f"layout must be one of {sorted(LAYOUT_BATCHES)}")
     from kafka_journal_spark.session import get_spark
 
     spark = get_spark(
         "bench-read-slo", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     )
-    res = measure(spark, sf_dir, n_keys)
+    res = measure(spark, sf_dir, n_keys, layout)
     print(json.dumps(res))
     spark.stop()
     # standalone runs assert the ceilings; a caller that owns the
